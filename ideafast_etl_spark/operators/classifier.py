@@ -40,16 +40,11 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plan_audit import materialize, reuse
 from .packing import stable_bucket
 
 _FP = 1_000_000_000  # fixed-point grid for gradient quantization
 _SALT = "qclf"
-
-# r13: persist the feature relation across train+score (see
-# train_and_score_logreg). Module flag for same-process A/B harnesses
-# (the clustering._PERSIST_PTS discipline); False reproduces the plain
-# composed form. Results are bit-identical either way.
-_PERSIST_FEATS = True
 
 
 def doc_features(
@@ -119,17 +114,19 @@ def train_logreg(
     joined = feats.join(labels, id_col).select(
         "feats", F.col(label_col).cast("double").alias("y")
     )
-    joined = joined.persist()
-    try:
-        return _gd_loop(joined, dim, iters, lr)
-    finally:
-        joined.unpersist()
+    with reuse(joined) as cached:
+        return _gd_loop(cached, dim, iters, lr)
 
 
 def _gd_loop(joined: DataFrame, dim: int, iters: int, lr: float) -> list[float]:
-    """The GD steps over an already-persisted (…, feats, y) relation —
-    shared by :func:`train_logreg` and :func:`train_and_score_logreg` so
-    the fused form can score off the SAME cached relation."""
+    """The GD steps over a (…, feats, y) relation — shared by
+    :func:`train_logreg` and :func:`train_and_score_logreg` so the fused
+    form can score off the SAME cached relation.
+
+    An empty relation trains to all-zero weights. A non-empty one whose
+    feature arrays lack the ``idx == dim`` bias entry (a hand-built
+    ``feats``, not :func:`doc_features`) raises ``ValueError``: the doc
+    count is read off the bias row."""
     # r13 job shave (VERDICT r12 #5): the doc count used to be its own
     # job before the gradient loop. Every feature array from
     # doc_features ends with the always-on bias feature at idx==dim
@@ -161,9 +158,14 @@ def _gd_loop(joined: DataFrame, dim: int, iters: int, lr: float) -> list[float]:
             .collect()
         )
         if it == 0:
+            if not grad_rows:
+                return w
             n = next((r["c"] for r in grad_rows if r["idx"] == dim), 0)
             if n == 0:
-                return [0.0] * (dim + 1)
+                raise ValueError(
+                    f"feats has no bias entry at idx {dim}; build it with "
+                    "doc_features"
+                )
         for r in grad_rows:
             w[r["idx"]] -= lr * (r["g"] / _FP) / n
     return w
@@ -192,37 +194,28 @@ def train_and_score_logreg(
     into the single training cache and scores from it: one corpus
     derivation and one cache total. The doc-count-sized scored result
     (n × 3 narrow columns — the ccnet ``scored`` checkpoint class) is
-    eagerly checkpointed before the cache is released. Weights and scores
-    are bit-identical to the composed form for every doc in
-    ``feats ⋈ labels`` (the training population — all docs, in the
-    declared query); audit mode returns the full lazy lineage with
-    nothing cached.
-    """
-    from ..plan_audit import checkpoints_enabled
+    eagerly checkpointed before the cache is released.
 
+    The scored population is ``feats ⋈ labels`` on ``id_col`` — the
+    training population, which is every doc in the declared query. Docs
+    without a label are not scored (use :func:`score_logreg` for those),
+    and a doc id repeated in ``labels`` is scored once per label row.
+    Audit mode scores the same rows from the lazy lineage with nothing
+    cached.
+    """
     joined = feats.join(labels, id_col).select(
         id_col, "feats", F.col(label_col).cast("double").alias("y")
     )
-    do_ckpt = checkpoints_enabled() and _PERSIST_FEATS
-    if not do_ckpt:
-        # plan-audit path / A/B old-variant: the plain composed form
-        w = train_logreg(
-            feats, labels, dim=dim, iters=iters, lr=lr,
-            id_col=id_col, label_col=label_col,
-        )
-        return score_logreg(feats, w, id_col=id_col)
-    joined = joined.persist()
-    try:
-        w = _gd_loop(joined, dim, iters, lr)
+    with reuse(joined) as cached:
+        w = _gd_loop(cached, dim, iters, lr)
         prob = F.lit(1.0) / (F.lit(1.0) + F.exp(-_margin(w)))
-        scored = joined.select(
-            F.col(id_col),
-            F.round(prob, 6).alias("prob"),
-            (prob >= 0.5).alias("predicted"),
+        return materialize(
+            cached.select(
+                F.col(id_col),
+                F.round(prob, 6).alias("prob"),
+                (prob >= 0.5).alias("predicted"),
+            )
         )
-        return scored.localCheckpoint(eager=True)
-    finally:
-        joined.unpersist()
 
 
 def score_logreg(

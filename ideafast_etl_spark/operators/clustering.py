@@ -58,14 +58,9 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..plan_audit import checkpoints_enabled
+from ..plan_audit import materialize, reuse
 
 _SCALE = 1_000_000  # fixed-point scale for exact centroid sums
-
-# kmeans_fit's pts-caching posture (r12): module-level so tools/tests can
-# A/B it in-process; production always leaves it on. Plan audits disable
-# it through no_checkpoints() instead, keeping the audited lineage lazy.
-_PERSIST_PTS = True
 
 
 def _pos_exploded(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -124,13 +119,8 @@ def kmeans_fit(
     # final assignment is then materialized (n rows of 3 columns) before
     # the cache is released so callers never re-derive pts either.
     # Values are unchanged by construction — fixed-point sums are
-    # partitioning-independent. Skipped under plan audits so .explain
-    # keeps the real lazy lineage.
-    do_ckpt = checkpoints_enabled() and _PERSIST_PTS
-    pts = _pos_exploded(df, id_col, vec_col)
-    if do_ckpt:
-        pts = pts.persist()
-    try:
+    # partitioning-independent.
+    with reuse(_pos_exploded(df, id_col, vec_col)) as pts:
         # deterministic seed: the k lowest ids become clusters 0..k-1
         seed_ids = (
             df.select(F.col(id_col).alias("__id"))
@@ -201,12 +191,8 @@ def kmeans_fit(
                 )
                 .localCheckpoint(eager=True)  # k·dim rows: truncate lineage
             )
-        assign = _assign_to_centroids(pts, cent, id_col)
-        if do_ckpt:
-            assign = assign.localCheckpoint(eager=True)  # n rows of 3 columns
-    finally:
-        if do_ckpt:
-            pts.unpersist()
+        # n rows of 3 columns
+        assign = materialize(_assign_to_centroids(pts, cent, id_col))
     return assign, cent
 
 

@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import norm_text
-from ..plan_audit import checkpoints_enabled
+from ..plan_audit import checkpoints_enabled, materialize, reuse
 
 # Universal-hash family constants for minhash permutations:
 # h_i(x) = (A[i] * x + B[i]) mod MERSENNE31, over x = shingle hash mod MERSENNE31.
@@ -36,22 +36,6 @@ LSH_BANDS = 8
 LSH_ROWS = 4  # NUM_HASHES / LSH_BANDS
 MINHASH_A = [(i * 2_654_435_761 + 1) % MERSENNE31 for i in range(1, NUM_HASHES + 1)]
 MINHASH_B = [(i * 40_503 + 17) % MERSENNE31 for i in range(1, NUM_HASHES + 1)]
-
-# r12: persist the doc-keyed signature/size aggregate (minhash) and the
-# fingerprint relation (simhash) across their multiple consumers — the
-# column-pruned consumers plant different ReadSchemas below the partial
-# aggregate, so ReusedExchange never fires and the corpus-sized aggregate
-# re-executes per branch. Flags for same-process A/B (tools/ab_jobshave.py).
-_PERSIST_PER_DOC = True
-_PERSIST_SIMHASH_FP = True
-
-# r12 job shave (near_dup_clusters): detect min-label-propagation
-# convergence from a change flag computed INSIDE the label-update
-# projection instead of re-joining new labels to old labels each round —
-# equivalent because labels are monotone non-increasing (new != old iff
-# neighbour_min < old). Module flag for same-process A/B
-# (tools/ab_jobshave.py); parity pinned in tests/test_loop_jobshave.py.
-_FUSED_CC_CHANGE = True
 
 
 def _tokens(col: Column) -> Column:
@@ -291,8 +275,8 @@ def minhash_near_dup_pairs(
          per-doc count, |A∪B| = |A|+|B|−|A∩B|.
     The shingle-row relation feeds four branches, hence the persist
     (MEMORY_AND_DISK; at cluster scale, checkpoint to storage instead).
-    Under ``plan_audit.no_checkpoints()`` the persist/localCheckpoint pair
-    is skipped and the full lazy lineage is returned so ``.explain``
+    Under ``plan_audit.no_checkpoints()`` ``reuse``/``materialize`` are
+    identities and the full lazy lineage is returned so ``.explain``
     audits the real plan (the checkpointed form explains as only a
     ``Scan ExistingRDD``).
 
@@ -316,12 +300,7 @@ def minhash_near_dup_pairs(
     candidates per document."""
     if candidates not in ("all", "star", "auto"):
         raise ValueError(f"unknown candidates mode {candidates!r}")
-    do_ckpt = checkpoints_enabled()
-    sh = shingle_rows(_spread(df, id_col), text_col, id_col)
-    if do_ckpt:
-        sh = sh.persist()
-    per_doc_cached = None
-    try:
+    with reuse(shingle_rows(_spread(df, id_col), text_col, id_col)) as sh:
         # ONE aggregation computes the shingle count AND all 32 signature
         # mins, consumed by the banding branch and both size-lookup
         # branches. r12: PERSIST it (n rows × 34 narrow columns, bounded
@@ -340,99 +319,94 @@ def minhash_near_dup_pairs(
                 for i, (a, b) in enumerate(zip(MINHASH_A, MINHASH_B))
             ]
         )
-        if do_ckpt and _PERSIST_PER_DOC:
-            per_doc = per_doc.persist()
-            per_doc_cached = per_doc
-        sizes = per_doc.select(id_col, "n_sh")
-        sig = per_doc
-        bands = F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.concat_ws(
-                        ",", *[F.col(f"mh{b * LSH_ROWS + r}") for r in range(LSH_ROWS)]
-                    ).alias("band_key"),
+        with reuse(per_doc) as per_doc:
+            sizes = per_doc.select(id_col, "n_sh")
+            bands = F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band"),
+                        F.concat_ws(
+                            ",",
+                            *[
+                                F.col(f"mh{b * LSH_ROWS + r}")
+                                for r in range(LSH_ROWS)
+                            ],
+                        ).alias("band_key"),
+                    )
+                    for b in range(LSH_BANDS)
+                ]
+            )
+            banded = per_doc.select(F.col(id_col), F.explode(bands).alias("bk")).select(
+                id_col, "bk.band", "bk.band_key"
+            )
+            if candidates == "auto":
+                candidates = _auto_candidates(banded, LSH_BANDS, auto_pairs_per_doc)
+            if candidates == "star":
+                reps = banded.groupBy("band", "band_key").agg(
+                    F.min(id_col).alias("id_a")
                 )
-                for b in range(LSH_BANDS)
-            ]
-        )
-        banded = sig.select(F.col(id_col), F.explode(bands).alias("bk")).select(
-            id_col, "bk.band", "bk.band_key"
-        )
-        if candidates == "auto":
-            candidates = _auto_candidates(banded, LSH_BANDS, auto_pairs_per_doc)
-        if candidates == "star":
-            reps = banded.groupBy("band", "band_key").agg(
-                F.min(id_col).alias("id_a")
-            )
-            cands = (
-                banded.join(reps, ["band", "band_key"])
-                .filter(F.col(id_col) > F.col("id_a"))
-                .select("id_a", F.col(id_col).alias("id_b"))
-                .distinct()
-            )
-        else:
-            cands = (
-                banded.alias("l")
-                .join(
-                    banded.alias("r"),
-                    (F.col("l.band") == F.col("r.band"))
-                    & (F.col("l.band_key") == F.col("r.band_key"))
-                    & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
+                cands = (
+                    banded.join(reps, ["band", "band_key"])
+                    .filter(F.col(id_col) > F.col("id_a"))
+                    .select("id_a", F.col(id_col).alias("id_b"))
+                    .distinct()
                 )
-                .select(
-                    F.col(f"l.{id_col}").alias("id_a"),
-                    F.col(f"r.{id_col}").alias("id_b"),
+            else:
+                cands = (
+                    banded.alias("l")
+                    .join(
+                        banded.alias("r"),
+                        (F.col("l.band") == F.col("r.band"))
+                        & (F.col("l.band_key") == F.col("r.band_key"))
+                        & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
+                    )
+                    .select(
+                        F.col(f"l.{id_col}").alias("id_a"),
+                        F.col(f"r.{id_col}").alias("id_b"),
+                    )
+                    .distinct()
                 )
-                .distinct()
+            ra = sh.select(F.col(id_col).alias("id_a"), F.col("shingle"))
+            rb = sh.select(F.col(id_col).alias("id_b"), F.col("shingle"))
+            # no forced broadcast OR forced shuffle on the verify legs: post-
+            # banding candidates are tiny on normal corpora, so AQE's observed-
+            # size broadcast conversion is the right local plan, and once any
+            # leg outgrows the threshold AQE keeps the shuffle join (no hint
+            # could pick both correctly — an r7 experiment that pinned these
+            # to merge joins cost 12x at 10x scale). The one genuine failure
+            # mode — a single under-provisioned JVM caching the whole shingle
+            # relation AND building a broadcast — is a harness-sizing issue
+            # (tools/scale_check.py scales heap/partitions with the factor),
+            # not a plan defect: on a cluster the cache is spread over
+            # executors and the driver only holds the <threshold broadcast.
+            inter = (
+                cands
+                .join(ra, "id_a")
+                .join(rb, ["id_b", "shingle"])
+                .groupBy("id_a", "id_b")
+                .agg(F.count(F.lit(1)).alias("n_inter"))
             )
-        ra = sh.select(F.col(id_col).alias("id_a"), F.col("shingle"))
-        rb = sh.select(F.col(id_col).alias("id_b"), F.col("shingle"))
-        # no forced broadcast OR forced shuffle on the verify legs: post-
-        # banding candidates are tiny on normal corpora, so AQE's observed-
-        # size broadcast conversion is the right local plan, and once any
-        # leg outgrows the threshold AQE keeps the shuffle join (no hint
-        # could pick both correctly — an r7 experiment that pinned these
-        # to merge joins cost 12x at 10x scale). The one genuine failure
-        # mode — a single under-provisioned JVM caching the whole shingle
-        # relation AND building a broadcast — is a harness-sizing issue
-        # (tools/scale_check.py scales heap/partitions with the factor),
-        # not a plan defect: on a cluster the cache is spread over
-        # executors and the driver only holds the <threshold broadcast.
-        inter = (
-            cands
-            .join(ra, "id_a")
-            .join(rb, ["id_b", "shingle"])
-            .groupBy("id_a", "id_b")
-            .agg(F.count(F.lit(1)).alias("n_inter"))
-        )
-        sz = lambda side: sizes.select(  # noqa: E731
-            F.col(id_col).alias(f"id_{side}"), F.col("n_sh").alias(f"n_{side}")
-        )
-        verified = (
-            inter.join(sz("a"), "id_a")
-            .join(sz("b"), "id_b")
-            .withColumn(
-                "jaccard_sim",
-                F.round(
-                    F.col("n_inter").cast("double")
-                    / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double"),
-                    6,
-                ),
+            sz = lambda side: sizes.select(  # noqa: E731
+                F.col(id_col).alias(f"id_{side}"), F.col("n_sh").alias(f"n_{side}")
             )
-            .filter(F.col("jaccard_sim") >= threshold)
-            .select("id_a", "id_b", "jaccard_sim")
-        )
-        if not do_ckpt:
-            return verified  # plan-audit path: full lineage, nothing cached
-        # materialise (small result) before unpersisting the shingle cache
-        out = verified.localCheckpoint(eager=True)
-    finally:
-        if do_ckpt:
-            if per_doc_cached is not None:
-                per_doc_cached.unpersist()
-            sh.unpersist()
-    return out
+            verified = (
+                inter.join(sz("a"), "id_a")
+                .join(sz("b"), "id_b")
+                .withColumn(
+                    "jaccard_sim",
+                    F.round(
+                        F.col("n_inter").cast("double")
+                        / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast(
+                            "double"
+                        ),
+                        6,
+                    ),
+                )
+                .filter(F.col("jaccard_sim") >= threshold)
+                .select("id_a", "id_b", "jaccard_sim")
+            )
+            # materialise (small result) before unpersisting the caches
+            return materialize(verified)
 
 
 def ngram_jaccard_pairs(
@@ -578,46 +552,29 @@ def near_dup_clusters(
                 .groupBy(edges.id_a.alias(id_col))
                 .agg(F.min("cluster_id").alias("n_min"))
             )
-            if _FUSED_CC_CHANGE:
-                # r12 job shave: labels only ever DECREASE (least of old and
-                # neighbour mins), so "new != old" is exactly
-                # "neighbour_min < old" — compute the change flag inside the
-                # label-update projection instead of re-joining the new
-                # label relation against the old one every round. Same
-                # single convergence-probe job per iteration, one join (and
-                # its exchange/broadcast build) fewer.
-                new_labels = (
-                    labels.join(neighbor_min, id_col, "left")
-                    .select(
-                        F.col(id_col),
-                        F.least(
-                            F.col("cluster_id"),
-                            F.coalesce(F.col("n_min"), F.col("cluster_id")),
-                        ).alias("cluster_id"),
-                        (
-                            F.coalesce(F.col("n_min"), F.col("cluster_id"))
-                            < F.col("cluster_id")
-                        ).alias("__chg"),
-                    )
-                    .persist()
+            # r12 job shave: labels only ever DECREASE (least of old and
+            # neighbour mins), so "new != old" is exactly
+            # "neighbour_min < old" — compute the change flag inside the
+            # label-update projection instead of re-joining the new
+            # label relation against the old one every round. Same
+            # single convergence-probe job per iteration, one join (and
+            # its exchange/broadcast build) fewer.
+            new_labels = (
+                labels.join(neighbor_min, id_col, "left")
+                .select(
+                    F.col(id_col),
+                    F.least(
+                        F.col("cluster_id"),
+                        F.coalesce(F.col("n_min"), F.col("cluster_id")),
+                    ).alias("cluster_id"),
+                    (
+                        F.coalesce(F.col("n_min"), F.col("cluster_id"))
+                        < F.col("cluster_id")
+                    ).alias("__chg"),
                 )
-                changed = new_labels.filter(F.col("__chg")).limit(1).count()
-            else:
-                new_labels = (
-                    labels.join(neighbor_min, id_col, "left")
-                    .select(
-                        F.col(id_col),
-                        F.least(F.col("cluster_id"), F.coalesce(F.col("n_min"), F.col("cluster_id"))).alias("cluster_id"),
-                    )
-                    .persist()
-                )
-                changed = (
-                    new_labels.alias("n")
-                    .join(labels.alias("o"), id_col)
-                    .filter(F.col("n.cluster_id") != F.col("o.cluster_id"))
-                    .limit(1)
-                    .count()
-                )
+                .persist()
+            )
+            changed = new_labels.filter(F.col("__chg")).limit(1).count()
             labels.unpersist()
             labels = new_labels
             if changed == 0:
@@ -743,72 +700,63 @@ def simhash_near_dup_pairs(
     # because the consumers' pruned schemas defeat exchange reuse.
     # Persist it, materialize the small verified pair set, release
     # (the shingle-cache lifecycle; audit mode keeps the lazy lineage).
-    do_ckpt = checkpoints_enabled() and _PERSIST_SIMHASH_FP
-    if do_ckpt:
-        fp = fp.persist()
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.shiftright(F.col("simhash"), b * band_bits)
-                .bitwiseAND(F.lit((1 << band_bits) - 1))
-                .alias("band_key"),
-            )
-            for b in range(n_bands)
-        ]
-    )
-    banded = fp.select(F.col(id_col), F.col("simhash"), F.explode(bands).alias("bk")).select(
-        id_col, "simhash", "bk.band", "bk.band_key"
-    )
-    if candidates == "auto":
-        candidates = _auto_candidates(banded, n_bands, auto_pairs_per_doc)
-    if candidates == "star":
-        reps = banded.groupBy("band", "band_key").agg(
-            F.min(id_col).alias("id_a"),
-            F.min_by("simhash", id_col).alias("sh_a"),
+    with reuse(fp) as fp:
+        bands = F.array(
+            *[
+                F.struct(
+                    F.lit(b).alias("band"),
+                    F.shiftright(F.col("simhash"), b * band_bits)
+                    .bitwiseAND(F.lit((1 << band_bits) - 1))
+                    .alias("band_key"),
+                )
+                for b in range(n_bands)
+            ]
         )
-        cands = (
-            banded.join(reps, ["band", "band_key"])
-            .filter(F.col(id_col) > F.col("id_a"))
-            .select(
-                "id_a",
-                F.col(id_col).alias("id_b"),
-                "sh_a",
-                F.col("simhash").alias("sh_b"),
+        banded = fp.select(
+            F.col(id_col), F.col("simhash"), F.explode(bands).alias("bk")
+        ).select(id_col, "simhash", "bk.band", "bk.band_key")
+        if candidates == "auto":
+            candidates = _auto_candidates(banded, n_bands, auto_pairs_per_doc)
+        if candidates == "star":
+            reps = banded.groupBy("band", "band_key").agg(
+                F.min(id_col).alias("id_a"),
+                F.min_by("simhash", id_col).alias("sh_a"),
             )
-            .distinct()
-        )
-    else:
-        cands = (
-            banded.alias("l")
-            .join(
-                banded.alias("r"),
-                (F.col("l.band") == F.col("r.band"))
-                & (F.col("l.band_key") == F.col("r.band_key"))
-                & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
+            cands = (
+                banded.join(reps, ["band", "band_key"])
+                .filter(F.col(id_col) > F.col("id_a"))
+                .select(
+                    "id_a",
+                    F.col(id_col).alias("id_b"),
+                    "sh_a",
+                    F.col("simhash").alias("sh_b"),
+                )
+                .distinct()
             )
-            .select(
-                F.col(f"l.{id_col}").alias("id_a"),
-                F.col(f"r.{id_col}").alias("id_b"),
-                F.col("l.simhash").alias("sh_a"),
-                F.col("r.simhash").alias("sh_b"),
+        else:
+            cands = (
+                banded.alias("l")
+                .join(
+                    banded.alias("r"),
+                    (F.col("l.band") == F.col("r.band"))
+                    & (F.col("l.band_key") == F.col("r.band_key"))
+                    & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
+                )
+                .select(
+                    F.col(f"l.{id_col}").alias("id_a"),
+                    F.col(f"r.{id_col}").alias("id_b"),
+                    F.col("l.simhash").alias("sh_a"),
+                    F.col("r.simhash").alias("sh_b"),
+                )
+                .distinct()
             )
-            .distinct()
-        )
-    try:
-        out = (
+        return materialize(
             cands.withColumn(
                 "hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
             )
             .filter(F.col("hamming") <= max_hamming)
             .select("id_a", "id_b", "hamming")
         )
-        if do_ckpt:
-            out = out.localCheckpoint(eager=True)
-    finally:
-        if do_ckpt:
-            fp.unpersist()
-    return out
 
 
 def simhash(col: Column, bits: int = SIMHASH_BITS) -> Column:
@@ -880,13 +828,9 @@ def substring_dup_spans(
     # without the persist the tokenize+explode (the dominant cost — one
     # window string per token) runs twice. Measured on the giant-doc
     # corpus (tools/scale_check.py --doc-skew, 10x): 49.7 s -> 20.1 s
-    # (uniform 10x: 4.2 s -> 3.2 s). Gated like minhash's shingle persist
-    # so plan audits see the real lineage; the small span result is
+    # (uniform 10x: 4.2 s -> 3.2 s). The small span result is
     # materialised before the cache is released (the minhash pattern).
-    do_ckpt = checkpoints_enabled()
-    if do_ckpt:
-        wins = wins.persist()
-    try:
+    with reuse(wins) as wins:
         dup_w = (
             wins.groupBy("w")
             .agg(F.count(F.lit(1)).alias("cnt"))
@@ -904,7 +848,7 @@ def substring_dup_spans(
                 prev_max_end.isNull() | (F.col("pos") > prev_max_end + 1), 1
             ).otherwise(0),
         ).withColumn("island", F.sum("new_island").over(w_doc))
-        spans = (
+        return materialize(
             flagged.groupBy(id_col, "island")
             .agg(
                 F.min("pos").alias("span_start"),
@@ -913,10 +857,3 @@ def substring_dup_spans(
             )
             .select(id_col, "span_start", "span_end", "n_windows")
         )
-        if not do_ckpt:
-            return spans  # plan-audit path: full lineage, nothing cached
-        out = spans.localCheckpoint(eager=True)
-    finally:
-        if do_ckpt:
-            wins.unpersist()
-    return out

@@ -35,7 +35,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plan_audit import checkpoints_enabled
+from ..plan_audit import checkpoints_enabled, materialize, reuse
 
 # AQE's guarded SMJ->SHJ rewrite, scoped to the BFS hop jobs (see
 # bfs_hops): convert a runtime sort-merge join to a shuffled-hash join
@@ -174,11 +174,6 @@ def bfs_hops(
     empty-frontier exit, which would force execution) is skipped so the
     returned Union lineage is the real auditable plan.
     """
-    do_ckpt = checkpoints_enabled()
-
-    def _ck(d: DataFrame) -> DataFrame:
-        return d.localCheckpoint(eager=True) if do_ckpt else d
-
     e = edges.select(
         F.col(src_col).cast("long").alias("src"),
         F.col(dst_col).cast("long").alias("dst"),
@@ -191,56 +186,52 @@ def bfs_hops(
     # cached plan's outputPartitioning already satisfies the edge side's
     # requirement, so only the frontier shuffles — the edge table is
     # never re-shuffled per hop in either regime. Only the persist (an
-    # execution-side effect) stays gated on checkpoint mode.
-    e = e.repartition(
-        edges.sparkSession.sparkContext.defaultParallelism, "src"
-    )
-    if do_ckpt:
-        e = e.persist()
-    # The hop loop materializes its work EAGERLY (per-hop localCheckpoint),
-    # so a conf scoped around the loop governs exactly the hop jobs and
-    # nothing the caller runs afterwards. Allowing AQE's size-guarded
-    # SMJ->SHJ rewrite here skips the per-hop sorts on the bounded
-    # frontier/visited relations — measured 0.91x warm-median on
-    # supplier_reachability across four interleaved same-process A/B runs
-    # (tools/ab_shj.py; consistent direction every run, quiet-box pair
-    # 2.835 -> 2.577 s). Session-wide the same conf is a wash with mixed
-    # per-query signs (minhash +1 job/run, +6%), hence the operator scope;
-    # restored in the finally regardless of mode.
-    spark = edges.sparkSession
-    prev_shj = spark.conf.get(_SHJ_CONF, "0")
-    spark.conf.set(_SHJ_CONF, _SHJ_THRESHOLD)
-    try:
-        visited = _ck(
-            seeds.select(F.col(seeds.columns[0]).cast("long").alias("node"))
-            .distinct()
-            .withColumn("hops", F.lit(0))
-        )
-        frontier = visited.select("node")
-        for i in range(1, max_hops + 1):
-            reached = (
-                frontier.join(e, frontier.node == e.src)
-                .select(F.col("dst").alias("node"))
+    # execution-side effect) is skipped in audit mode.
+    with reuse(
+        e.repartition(edges.sparkSession.sparkContext.defaultParallelism, "src")
+    ) as e:
+        # The hop loop materializes its work EAGERLY (per-hop localCheckpoint),
+        # so a conf scoped around the loop governs exactly the hop jobs and
+        # nothing the caller runs afterwards. Allowing AQE's size-guarded
+        # SMJ->SHJ rewrite here skips the per-hop sorts on the bounded
+        # frontier/visited relations — measured 0.91x warm-median on
+        # supplier_reachability across four interleaved same-process A/B runs
+        # (tools/ab_shj.py; consistent direction every run, quiet-box pair
+        # 2.835 -> 2.577 s). Session-wide the same conf is a wash with mixed
+        # per-query signs (minhash +1 job/run, +6%), hence the operator scope;
+        # restored in the finally regardless of mode.
+        spark = edges.sparkSession
+        prev_shj = spark.conf.get(_SHJ_CONF, "0")
+        spark.conf.set(_SHJ_CONF, _SHJ_THRESHOLD)
+        try:
+            visited = materialize(
+                seeds.select(F.col(seeds.columns[0]).cast("long").alias("node"))
                 .distinct()
+                .withColumn("hops", F.lit(0))
             )
-            new = _ck(
-                reached.join(visited.select("node"), "node", "left_anti")
-                .withColumn("hops", F.lit(i))
-            )  # O(|V|) rows, lineage cut
-            # Only the per-hop `new` piece needs the checkpoint: `visited`
-            # is then a union of <= max_hops already-checkpointed
-            # relations, so its lineage stays one-union-deep per hop and
-            # re-checkpointing the union would just be one extra barrier
-            # job per hop for the same plan. Likewise the early-exit probe
-            # is pointless on the FINAL hop — there is no next iteration
-            # to save — so the bounded `isEmpty` job runs only while
-            # another hop remains (r12: 7 -> 4 jobs for max_hops=2).
-            if do_ckpt and i < max_hops and new.isEmpty():
-                break
-            visited = visited.unionByName(new)
-            frontier = new.select("node")
-    finally:
-        spark.conf.set(_SHJ_CONF, prev_shj)
-        if do_ckpt:
-            e.unpersist()
-    return visited
+            frontier = visited.select("node")
+            for i in range(1, max_hops + 1):
+                reached = (
+                    frontier.join(e, frontier.node == e.src)
+                    .select(F.col("dst").alias("node"))
+                    .distinct()
+                )
+                new = materialize(
+                    reached.join(visited.select("node"), "node", "left_anti")
+                    .withColumn("hops", F.lit(i))
+                )  # O(|V|) rows, lineage cut
+                # Only the per-hop `new` piece needs the checkpoint: `visited`
+                # is then a union of <= max_hops already-checkpointed
+                # relations, so its lineage stays one-union-deep per hop and
+                # re-checkpointing the union would just be one extra barrier
+                # job per hop for the same plan. Likewise the early-exit probe
+                # is pointless on the FINAL hop — there is no next iteration
+                # to save — so the bounded `isEmpty` job runs only while
+                # another hop remains (r12: 7 -> 4 jobs for max_hops=2).
+                if checkpoints_enabled() and i < max_hops and new.isEmpty():
+                    break
+                visited = visited.unionByName(new)
+                frontier = new.select("node")
+        finally:
+            spark.conf.set(_SHJ_CONF, prev_shj)
+        return visited

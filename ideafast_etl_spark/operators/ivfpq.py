@@ -47,16 +47,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..plan_audit import checkpoints_enabled, materialize, reuse
 from .clustering import _pos_exploded, kmeans_fit
 from .pq import _assign, train_from_pts
 
 _SCALE = 1_000_000
 _S2 = _SCALE * _SCALE
-
-# r13: persist the hot-cell member relation across the split's six passes
-# (see _split_hot_cells). Module flag for same-process A/B harnesses (the
-# clustering._PERSIST_PTS discipline); results are bit-identical either way.
-_PERSIST_HOT_MEMBERS = True
 
 
 def _split_hot_cells(
@@ -78,7 +74,7 @@ def _split_hot_cells(
     member only ever meets its own cell's sub-centroids.
 
     The per-iteration ``localCheckpoint`` (bounded: ≤ (n/cap)·dim rows)
-    is gated on :func:`plan_audit.checkpoints_enabled` like every other
+    goes through :func:`plan_audit.materialize` like every other
     lineage-truncating operator, so a plan audit sees the full split
     lineage and NO eager job fires during plan construction.
 
@@ -88,14 +84,8 @@ def _split_hot_cells(
     only cells that actually produced sub-centroids, and the members'
     ``coalesce(sub, 0)`` fallback then lands on an existing unit instead
     of silently dropping those vectors from the index."""
-    from ..plan_audit import checkpoints_enabled
-
-    def _ckpt(rel: DataFrame) -> DataFrame:
-        return rel.localCheckpoint(eager=True) if checkpoints_enabled() else rel
-
     sizes = cells.groupBy("cell").agg(F.count(F.lit(1)).alias("csz"))
     hot = sizes.filter(F.col("csz") > max_cell_size)
-    hpts = pts.join(cells, "__id").join(F.broadcast(hot), "cell")
     # r13: the hot-member exploded relation feeds SIX corpus-scale passes
     # (seed-centroid build, assign+update per split iteration, final
     # assign) and each re-derived the full pts explode + both joins from
@@ -105,11 +95,7 @@ def _split_hot_cells(
     # of the split; every downstream op is fixed-point and partitioning-
     # independent so results are bit-identical (the SQL oracle replays
     # the split exactly). Audit mode keeps the full lazy lineage.
-    hcache = None
-    if checkpoints_enabled() and _PERSIST_HOT_MEMBERS:
-        hpts = hpts.persist()
-        hcache = hpts
-    try:
+    with reuse(pts.join(cells, "__id").join(F.broadcast(hot), "cell")) as hpts:
         # k₂ = min(ceil(size/cap), max_split) seeds per hot cell (its lowest
         # member ids). The k₂ bound matters as much as the cap: a 30 %-hot
         # cell at 100x would otherwise seed ceil(60k/64) ≈ 940 sub-centroids
@@ -131,7 +117,7 @@ def _split_hot_cells(
             .filter(F.col("rn") <= k2)
             .select("cell", "__id", (F.col("rn") - 1).cast("int").alias("scid"))
         )
-        scent = _ckpt(
+        scent = materialize(
             hpts.join(F.broadcast(seed), ["cell", "__id"]).select(
                 "cell", "scid", "pos", F.col("ival").alias("icval")
             )
@@ -175,7 +161,7 @@ def _split_hot_cells(
                 .over(Window.partitionBy("cell", "scid"))
                 .cast("double")
             ) / _SCALE
-            scent = _ckpt(
+            scent = materialize(
                 sums.withColumn("__cnorm", cnorm)
                 .filter(F.col("__cnorm") > 0)
                 .select(
@@ -209,13 +195,9 @@ def _split_hot_cells(
             .select("__id", F.col("scid").alias("__scid"))
         )
         # bounded: one row per hot-cell member. Materializing the
-        # final sub-assignment here (a) cuts cells2's lineage over
-        # the about-to-be-released cache and (b) lets the persist
-        # go in the finally even on the success path.
-        fbest = _ckpt(fbest)
-    finally:
-        if hcache is not None:
-            hcache.unpersist()
+        # final sub-assignment here cuts cells2's lineage over the
+        # cache this block releases.
+        fbest = materialize(fbest)
     cells2 = cells.join(fbest, "__id", "left").select(
         "__id",
         "cell",
@@ -274,9 +256,6 @@ def ivfpq_topk(
     resolves to 1 without running the count: the audited plan carries
     the full split structure (the hot predicate is data-dependent either
     way) and no eager job fires."""
-    from ..plan_audit import checkpoints_enabled
-
-    do_ckpt = checkpoints_enabled()
     dim = df.select(F.size(vec_col)).first()[0]
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m {m}")
@@ -299,15 +278,14 @@ def ivfpq_topk(
     cells = assign.select(
         F.col(id_col).alias("__id"), F.col("cluster_id").alias("cell")
     )
-    if do_ckpt:
-        # n rows × 2 columns, bounded (the kmeans_assign_hierarchical
-        # discipline). Without it, every downstream consumer — the hot
-        # check, each of the split's ~6 member-relation passes, the
-        # residual encode inside every PQ training iteration — re-runs
-        # the coarse assignment pass (pts ⋈ centroids, n·dim·k rows)
-        # from scratch; profiled at 100× as the bulk of the end-to-end
-        # cost on BOTH corpus shapes (SCALE.md r12).
-        cells = cells.localCheckpoint(eager=True)
+    # n rows × 2 columns, bounded (the kmeans_assign_hierarchical
+    # discipline). Without it, every downstream consumer — the hot
+    # check, each of the split's ~6 member-relation passes, the
+    # residual encode inside every PQ training iteration — re-runs
+    # the coarse assignment pass (pts ⋈ centroids, n·dim·k rows)
+    # from scratch; profiled at 100× as the bulk of the end-to-end
+    # cost on BOTH corpus shapes (SCALE.md r12).
+    cells = materialize(cells)
     pts = _pos_exploded(df, id_col, vec_col)
     do_split = max_cell_size is not None
     if do_split:
@@ -347,11 +325,11 @@ def ivfpq_topk(
         # n-row shuffle restores parallelism; every downstream op is
         # fixed-point and partitioning-independent, so results are
         # bit-identical (the SQL oracle pins this).
-        cells = cells.repartition(
-            df.sparkSession.sparkContext.defaultParallelism, "__id"
+        cells = materialize(  # n×3 rows, bounded
+            cells.repartition(
+                df.sparkSession.sparkContext.defaultParallelism, "__id"
+            )
         )
-        if do_ckpt:
-            cells = cells.localCheckpoint(eager=True)  # n×3 rows, bounded
     else:
         cells = cells.withColumn("sub", F.lit(0).cast("int"))
         fcent = coarse.select(
@@ -371,13 +349,6 @@ def ivfpq_topk(
             (F.col("ival") - F.col("icval")).alias("ival"),
         )
     )
-    if do_ckpt:
-        # the PQ trainer touches rpts 2·pq_iters+1 times (assign + update
-        # per iteration, then the code pass); cache the corpus-scale
-        # residual relation instead of re-deriving it each time — the
-        # minhash shingle-relation discipline (dedup.py). Spilled to disk
-        # when it outgrows memory; unpersisted before returning.
-        rpts = rpts.persist()
     seed_ids = (
         df.select(F.col(id_col).alias("__id"))
         .orderBy("__id")
@@ -386,7 +357,12 @@ def ivfpq_topk(
             "cid", F.row_number().over(Window.orderBy("__id")) - F.lit(1)
         )
     )
-    try:
+    # the PQ trainer touches rpts 2·pq_iters+1 times (assign + update
+    # per iteration, then the code pass); cache the corpus-scale
+    # residual relation instead of re-deriving it each time — the
+    # minhash shingle-relation discipline (dedup.py). Spilled to disk
+    # when it outgrows memory; released before returning.
+    with reuse(rpts) as rpts:
         cb = train_from_pts(rpts, seed_ids, pq_iters)
         codes = _assign(rpts, cb)  # (__id, sub, cid)
 
@@ -444,13 +420,7 @@ def ivfpq_topk(
             [F.desc("approx_sim"), F.asc("neighbor_id")],
             k,
         ).select("query_id", "neighbor_id", "approx_sim", "rank")
-        if not do_ckpt:
-            return result  # plan-audit path: full lineage, nothing cached
         # materialise (≤ |queries|·k rows) before releasing the cache —
         # the minhash pattern: the caller gets a small checkpointed
         # relation, not lineage over an unpersisted cache
-        out = result.localCheckpoint(eager=True)
-    finally:
-        if do_ckpt:
-            rpts.unpersist()
-    return out
+        return materialize(result)

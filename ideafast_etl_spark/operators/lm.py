@@ -348,31 +348,30 @@ def ngram_lm_perplexity(
 
     ``smoothing``: "addk" (add-k, see :func:`score_perplexity`) or "kn"
     (interpolated Kneser-Ney, see :func:`score_kn_perplexity`)."""
-    from ..plan_audit import checkpoints_enabled
+    from contextlib import nullcontext
+
+    from .. import plan_audit
 
     if smoothing not in ("addk", "kn"):
         raise ValueError(
             f"smoothing must be 'addk' or 'kn'; got {smoothing!r}"
         )
-    mat = materialize and checkpoints_enabled()
     toks = _tokens(df, text_col, id_col)
     occ = (
         _grams_from_tokens(toks, n, id_col)
         .groupBy(id_col, "ctx", "w")
         .agg(F.count(F.lit(1)).alias("c_occ"))
     )
-    if mat:
-        occ = occ.persist()
-    try:
+    with (plan_audit.reuse(occ) if materialize else nullcontext(occ)) as occ:
         ngram_counts = occ.groupBy("ctx", "w").agg(
             F.sum("c_occ").alias("c_nw")
         )
-        if mat:
+        if materialize:
             # gram-type counts: bounded by vocabulary², in practice the
             # distinct-gram table — small enough that every one of its
             # four consumers should read it materialized, not re-shuffle
             # the corpus
-            ngram_counts = ngram_counts.localCheckpoint(eager=True)
+            ngram_counts = plan_audit.materialize(ngram_counts)
         context_counts = ngram_counts.groupBy("ctx").agg(
             F.sum("c_nw").alias("c_ctx")
         )
@@ -387,10 +386,5 @@ def ngram_lm_perplexity(
             result = _kn_scores(
                 occ, ngram_counts, context_counts, vocab, discount, id_col
             )
-        if not mat:
-            return result
-        out = result.localCheckpoint(eager=True)  # doc-count-sized
-    finally:
-        if mat:
-            occ.unpersist()
-    return out
+        # doc-count-sized
+        return plan_audit.materialize(result) if materialize else result

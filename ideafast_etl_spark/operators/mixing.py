@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..plan_audit import checkpoints_enabled
+from ..plan_audit import materialize
 
 
 def waterfill_allocation(
@@ -84,8 +84,8 @@ def waterfill_allocation(
             & (F.col("lam_i") >= F.col("cap").cast("double")),
         )
     )
-    if checkpoint and checkpoints_enabled():
-        ranked = ranked.localCheckpoint()
+    if checkpoint:
+        ranked = materialize(ranked)
     m = ranked.groupBy().agg(
         F.max(F.when(F.col("feasible"), F.col("idx"))).alias("m")
     )

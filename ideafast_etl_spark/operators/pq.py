@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..plan_audit import checkpoints_enabled
+from ..plan_audit import reuse
 from .clustering import _pos_exploded
 
 _SCALE = 1_000_000
@@ -47,11 +47,6 @@ _SCALE = 1_000_000
 PQ_M = 4  # subspaces
 PQ_K = 16  # centroids per subspace
 PQ_ITERS = 4
-
-# pq_train's pts-caching posture (r12): module-level so tools/tests can
-# A/B it in-process; production always leaves it on (see clustering.py's
-# twin flag).
-_PERSIST_PTS = True
 
 
 def _sub_points(
@@ -93,13 +88,8 @@ def pq_train(
     # eager per-iteration checkpoints, and its final statement IS an eager
     # checkpoint, so every consumption completes before the unpersist.
     # (The residual IVF-PQ caller persists its own rpts the same way.)
-    # Values unchanged — fixed-point sums are partitioning-independent;
-    # skipped under plan audits to keep the lazy lineage.
-    do_persist = checkpoints_enabled() and _PERSIST_PTS
-    pts = _sub_points(df, id_col, vec_col, subdim)
-    if do_persist:
-        pts = pts.persist()
-    try:
+    # Values unchanged — fixed-point sums are partitioning-independent.
+    with reuse(_sub_points(df, id_col, vec_col, subdim)) as pts:
         seed_ids = (
             df.select(F.col(id_col).alias("__id"))
             .orderBy("__id")
@@ -109,9 +99,6 @@ def pq_train(
             )
         )
         return train_from_pts(pts, seed_ids, iters)
-    finally:
-        if do_persist:
-            pts.unpersist()
 
 
 def train_from_pts(

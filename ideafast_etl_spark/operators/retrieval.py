@@ -388,7 +388,7 @@ def mmr_rerank(
     Returns (query_id, neighbor_id, mmr_rank, relevance) with relevance
     the quantized cosine as a double.
     """
-    from ..plan_audit import checkpoints_enabled
+    from ..plan_audit import checkpoints_enabled, materialize
     from .similarity import dot, unit_normalized
 
     if loop not in ("auto", "driver", "distributed"):
@@ -397,10 +397,6 @@ def mmr_rerank(
             f"got {loop!r}"
         )
     spark = df.sparkSession
-    do_ckpt = checkpoints_enabled()
-
-    def _ckpt(d: DataFrame) -> DataFrame:
-        return d.localCheckpoint(eager=True) if do_ckpt else d
     q = unit_normalized(
         queries.select(F.col(id_col).alias("query_id"), F.col(vec_col)),
         "query_id", vec_col, "query_vec",
@@ -429,10 +425,10 @@ def mmr_rerank(
         pool,
         rank_name="rn",
     ).select("query_id", "neighbor_id", "rel_fp", "rn", "vec")
-    cand = _ckpt(cand)  # bounded: queries x pool rows
+    cand = materialize(cand)  # bounded: queries x pool rows
     cand_rows = None
     if loop == "auto":
-        if not do_ckpt:
+        if not checkpoints_enabled():
             loop = "distributed"  # audit mode: no eager jobs, keep a plan
         else:
             # The decision "driver iff |cand| * pool <= driver_pair_limit"
@@ -474,7 +470,7 @@ def mmr_rerank(
             .cast("long").alias("sim_fp"),
         )
     )
-    pairs = _ckpt(pairs)  # bounded: queries x pool^2 rows
+    pairs = materialize(pairs)  # bounded: queries x pool^2 rows
     selected = (
         cand.filter(F.col("rn") == 1)
         .select(
@@ -482,7 +478,7 @@ def mmr_rerank(
             F.lit(1).alias("mmr_rank"),
         )
     )
-    selected = _ckpt(selected)
+    selected = materialize(selected)
     cand_slim = cand.select("query_id", "neighbor_id", "rel_fp")
     for t in range(2, k + 1):
         # NB: rename the group keys — pairs/cand/selected share attribute
@@ -534,7 +530,7 @@ def mmr_rerank(
                 F.lit(t).alias("mmr_rank"),
             )
         )
-        selected = _ckpt(selected.unionByName(winner))
+        selected = materialize(selected.unionByName(winner))
     return selected.select(
         "query_id", "neighbor_id",
         F.col("mmr_rank").cast("int").alias("mmr_rank"),

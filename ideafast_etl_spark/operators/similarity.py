@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..plan_audit import checkpoints_enabled, materialize, reuse
+
 
 def dot(a: Column, b: Column) -> Column:
     """Float64 dot product with left-to-right summation."""
@@ -131,12 +133,6 @@ def brute_force_topk(
 # Deterministic pseudo-random hyperplanes: component h[i][d] derived from a
 # fixed affine sequence mapped to [-1, 1]. Engine-reproducible and cheap.
 NUM_HYPERPLANES = 16
-
-# r12: cache the grid-star representative relation across its three
-# consumers (see grid_near_dup_pairs) — module flag so
-# tools/ab_jobshave.py can A/B the cached and uncached forms in one
-# process; production default ON, plan audits bypass it entirely.
-_PERSIST_STAR_REPS = True
 
 
 def _hyperplane(dim: int, i: int) -> list[float]:
@@ -700,8 +696,6 @@ def _auto_grid_candidates(
     keep the exact bit-identical decision. Under plan-audit mode no job
     may run: auto resolves to "star", the scale-safe posture,
     deterministically."""
-    from ..plan_audit import checkpoints_enabled
-
     if not checkpoints_enabled():
         return "star"
     from .diag import estimate_bucket_pair_volume
@@ -887,16 +881,8 @@ def grid_near_dup_pairs(
         # 8 parquet scans, 0 reuses) — measured 18-20 s vs 3.3 s for the
         # all-pairs posture at sf0.1. Persist both, materialize the small
         # verified-pair result, release (the minhash shingle-cache
-        # lifecycle). Skipped under plan audits so .explain keeps the
-        # full lazy lineage; flag for same-process A/B
-        # (tools/ab_jobshave.py).
-        from ..plan_audit import checkpoints_enabled
-
-        do_ckpt = checkpoints_enabled() and _PERSIST_STAR_REPS
-        if do_ckpt:
-            g = g.persist()
-            reps = reps.persist()
-        try:
+        # lifecycle).
+        with reuse(g) as g, reuse(reps) as reps:
             intra = (
                 g.join(
                     reps.select(
@@ -937,14 +923,7 @@ def grid_near_dup_pairs(
             )
             # disjoint by construction: intra pairs share a fine group,
             # cross pairs are two distinct groups' representatives
-            out = intra.unionByName(cross)
-            if do_ckpt:
-                out = out.localCheckpoint(eager=True)
-        finally:
-            if do_ckpt:
-                reps.unpersist()
-                g.unpersist()
-        return out
+            return materialize(intra.unionByName(cross))
     a = u.select(
         F.col("pid").alias("id_a"),
         F.col("uv").alias("va"),

@@ -29,19 +29,17 @@ from pyspark.sql import functions as F
 
 _EOW = "</w>"
 
-# r12 job shave: the per-merge vocab checkpoint is LAZY by default — the
-# next iteration's top-pair collect materializes it inside its own job, so
+# r12 job shave: the per-merge vocab checkpoint is LAZY — the next
+# iteration's top-pair collect materializes it inside its own job, so
 # each merge pays ONE scheduler barrier instead of two (the eager form ran
 # a dedicated vocab-materialization job per merge). localCheckpoint
-# truncates the plan identically under both settings (the returned frame
+# truncates the plan identically eager or lazy (the returned frame
 # is LogicalRDD-backed either way) and the checkpoint cache fills during
 # the first job that computes it, so values and lineage depth are
 # unchanged — only the job count drops. Unlike the k-means/PQ training
 # loops (whose per-iteration checkpoint feeds a BROADCAST build and must
 # stay eager per guide §3.1's broadcast-timeout discipline), the BPE
-# vocab's next consumer is a plain aggregate-collect job. Module flag for
-# same-process A/B (tools/ab_jobshave.py).
-_EAGER_MERGE_CKPT = False
+# vocab's next consumer is a plain aggregate-collect job.
 
 # C0 control characters + DEL are treated as word separators during
 # pre-tokenization: 0x1F in particular is the internal pair-key delimiter
@@ -111,9 +109,7 @@ def bpe_train(
     the symbolized word-frequency table after all merges (word, freq,
     sym). Training stops early when no pair reaches ``min_freq``."""
     spark = df.sparkSession
-    vocab = _symbolize(_word_freq(df, text_col)).localCheckpoint(
-        eager=_EAGER_MERGE_CKPT
-    )
+    vocab = _symbolize(_word_freq(df, text_col)).localCheckpoint(eager=False)
     merges: list[tuple[str, str, int]] = []
     for _ in range(n_merges):
         arr = F.split(F.col("sym"), " ")
@@ -146,7 +142,7 @@ def bpe_train(
         merges.append((a, b, int(top[0]["pf"])))
         vocab = vocab.withColumn(
             "sym", _apply_merge(F.col("sym"), a, b)
-        ).localCheckpoint(eager=_EAGER_MERGE_CKPT)  # vocab-sized: truncate
+        ).localCheckpoint(eager=False)  # vocab-sized: truncate
     return merges, vocab
 
 

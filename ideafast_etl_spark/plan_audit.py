@@ -1,23 +1,28 @@
-"""Plan-audit escape hatch for lineage-truncating operators.
+"""The one way operators reuse a relation, and its plan-audit switch.
 
-Iterative / multi-consumer operators (``minhash_near_dup_pairs``,
-``bfs_hops``, ``waterfill_allocation``) end in ``localCheckpoint`` for good
-production reasons (lineage cut per iteration, single materialization of a
-bounded relation reused by several branches). But a checkpointed DataFrame
-explains as ``Scan ExistingRDD`` — a plan audit against it is VACUOUS: the
-positive markers are missing and the negative assertions pass trivially
-against an empty plan (VERDICT r6 "what's wrong" #1).
+Iterative / multi-consumer operators cache a relation that several
+consumers read (``reuse``) and cut lineage on small results
+(``materialize``). Both are production calls: every operator that keeps a
+relation across actions goes through them instead of hand-rolling a
+gated ``persist``/``unpersist`` pair or ``localCheckpoint``.
 
-``tools/explain_plans.py`` therefore builds its plans inside
-``no_checkpoints()``, which makes those operators return their full lazy
-lineage so ``.explain`` shows the real joins/aggregates/windows. Production
-callers never touch this module; the default is always checkpoint-on.
+A checkpointed DataFrame explains as ``Scan ExistingRDD`` — a plan audit
+against it is VACUOUS: the positive markers are missing and the negative
+assertions pass trivially against an empty plan. ``tools/explain_plans.py``
+therefore builds its plans inside ``no_checkpoints()``, where both helpers
+hand back the lazy DataFrame unchanged so ``.explain`` shows the real
+joins/aggregates/windows. Outside an audit the default is always on.
+
+Decisions that are not about caching (auto-posture probes, an early exit
+on an empty frontier) read ``checkpoints_enabled()`` directly.
 """
 
 from __future__ import annotations
 
 from contextlib import contextmanager
 from typing import Iterator
+
+from pyspark.sql import DataFrame
 
 _DISABLE_CHECKPOINTS = False
 
@@ -29,10 +34,10 @@ def checkpoints_enabled() -> bool:
 
 @contextmanager
 def no_checkpoints() -> Iterator[None]:
-    """Within this context, lineage-truncating operators skip their
-    ``localCheckpoint``/``persist`` calls so ``.explain`` sees the real
-    plan. For plan audits only — executing heavy iterative operators in
-    this mode recomputes lineage per iteration."""
+    """Within this context ``reuse``/``materialize`` are identities so
+    ``.explain`` sees the real plan. For plan audits only — executing
+    heavy iterative operators in this mode recomputes lineage per
+    iteration."""
     global _DISABLE_CHECKPOINTS
     prev = _DISABLE_CHECKPOINTS
     _DISABLE_CHECKPOINTS = True
@@ -40,3 +45,25 @@ def no_checkpoints() -> Iterator[None]:
         yield
     finally:
         _DISABLE_CHECKPOINTS = prev
+
+
+@contextmanager
+def reuse(df: DataFrame) -> Iterator[DataFrame]:
+    """Yield ``df.persist()`` for the block's consumers and always
+    unpersist on exit, also when the block raises. Anything returned from
+    the block that still reads the cache must be ``materialize``d inside
+    it. Under ``no_checkpoints()`` yields ``df`` unchanged."""
+    if not checkpoints_enabled():
+        yield df
+        return
+    cached = df.persist()
+    try:
+        yield cached
+    finally:
+        cached.unpersist()
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """``df.localCheckpoint(eager=True)``: compute once, cut lineage.
+    Under ``no_checkpoints()`` returns ``df`` unchanged."""
+    return df.localCheckpoint(eager=True) if checkpoints_enabled() else df

@@ -13,7 +13,11 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# local[N] width: SPARK_GRAFT_CPUS, else the cores this process may run on
+# (a hard-coded width oversubscribes small boxes and starves big ones)
+DEFAULT_CPUS = int(
+    os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+)
 
 # Executor Python workers must be able to import this package regardless of
 # the caller's cwd (Pandas-UDF closures unpickle by module reference). Local

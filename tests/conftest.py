@@ -33,7 +33,7 @@ def spark():
 # ---------------------------------------------------------------------------
 
 # whole files: themed heavy suites — crash matrices, compaction protocols,
-# e2e pipelines, streaming twins, same-process A/B parity harnesses
+# e2e pipelines, streaming twins, dup-dense posture parity
 SLOW_FILES = {
     "test_store_crash_recovery.py",   # 109 s: crash matrix
     "test_accum_compaction.py",       # 135 s: compaction + crash protocol
@@ -45,7 +45,6 @@ SLOW_FILES = {
     "test_monitoring_streaming.py",   # 54 s: streaming monitors
     "test_corpus_streaming.py",       # 28 s: streaming corpus twins
     "test_state_delta.py",            # 56 s: delta-publish protocol
-    "test_loop_jobshave.py",          # 38 s: r12 A/B parity harnesses
     "test_auto_postures.py",          # 57 s: dup-dense posture parity
 }
 
@@ -54,7 +53,6 @@ SLOW_FILES = {
 # in the default profile
 SLOW_TESTS = {
     "test_cdc_changes.py::test_incremental_view_maintenance_from_cdc",
-    "test_classifier.py::test_train_and_score_matches_composed",
     "test_clustering.py::test_hierarchical_kmeans_planted_dups_and_determinism",
     "test_clustering.py::test_hierarchical_small_corpus_falls_back_to_flat",
     "test_clustering.py::test_semantic_dedup_cap_keeps_lowest_id_semantics",
@@ -74,7 +72,6 @@ SLOW_TESTS = {
     "test_ivfpq.py::test_hotsplit_auto_cap_is_identity_on_uniform",
     "test_ivfpq.py::test_hotsplit_huge_cap_is_identity",
     "test_ivfpq.py::test_ivfpq_deterministic_under_repartition",
-    "test_ivfpq.py::test_hotsplit_auto_cap_splits_planted_hot_cell",
     "test_ivfpq.py::test_hotsplit_degenerate_cell_keeps_parent_centroid",
     "test_ivfpq.py::test_ivfpq_recall_vs_brute_force",
     "test_jpeg.py::test_progressive_through_spark_decode_path",

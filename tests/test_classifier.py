@@ -114,3 +114,41 @@ def test_empty_labels(spark):
         dim=DIM, iters=3,
     )
     assert w == [0.0] * (DIM + 1)
+
+
+def test_train_and_score_partial_labels_same_rows_under_audit(spark, corpus):
+    """With labels for only half the docs, the cached path and the
+    plan-audit path both score the ``feats ⋈ labels`` population — the
+    same rows, bit for bit."""
+    from ideafast_etl_spark.operators.classifier import train_and_score_logreg
+    from ideafast_etl_spark.plan_audit import no_checkpoints
+
+    df = spark.createDataFrame(corpus, ["doc_id", "text", "label"])
+    feats = doc_features(df, dim=DIM)
+    labels = df.filter(F.col("doc_id") < 20).select("doc_id", "label")
+
+    def run():
+        return sorted(
+            map(tuple, train_and_score_logreg(
+                feats, labels, dim=DIM, iters=3
+            ).collect())
+        )
+
+    cached = run()
+    with no_checkpoints():
+        audited = run()
+    assert audited == cached
+    assert [r[0] for r in cached] == list(range(20))
+
+
+def test_features_without_bias_entry_raise(spark):
+    """A hand-built ``feats`` lacking the ``idx == dim`` bias entry cannot
+    yield a doc count; training must fail loudly instead of returning
+    all-zero weights."""
+    feats = spark.createDataFrame(
+        [(0, [(1, 2), (5, 1)]), (1, [(3, 1)])],
+        "doc_id long, feats array<struct<idx:int, cnt:int>>",
+    )
+    labels = spark.createDataFrame([(0, 1), (1, 0)], ["doc_id", "label"])
+    with pytest.raises(ValueError, match="bias"):
+        train_logreg(feats, labels, dim=DIM, iters=2)

@@ -1,56 +1,52 @@
-"""r12 loop job-shaves are value-free: the lazy BPE merge checkpoint and
-the fused CC convergence check must produce bit-identical results to the
-eager/joined forms they replace (REPRO.md same-values discipline; the
-speed evidence lives in tools/ab_jobshave.py + OPTIMIZATION_r12.md)."""
+"""The r12 loop job-shaves and posture caches are value-free: the lazy BPE
+merge checkpoint, the fused CC convergence flag, and the cached grid-star
+/ minhash / simhash relations must keep producing the exact results the
+eager/joined/uncached forms produced. Each expected value below was
+recorded from those forms on the same fixture (REPRO.md same-values
+discipline)."""
 
-import pytest
+import random
 
 from ideafast_etl_spark.operators import dedup, similarity, tokenizer
 
 
-@pytest.fixture()
-def _restore_flags():
-    bpe_flag = tokenizer._EAGER_MERGE_CKPT
-    cc_flag = dedup._FUSED_CC_CHANGE
-    star_flag = similarity._PERSIST_STAR_REPS
-    perdoc_flag = dedup._PERSIST_PER_DOC
-    fp_flag = dedup._PERSIST_SIMHASH_FP
-    yield
-    tokenizer._EAGER_MERGE_CKPT = bpe_flag
-    dedup._FUSED_CC_CHANGE = cc_flag
-    similarity._PERSIST_STAR_REPS = star_flag
-    dedup._PERSIST_PER_DOC = perdoc_flag
-    dedup._PERSIST_SIMHASH_FP = fp_flag
-
-
-def test_bpe_lazy_merge_ckpt_matches_eager(spark, _restore_flags):
-    """Checkpoint eagerness must not change what bpe_train learns: the
-    lazy vocab checkpoint (materialized by the next merge's top-pair
-    collect) yields the same merge list and the same final symbolized
-    vocabulary as the eager 2-jobs-per-merge form."""
+def test_bpe_lazy_merge_ckpt_learns_expected_merges(spark):
+    """The lazy vocab checkpoint (materialized by the next merge's
+    top-pair collect) learns the same merge list and the same final
+    symbolized vocabulary as the eager 2-jobs-per-merge form."""
     rows = [
         (i, f"low lower lowest newest widest new wid{i % 3} er est")
         for i in range(12)
     ]
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = {}
-    for eager in (True, False):
-        tokenizer._EAGER_MERGE_CKPT = eager
-        merges, vocab = tokenizer.bpe_train(docs, n_merges=8)
-        out[eager] = (
-            merges,
-            sorted(map(tuple, vocab.select("word", "freq", "sym").collect())),
-        )
-    assert out[True] == out[False]
-    assert len(out[True][0]) > 0  # the fixture actually trains merges
+    merges, vocab = tokenizer.bpe_train(docs, n_merges=8)
+    assert merges == [
+        ("e", "s", 48), ("es", "t", 48), ("est", "</w>", 48),
+        ("l", "o", 36), ("lo", "w", 36), ("e", "r", 24), ("e", "w", 24),
+        ("er", "</w>", 24),
+    ]
+    assert sorted(map(tuple, vocab.select("word", "freq", "sym").collect())) == [
+        ("er", 12, "er</w>"),
+        ("est", 12, "est</w>"),
+        ("low", 12, "low </w>"),
+        ("lower", 12, "low er</w>"),
+        ("lowest", 12, "low est</w>"),
+        ("new", 12, "n ew </w>"),
+        ("newest", 12, "n ew est</w>"),
+        ("wid0", 4, "w i d 0 </w>"),
+        ("wid1", 4, "w i d 1 </w>"),
+        ("wid2", 4, "w i d 2 </w>"),
+        ("widest", 12, "w i d est</w>"),
+    ]
 
 
-def test_cc_fused_change_check_matches_join_check(spark, _restore_flags):
+def test_cc_fused_change_check_resolves_component_min(spark):
     """Min-label propagation is monotone non-increasing, so the fused
     in-projection change flag (neighbour_min < old) decides convergence
-    exactly like the old labels⋈new_labels inequality join — same
-    clusters, same labels, on a fixture whose pair graph takes multiple
-    propagation rounds (a template cluster plus satellite dups)."""
+    exactly like the old labels⋈new_labels inequality join — on a fixture
+    whose pair graph takes multiple propagation rounds (a template cluster
+    plus satellite dups), both candidate modes label the template cluster
+    with its min id 0 and leave the unrelated docs out."""
     template = " ".join(f"w{i}" for i in range(40))
     rows = [(i, f"{template} u{i}a u{i}b") for i in range(24)]
     rows += [
@@ -59,33 +55,23 @@ def test_cc_fused_change_check_matches_join_check(spark, _restore_flags):
         for i in range(6)
     ]
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    got = {}
-    for fused in (False, True):
-        dedup._FUSED_CC_CHANGE = fused
-        for mode in ("all", "star"):
-            got[(fused, mode)] = sorted(
-                map(
-                    tuple,
-                    dedup.near_dup_clusters(
-                        docs, threshold=0.5, candidates=mode
-                    ).collect(),
-                )
+    for mode in ("all", "star"):
+        got = sorted(
+            map(
+                tuple,
+                dedup.near_dup_clusters(
+                    docs, threshold=0.5, candidates=mode
+                ).collect(),
             )
-    assert got[(False, "all")] == got[(True, "all")]
-    assert got[(False, "star")] == got[(True, "star")]
-    # the fixture is non-trivial: the template cluster resolved to min id 0
-    assert [p for p in got[(True, "all")] if p[0] < 200] == [
-        (i, 0) for i in range(24)
-    ]
+        )
+        assert got == [(i, 0) for i in range(24)], mode
 
 
-def test_grid_star_reps_persist_matches_uncached(spark, _restore_flags):
+def test_grid_star_reps_persist_keeps_pair_set(spark):
     """Caching the grid-star representative relation across its three
-    consumers must not change the verified pair set — on a corpus with a
-    planted near-identical cluster (exercising the intra leg) plus spread
-    vectors (exercising the cross leg)."""
-    import random
-
+    consumers keeps the verified pair set — on a corpus with a planted
+    near-identical cluster (exercising the intra leg) plus spread vectors
+    (exercising the cross leg)."""
     rnd = random.Random(7)
     rows = []
     base = [rnd.uniform(-1, 1) for _ in range(8)]
@@ -94,57 +80,59 @@ def test_grid_star_reps_persist_matches_uncached(spark, _restore_flags):
     for i in range(40):  # spread vectors for the representative stage
         rows.append((100 + i, [rnd.uniform(-1, 1) for _ in range(8)]))
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    got = {}
-    for cached in (False, True):
-        similarity._PERSIST_STAR_REPS = cached
-        got[cached] = sorted(
-            map(
-                tuple,
-                similarity.grid_near_dup_pairs(
-                    df, threshold=0.95, candidates="star"
-                ).collect(),
-            )
+    got = sorted(
+        map(
+            tuple,
+            similarity.grid_near_dup_pairs(
+                df, threshold=0.95, candidates="star"
+            ).collect(),
         )
-    assert got[False] == got[True]
-    assert len(got[True]) >= 11  # the planted cluster's intra pairs exist
+    )
+    # the planted cluster's intra pairs, star-linked to its min id
+    assert got == [(0, i, 1.0) for i in range(1, 12)]
 
 
-def test_minhash_perdoc_and_simhash_fp_persist_match_uncached(
-    spark, _restore_flags
-):
+def test_minhash_perdoc_and_simhash_fp_persist_keep_pair_sets(spark):
     """Persisting the doc-keyed signature aggregate (minhash) / the
-    fingerprint relation (simhash) across their consumers must not change
-    the verified pair sets."""
+    fingerprint relation (simhash) across their consumers keeps the
+    verified pair sets. Docs 0-15 share a template up to ``i % 4``:
+    same-residue pairs are identical, the rest share 6 of 8 tokens."""
     rows = [(i, f"the quick brown fox jumps over lazy dog {i % 4}")
             for i in range(16)]
     rows += [(100 + i, f"completely different text body num{i} tok{i} "
                        f"it{i} th{i} ex{i} mo{i}") for i in range(6)]
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    got = {}
-    for cached in (False, True):
-        dedup._PERSIST_PER_DOC = cached
-        dedup._PERSIST_SIMHASH_FP = cached
-        got[("mh", cached)] = sorted(
-            map(tuple, dedup.minhash_near_dup_pairs(
-                docs, threshold=0.3).collect())
-        )
-        got[("mh_star", cached)] = sorted(
-            map(tuple, dedup.minhash_near_dup_pairs(
-                docs, threshold=0.3, candidates="star").collect())
-        )
-        got[("sh", cached)] = sorted(
-            map(tuple, dedup.simhash_near_dup_pairs(
-                docs, max_hamming=3).collect())
-        )
-    for key in ("mh", "mh_star", "sh"):
-        assert got[(key, False)] == got[(key, True)], key
-    assert len(got[("mh", True)]) > 0
+    mh = sorted(map(tuple, dedup.minhash_near_dup_pairs(
+        docs, threshold=0.3).collect()))
+    mh_star = sorted(map(tuple, dedup.minhash_near_dup_pairs(
+        docs, threshold=0.3, candidates="star").collect()))
+    sh = sorted(map(tuple, dedup.simhash_near_dup_pairs(
+        docs, max_hamming=3).collect()))
+    assert mh == [
+        (a, b, 1.0 if a % 4 == b % 4 else 0.75)
+        for a in range(16)
+        for b in range(a + 1, 16)
+    ]
+    assert mh_star == [
+        (0, 1, 0.75), (0, 2, 0.75), (0, 3, 0.75), (0, 4, 1.0), (0, 5, 0.75),
+        (0, 6, 0.75), (0, 7, 0.75), (0, 8, 1.0), (0, 9, 0.75), (0, 10, 0.75),
+        (0, 11, 0.75), (0, 12, 1.0), (0, 13, 0.75), (0, 14, 0.75),
+        (0, 15, 0.75), (1, 2, 0.75), (1, 3, 0.75), (1, 5, 1.0), (1, 6, 0.75),
+        (1, 7, 0.75), (1, 9, 1.0), (1, 10, 0.75), (1, 11, 0.75), (1, 13, 1.0),
+        (1, 14, 0.75), (1, 15, 0.75), (2, 6, 1.0), (2, 10, 1.0), (2, 14, 1.0),
+        (3, 7, 1.0), (3, 11, 1.0), (3, 15, 1.0),
+    ]
+    assert sh == [
+        (a, b, 0)
+        for a in range(16)
+        for b in range(a + 1, 16)
+        if a % 4 == b % 4
+    ]
 
 
-def test_cc_output_schema_drops_change_flag(spark, _restore_flags):
+def test_cc_output_schema_drops_change_flag(spark):
     """The fused path's internal __chg column must never leak into the
     operator's output schema."""
-    dedup._FUSED_CC_CHANGE = True
     rows = [(1, "a b c d e f g h"), (2, "a b c d e f g h"), (3, "z y x w v u t s")]
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
     out = dedup.near_dup_clusters(docs, threshold=0.5)

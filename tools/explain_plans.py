@@ -399,8 +399,8 @@ def main() -> int:
             "below are therefore built under `plan_audit.no_checkpoints()`, which\n"
             "makes lineage-truncating operators (minhash_near_dup_pairs,\n"
             "bfs_hops, waterfill_allocation) return their full lazy lineage. Any\n"
-            "NEW operator that calls localCheckpoint/persist before returning\n"
-            "must honor `plan_audit.checkpoints_enabled()` the same way, or its\n"
+            "NEW operator that caches or checkpoints before returning must do\n"
+            "it through `plan_audit.reuse()`/`plan_audit.materialize()`, or its\n"
             "audit here silently asserts nothing.\n\n"
             + "\n".join(sections)
         )
