@@ -5,6 +5,7 @@ on local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import sys
@@ -80,6 +81,50 @@ SCALED = [
     "sessionization",
     "minhash_near_dup",
 ]
+
+
+def _replica_fingerprint(sf_dir: str, mult: int, generator_file: str) -> str:
+    """Identity of a replica's inputs: the multiplier, the generator's
+    source, and the path, size and mtime of every file under ``sf_dir``."""
+    h = hashlib.sha256(f"x{mult}\n".encode())
+    with open(generator_file, "rb") as fh:
+        h.update(fh.read())
+    for root, dirs, files in os.walk(sf_dir):
+        dirs.sort()
+        for fn in sorted(files):
+            path = os.path.join(root, fn)
+            st = os.stat(path)
+            rel = os.path.relpath(path, sf_dir)
+            h.update(f"{rel}\t{st.st_size}\t{st.st_mtime_ns}\n".encode())
+    return h.hexdigest()
+
+
+def ensure_replica(
+    sf_dir: str, scaled_dir: str, mult: int, generate, generator_file: str
+) -> bool:
+    """Reuse the replica in ``scaled_dir`` if it is complete and was
+    generated from these inputs, else call ``generate()`` to (re)write it.
+    Complete means ``events.parquet/_SUCCESS`` exists (events is the
+    generator's last write; a directory alone may be a killed run's
+    leftover), and the ``_SOURCE`` stamp, written only after a generation
+    finishes, must match ``_replica_fingerprint``. Returns True if reused."""
+    stamp = os.path.join(scaled_dir, "_SOURCE")
+    want = _replica_fingerprint(sf_dir, mult, generator_file)
+    try:
+        with open(stamp) as fh:
+            have = fh.read().strip()
+    except OSError:
+        have = None
+    done = os.path.isfile(os.path.join(scaled_dir, "events.parquet", "_SUCCESS"))
+    if have == want and done:
+        return True
+    if have is not None:
+        os.unlink(stamp)  # a crash mid-generation must not leave it valid
+    generate()
+    os.makedirs(scaled_dir, exist_ok=True)
+    with open(stamp, "w") as fh:
+        fh.write(want)
+    return False
 
 
 def _quiet_box_guard() -> dict:
@@ -230,14 +275,17 @@ def main() -> None:
                 % (os.path.basename(sf_dir.rstrip("/")) or "sf", mult),
             )
             gen_t0 = time.time()
-            # events.parquet is the generator's LAST write, so its
-            # presence marks a complete replica set; the replica is a
-            # deterministic function of sf_dir (shifted keys, per-replica
-            # word suffixes) — INPUT data, never a computed result.
-            reused = os.path.isdir(os.path.join(scaled_dir, "events.parquet"))
-            if not reused:
-                scale_check.SRC = sf_dir
-                scale_check.generate(spark, scaled_dir, mult)
+            # the replica is a deterministic function of sf_dir (shifted
+            # keys, per-replica word suffixes) — INPUT data, never a
+            # computed result
+            scale_check.SRC = sf_dir
+            reused = ensure_replica(
+                sf_dir,
+                scaled_dir,
+                mult,
+                lambda: scale_check.generate(spark, scaled_dir, mult),
+                scale_check.__file__,
+            )
             gen_sec = round(time.time() - gen_t0, 3)
             scaled_meta = {
                 "scaled_mult": mult,

@@ -20,10 +20,12 @@ HTTP round-trip; here lookups are joins).
 Run-report metrics (G5, dags/dreem.py:70-73,107-115) piggyback on the work
 that runs anyway: the state store observes its own write actions
 (``df.observe`` → no count-only jobs over state), and the upload stage
-observes its result frame on the materialising ``localCheckpoint``. The only
-extra action per resolve stage is a short-circuit ``isEmpty`` (``take(1)``)
-that lets an idle run skip the merge write entirely — on a 100 TB state
-table, an idle poll must not rewrite a partition.
+observes its result frame on the materialising ``localCheckpoint``. Each
+resolve/group stage computes its update set exactly once: one
+``plan_audit.materialize`` whose observed row count lets an idle run skip
+the merge write entirely (on a 100 TB state table, an idle poll must not
+rewrite a partition), and the merge then reads that materialised set
+instead of re-running the worklist joins.
 """
 
 from __future__ import annotations
@@ -34,6 +36,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .. import plan_audit
 from ..operators import filters
 from ..operators.grouping import assign_group_id
 from ..operators.joins import interval_containment_join
@@ -110,10 +113,17 @@ class DreemPipeline:
     # -- stages 2-3: lookup resolutions ---------------------------------------
 
     def _merge_resolved(self, resolved: DataFrame, set_cols: tuple[str, ...]) -> int:
-        """Shared merge step: short-circuit empty worklists (cheap take(1);
-        an idle run must not rewrite a state partition), else MERGE and
-        return the matched-row count the store observed on its write."""
-        if resolved.isEmpty():
+        """Shared merge step: compute the update set once, counting its
+        rows on that same action; skip an empty one (an idle run must not
+        rewrite a state partition), else MERGE the materialised set and
+        return the matched-row count the store observed on its write.
+        Under a plan audit ``materialize`` runs nothing, so there is no
+        count to skip on and the merge itself reports 0 for an empty set."""
+        obs = Observation()
+        resolved = plan_audit.materialize(
+            resolved.observe(obs, F.count(F.lit(1)).alias("n"))
+        )
+        if plan_audit.checkpoints_enabled() and int(obs.get["n"]) == 0:
             return 0
         return self.store.merge_non_overwrite(
             resolved, set_cols, partition_value=self.config.device_type

@@ -4,10 +4,13 @@ The reference follows a ``next`` cursor until null, 30 records per page. The
 Spark-native shape: a driver-side cursor walk that lands pages into a
 DataFrame with an explicit schema (pagination is inherently sequential — the
 cursor chain can't be parallelised), then everything downstream is
-distributed. At real scale the idiomatic variants are (a) land pages to
-object storage and ``spark.read.json`` them, or (b) a custom PySpark
-DataSource (Spark 4 ``spark.dataSource.register``) when the API supports
-range-partitioned reads. The fetcher is injected so tests and the mock vendor
+distributed. The pages land through Arrow: one object column per schema
+field, so the frame is a local relation and no Python worker runs to
+deserialise rows on any action over it. At real scale the idiomatic
+variants are (a) land pages to object storage and ``spark.read.json``
+them, or (b) a custom PySpark DataSource (Spark 4
+``spark.dataSource.register``) when the API supports range-partitioned
+reads. The fetcher is injected so tests and the mock vendor
 API plug in without HTTP.
 """
 
@@ -15,6 +18,7 @@ from __future__ import annotations
 
 from collections.abc import Callable, Iterator
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -28,14 +32,15 @@ class PaginatedRestSource:
     def __init__(
         self,
         fetch_page: FetchPage,
-        schema: StructType,
+        schema: StructType | str,
         max_pages: int | None = None,
         retry: RetryPolicy | None = None,
     ) -> None:
         """``retry`` applies the reference's transport contract
         (dmp.py:126-136 timeout tuple + bounded retries) around each page
         fetch; a page that still fails after exhaustion RAISES — a broken
-        scan must fail the run, not silently truncate the feed."""
+        scan must fail the run, not silently truncate the feed.
+        ``schema`` is a ``StructType`` or its DDL string."""
         self.fetch_page = (
             retrying(fetch_page, retry) if retry is not None else fetch_page
         )
@@ -53,7 +58,24 @@ class PaginatedRestSource:
                 return
 
     def load(self, spark: SparkSession) -> DataFrame:
-        return spark.createDataFrame(list(self._iter_rows()), self.schema)
+        """Every page's records as one frame of ``schema``: fields are
+        taken from each record by name (a missing key reads NULL, extra
+        keys are dropped). Object columns keep Python values as they are —
+        no float round trip for integers next to a missing value; a float
+        NaN lands as NULL (Arrow conversion masks it)."""
+        schema = (
+            StructType.fromDDL(self.schema)
+            if isinstance(self.schema, str)
+            else self.schema
+        )
+        rows = list(self._iter_rows())
+        pdf = pd.DataFrame(
+            {
+                f.name: pd.Series([r.get(f.name) for r in rows], dtype=object)
+                for f in schema.fields
+            }
+        )
+        return spark.createDataFrame(pdf, schema)
 
 
 def mock_dreem_api(

@@ -12,6 +12,15 @@ is the production path (this class is the fallback the test env needs — no
 delta-spark wheel here). The interface is MERGE-shaped so Delta slots in
 without touching callers.
 
+Schema: like Delta's commit log, every manifest carries the snapshot's
+schema — exactly what parquet ``mergeSchema`` would infer over the files the
+snapshot holds (fields merged by name across kept and written files, every
+field nullable, partition columns last). ``read()`` hands it to the reader,
+so opening a snapshot runs no footer-inference job. Every rewrite keeps the
+target's column order, so all part-files of a snapshot agree on it.
+Manifests written before the schema was recorded (and pointer-era stores)
+fall back to ``mergeSchema`` inference.
+
 Scale posture: snapshots are partitioned by ``device_type`` (the reference's
 every worklist predicate filters on it → partition pruning); updates join on
 the uniformly-distributed ``hash`` key (no skew); nothing is ever collected
@@ -40,10 +49,16 @@ import time
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    MapType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from .manifest import (
-    latest_manifest,
     manifest_path,
     put_manifest,
     read_manifest,
@@ -51,6 +66,55 @@ from .manifest import (
 
 _POINTER = "_CURRENT"  # legacy layout: pre-manifest stores only
 _META = "_meta"
+
+
+def _nullable(dt: DataType) -> DataType:
+    """``dt`` nullable at every level: a parquet read types what Spark
+    wrote that way (the writer stores every field as optional)."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [
+                StructField(f.name, _nullable(f.dataType), True, f.metadata)
+                for f in dt.fields
+            ]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def _merge_type(a: DataType, b: DataType, name: str) -> DataType:
+    """Parquet ``mergeSchema`` over two nullable types: structs merge by
+    field name (``a``'s fields in order, then the fields only ``b`` has),
+    anything else must be equal — where inference would fail the read,
+    the write fails before it lands."""
+    if isinstance(a, StructType) and isinstance(b, StructType):
+        bf = {f.name: f for f in b.fields}
+        fields = [
+            StructField(
+                f.name,
+                _merge_type(
+                    f.dataType,
+                    bf[f.name].dataType,
+                    f"{name}.{f.name}" if name else f.name,
+                )
+                if f.name in bf
+                else f.dataType,
+                True,
+                f.metadata,
+            )
+            for f in a.fields
+        ]
+        names = {f.name for f in a.fields}
+        return StructType(fields + [f for f in b.fields if f.name not in names])
+    if a != b:
+        raise ValueError(
+            f"state column {name!r} would mix {a.simpleString()} and "
+            f"{b.simpleString()} part-files; cast the batch to the state type"
+        )
+    return a
 
 
 class StateStore:
@@ -106,6 +170,9 @@ class StateStore:
         self.keep_versions = max(1, keep_versions)
         self.log_appends = log_appends
         self.cdc_mode = cdc_mode
+        # (version, schema) of the snapshot staged by the last write; its
+        # manifest records the schema when that version commits
+        self._staged_schema: tuple[str, StructType] | None = None
         os.makedirs(path, exist_ok=True)
 
     # -- snapshot mechanics ---------------------------------------------------
@@ -182,11 +249,14 @@ class StateStore:
     def read(self, version: str | None = None) -> DataFrame:
         """Read the current snapshot, or a retained historical one.
 
-        ``mergeSchema`` is on: after an additive schema evolution (an
-        ``append_new`` batch carrying new columns) a snapshot legitimately
-        mixes old-schema (hardlinked) and new-schema part-files; rows from
-        old files read NULL for the new columns. Cost: one footer read per
-        file — bounded by the compaction trigger keeping file counts low."""
+        The schema comes from the version's manifest, so the read runs no
+        Spark job. After an additive schema evolution (an ``append_new``
+        batch carrying new columns) a snapshot legitimately mixes
+        old-schema (hardlinked) and new-schema part-files; the recorded
+        schema is their merge, and rows from old files read NULL for the
+        new columns. A manifest without a schema (written before schemas
+        were recorded, or a pointer-era store) falls back to ``mergeSchema``
+        inference: one footer-read job over the snapshot's files."""
         version = version or self.current_version()
         if version is None:
             raise FileNotFoundError(f"state store at {self.path} not initialised")
@@ -195,18 +265,53 @@ class StateStore:
                 f"version {version} not retained (keep_versions="
                 f"{self.keep_versions}) or never committed"
             )
-        return self.spark.read.option("mergeSchema", "true").parquet(
-            self._snapshot_dir(version)
+        schema = self._recorded_schema(version)
+        reader = (
+            self.spark.read.schema(schema)
+            if schema is not None
+            else self.spark.read.option("mergeSchema", "true")
         )
+        return reader.parquet(self._snapshot_dir(version))
+
+    def _recorded_schema(self, version: str) -> StructType | None:
+        """The schema ``version``'s manifest records, if it records one."""
+        got = read_manifest(manifest_path(self._meta_dir(), int(version)))
+        schema = got[1].get("schema") if got else None
+        return StructType.fromJson(schema) if schema else None
+
+    def _stage_schema(
+        self, version: str, df: DataFrame, base: StructType | None
+    ) -> StructType:
+        """Record and return the schema ``version`` will commit: ``df``'s
+        (the files being written) merged into ``base`` (the files kept
+        from the current snapshot), partition columns last as partition
+        discovery appends them. A partition column keeps the type the
+        frame declares (inference would turn a numeric-looking directory
+        value into a number). Runs before the write, so a type conflict
+        fails with nothing written."""
+        schema = _nullable(df.schema)
+        if base is not None:
+            schema = _merge_type(_nullable(base), schema, "")
+        by_name = {f.name: f for f in schema.fields}
+        schema = StructType(
+            [f for f in schema.fields if f.name not in self.partition_by]
+            + [by_name[c] for c in self.partition_by if c in by_name]
+        )
+        self._staged_schema = (version, schema)
+        return schema
 
     def _write_snapshot(self, df: DataFrame) -> None:
         version = f"{time.time_ns()}"
         out = self._staging_dir(version)
+        schema = self._stage_schema(version, df, None)
         if df.isEmpty():
             # a partitionBy write of an empty frame emits NO files (no schema
             # footer) and the snapshot becomes unreadable; write one empty
-            # schema-bearing part file instead
-            df.repartition(1).write.mode("overwrite").parquet(out)
+            # schema-bearing part file instead, partition columns last like
+            # every partitioned snapshot
+            df.select(*schema.fieldNames()).repartition(1).write.mode(
+                "overwrite"
+            ).parquet(out)
         else:
             writer = df.write.mode("overwrite")
             if self.partition_by:
@@ -255,9 +360,14 @@ class StateStore:
         """THE commit point: one manifest PUT (no rename anywhere). The
         manifest id is the integer version itself — versions are monotone
         time_ns stamps, so the highest-id manifest IS the newest commit.
-        A legacy pointer file is retired on the first manifest commit."""
+        A legacy pointer file is retired on the first manifest commit.
+        The manifest records the schema the write staged for ``version``."""
         prev = self.current_version()
-        put_manifest(self._meta_dir(), int(version), {"version": version})
+        payload: dict = {"version": version}
+        staged, schema = self._staged_schema or (None, None)
+        if staged == version:
+            payload["schema"] = schema.jsonValue()
+        put_manifest(self._meta_dir(), int(version), payload)
         try:
             os.unlink(self._pointer_file())
         except OSError:
@@ -288,9 +398,13 @@ class StateStore:
         the object-store staging discipline (no rename exists there)."""
         return self._snapshot_dir(version)
 
-    def _write_uncommitted(self, df: DataFrame) -> tuple[str, str]:
+    def _write_uncommitted(
+        self, df: DataFrame, base: StructType | None = None
+    ) -> tuple[str, str]:
         """Write ``df`` as the next snapshot's data files WITHOUT
-        committing. The files land in the final ``v_<version>`` dir but no
+        committing. ``base`` is the schema of the current snapshot whose
+        files the commit will keep alongside (None: ``df`` is all of it).
+        The files land in the final ``v_<version>`` dir but no
         manifest references it — invisible to ``versions()`` /
         ``read(version)`` and to GC retention accounting — so a crash
         between write and commit can never expose a partial snapshot or
@@ -299,6 +413,7 @@ class StateStore:
         (no-op run — the state is unchanged, so no version is published)."""
         version = f"{time.time_ns()}"
         out = self._staging_dir(version)
+        self._stage_schema(version, df, base)
         writer = df.write.mode("overwrite")
         if self.partition_by:
             writer = writer.partitionBy(*self.partition_by)
@@ -334,18 +449,19 @@ class StateStore:
                     dst = os.path.join(dst_dir, f"linked-{fn}")
                 os.link(os.path.join(root, fn), dst)
 
-    def _append_files(self, fresh: DataFrame) -> int:
+    def _append_files(self, fresh: DataFrame, base: StructType) -> int:
         """O(delta) insert: write ONLY the new rows as part-files into the
         next snapshot and hardlink every current file alongside them —
         snapshot = old files + delta files, the manifest being the directory
         tree itself. At 100 TB an ingest of a few thousand rows costs a few
         part-files, never a table rewrite (reference contract: per-document
         inserts, db.py:88-96). Returns rows inserted (observed on the write
-        itself — no separate count job); an empty delta publishes nothing."""
+        itself — no separate count job); an empty delta publishes nothing.
+        ``base`` is the current snapshot's schema."""
         old_dir = self._snapshot_dir(self.current_version())
         obs = Observation()
         version, out = self._write_uncommitted(
-            fresh.observe(obs, F.count(F.lit(1)).alias("n"))
+            fresh.observe(obs, F.count(F.lit(1)).alias("n")), base
         )
         n = int(obs.get["n"])
         if n == 0:
@@ -602,10 +718,13 @@ class StateStore:
                 incoming = incoming.withColumn(
                     f.name, F.lit(None).cast(f.dataType)
                 )
+        # state columns in state order, then the batch's new ones: every
+        # part-file of the snapshot agrees on column order
+        new_cols = [c for c in incoming.columns if c not in state.columns]
         fresh = incoming.join(
             state.select(self.key), on=self.key, how="left_anti"
-        )
-        return self._append_files(fresh)
+        ).select(*state.columns, *new_cols)
+        return self._append_files(fresh, state.schema)
 
     def merge_non_overwrite(
         self,
@@ -661,8 +780,9 @@ class StateStore:
         )
         for c in set_cols:
             merged = merged.withColumn(c, F.coalesce(F.col(c), F.col(f"__new_{c}")))
-        merged = merged.drop(*[f"__new_{c}" for c in set_cols], "__matched")
-        version, out = self._write_uncommitted(merged)
+        # the key-first join output back in the target's column order
+        merged = merged.select(*target.columns)
+        version, out = self._write_uncommitted(merged, state.schema)
         n = int(obs.get["n_matched"])
         if n == 0:
             self._discard(out)
@@ -799,7 +919,7 @@ class StateStore:
             .filter(F.col("__keep"))
             .drop("__upd", "__ins", "__keep", "__dup")
         )
-        version, out = self._write_uncommitted(merged)
+        version, out = self._write_uncommitted(merged, state.schema)
         m = obs.get
         if int(m["n_dup_src"]) > 0:
             self._discard(out)
@@ -946,11 +1066,10 @@ class StateStore:
             pdir = f"{self.partition_by[0]}={partition_value}"
             if counts.get(pdir, 0) < min_files:
                 return 0
-            part = self.read().filter(
-                F.col(self.partition_by[0]) == partition_value
-            )
+            state = self.read()
+            part = state.filter(F.col(self.partition_by[0]) == partition_value)
             version, out = self._write_uncommitted(
-                part.repartition(target_partitions)
+                part.repartition(target_partitions), state.schema
             )
             self._link_other_partitions(out, partition_value)
             self._commit(version, out)
@@ -967,9 +1086,10 @@ class StateStore:
             ]
             if not frag_vals:
                 return 0
-            part = self.read().filter(F.col(pcol).isin(frag_vals))
+            state = self.read()
+            part = state.filter(F.col(pcol).isin(frag_vals))
             version, out = self._write_uncommitted(
-                part.repartition(target_partitions)
+                part.repartition(target_partitions), state.schema
             )
             # non-fragmented partitions ride along as hardlinks
             old_dir = self._snapshot_dir(self.current_version())
@@ -1003,7 +1123,9 @@ class StateStore:
             stacklevel=2,
         )
         state = self.read()
-        kept = state.join(keys.select(self.key), on=self.key, how="left_anti")
+        kept = state.join(
+            keys.select(self.key), on=self.key, how="left_anti"
+        ).select(*state.columns)
         removed = state.count() - kept.count()
         if removed:
             self._write_snapshot(kept)
@@ -1050,9 +1172,10 @@ class StateStore:
                     F.col("is_uploaded")
                 ),
             )
-            .drop("__up")
+            # the dmp_id-first join output back in the target's order
+            .select(*target.columns)
         )
-        version, out = self._write_uncommitted(merged)
+        version, out = self._write_uncommitted(merged, state.schema)
         n = int(obs.get["n_flipped"])
         if n == 0:
             self._discard(out)
