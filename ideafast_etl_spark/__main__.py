@@ -123,22 +123,23 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> di
     def assignments():
         return spark.read.parquet(args.assignments)
 
-    report: dict = {}
-    if args.stage in ("ingest", "all"):
-        report["ingested"] = pipe.ingest(api())
-    if args.stage in ("serial", "all"):
-        report["serials"] = pipe.resolve_serial(uid_map())
-    if args.stage in ("device", "all"):
-        report["devices"] = pipe.resolve_device_id(serial_map())
-    if args.stage in ("patient", "all"):
-        report["patients"] = pipe.resolve_patient(assignments())
-    if args.stage in ("group", "all"):
-        report["grouped"] = pipe.group_records()
-    if args.stage in ("upload", "all"):
-        ok, fail, conflicts = pipe.upload()
-        report["uploaded_ok"] = ok
-        report["uploaded_fail"] = fail
-        report["upload_conflicts"] = conflicts
+    # `all` is one scheduled run: stages 2-5 in one pass, then upload and
+    # the run-end compaction; a single stage is that pass for its own rung
+    stages = {
+        "ingest": lambda: {"ingested": pipe.ingest(api())},
+        "serial": lambda: {"serials": pipe.resolve_serial(uid_map())},
+        "device": lambda: {"devices": pipe.resolve_device_id(serial_map())},
+        "patient": lambda: {"patients": pipe.resolve_patient(assignments())},
+        "group": lambda: {"grouped": pipe.group_records()},
+        "upload": lambda: {"uploaded": pipe.upload()},
+        "all": lambda: pipe.run(api(), uid_map(), serial_map(), assignments()),
+    }
+    report = stages[args.stage]()
+    if "uploaded" in report:
+        ok, fail, conflicts = report.pop("uploaded")
+        report.update(
+            uploaded_ok=ok, uploaded_fail=fail, upload_conflicts=conflicts
+        )
     print(json.dumps(report))
     return report
 

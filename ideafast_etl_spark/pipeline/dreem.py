@@ -3,36 +3,45 @@ the reference's 7-task Airflow DAG (dags/dreem.py:299-307) as one PySpark
 application over a state table. Stages (task 7, cleanup, is temp-dir
 lifecycle handled by the store):
 
-  1. ingest        — REST scan → shape (P2) → anti-join dedup (J1) → insert
-  2. resolve_serial — F2 worklist × uid_map broadcast join (J2) → MERGE
-  3. resolve_device — F1 worklist × serial_map broadcast join (J3) → MERGE
-  4. resolve_patient — F3 worklist × interval-containment join (J4) → MERGE
-  5. group          — F5 worklist → day-window bucket + dmp_id key (G1) → MERGE
-  6. upload         — F6 groups → executor-side upload sink (K8) → flag (K6)
+  1. ingest          — REST scan → shape (P2) → anti-join dedup (J1) → insert
+  2. resolve_serial  — F2 rung × uid_map broadcast join (J2)
+  3. resolve_device  — F1 rung × serial_map broadcast join (J3)
+  4. resolve_patient — F3 rung × interval-containment join (J4)
+  5. group           — F5 rung → day-window bucket + dmp_id (G1)
+  6. upload          — F6 groups → executor-side upload sink (K8) → flag (K6)
 
-Every MERGE is non-overwriting (db.py:97-125); every stage re-selects its
-worklist by NULL-rung predicate, so unresolved rows retry next run (late
-data, §2.11). Per-run ``limits`` replicate the reference's backpressure knobs
-(L1, dags/dreem.py:254-287); the default is unlimited, which is the correct
-Spark posture (the limits exist in the reference because each record costs an
-HTTP round-trip; here lookups are joins).
+Stages 2-5 are one update set and one commit. The reference runs them as
+four tasks that each write back to the store; here they are one plan: the
+state is read once, each rung fills only the rows its own NULL-rung
+predicate selects on the previous rung's output, and the result is
+committed by ONE non-overwriting MERGE (db.py:97-125). That commit is the
+only write of the pass, so a crash anywhere in it leaves the state exactly
+as it was. The stage methods stay public — the CLI's ``--stage``, the
+Airflow task specs and tests address them — and each is the same pass
+restricted to its own rung. Unresolved rows keep their rung NULL and are
+re-selected next run (late data, §2.11). Per-run ``limits`` replicate the
+reference's backpressure knobs (L1, dags/dreem.py:254-287), capping each
+rung's fills at its lowest-``hash`` rows; the default is unlimited, which
+is the correct Spark posture (the limits exist in the reference because
+each record costs an HTTP round-trip; here lookups are joins).
 
 Run-report metrics (G5, dags/dreem.py:70-73,107-115) piggyback on the work
 that runs anyway: the state store observes its own write actions
-(``df.observe`` → no count-only jobs over state), and the upload stage
-observes its result frame on the materialising ``localCheckpoint``. Each
-resolve/group stage computes its update set exactly once: one
-``plan_audit.materialize`` whose observed row count lets an idle run skip
-the merge write entirely (on a 100 TB state table, an idle poll must not
-rewrite a partition), and the merge then reads that materialised set
-instead of re-running the worklist joins.
+(``df.observe`` → no count-only jobs over state), the resolution pass
+observes its per-rung counts on the one ``plan_audit.materialize`` of its
+update set — whose fill count lets an idle run skip the merge write
+entirely (on a 100 TB state table, an idle poll must not rewrite a
+partition) — and the upload stage observes its result frame on the
+materialising ``localCheckpoint``.
 """
 
 from __future__ import annotations
 
+import functools
+import operator
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -49,7 +58,9 @@ from ..state.store import StateStore
 class PipelineConfig:
     device_type: str = "DRM"
     cut_off_time: str = "12:00:00"
-    # per-run batch caps; None = unlimited (reference: 15/15/15/15/-/1)
+    # per-run batch caps; None = unlimited (reference: 15/15/15/15/-/1).
+    # serial/device/patient bound the rows that rung fills per run, the
+    # lowest hashes first; upload bounds the groups uploaded
     limits: dict[str, int | None] = field(
         default_factory=lambda: {
             "ingest": None,
@@ -78,6 +89,56 @@ def _limit(df: DataFrame, n: int | None) -> DataFrame:
     # `is not None`, not truthiness: limit=0 means "process nothing",
     # not "unlimited"
     return df.limit(n) if n is not None else df
+
+
+# rung, by its run-report key -> the state column it fills
+_SET_COL = {
+    "serials": "device_serial",
+    "devices": "device_id",
+    "patients": "patient_id",
+    "grouped": "dmp_id",
+}
+# lookup rung -> (the dimension it reads, that dimension's key column)
+_LOOKUP = {
+    "serials": ("uid_map", "dreem_uid"),
+    "devices": ("serial_map", "device_serial"),
+}
+
+
+def _sum(flag: Column) -> Column:
+    return F.coalesce(F.sum(flag.cast("long")), F.lit(0))
+
+
+def _cap(df: DataFrame, hit: str, n: int | None, last: Column | None = None) -> DataFrame:
+    """Keep ``hit`` true on at most ``n`` rows (None = unlimited, 0 =
+    none): the lowest ``hash`` values, after those ``last`` puts last. A
+    total order, so the pick is the same however often the plan runs
+    (``limit`` on an unordered frame may pick different rows each time)."""
+    if n is None:
+        return df
+    order = ([last.asc()] if last is not None else []) + [F.col("hash")]
+    rank = F.row_number().over(Window.partitionBy(hit).orderBy(*order))
+    return df.withColumn(hit, F.col(hit) & (rank <= n))
+
+
+def _lookup(
+    cur: DataFrame, rung: str, needs: Column, dim: DataFrame, key: Column,
+    limit: int | None,
+) -> DataFrame:
+    """One broadcast-lookup rung: on the rows ``needs`` selects whose
+    ``key`` the dimension lists, set the rung's column to the listed value
+    (also when that is NULL — the row counts as resolved but keeps its
+    NULL). Rows the cap passes over keep their value for a later run."""
+    col, hit = _SET_COL[rung], f"__hit_{rung}"
+    k, v = f"__key_{rung}", f"__value_{rung}"
+    one = dim.select(F.col(_LOOKUP[rung][1]).alias(k), F.col(col).alias(v))
+    out = cur.join(F.broadcast(one), key == F.col(k), "left").withColumn(
+        hit, needs & F.col(k).isNotNull()
+    )
+    out = _cap(out, hit, limit, last=F.col(v).isNull())
+    return out.withColumn(
+        col, F.when(F.col(hit), F.col(v)).otherwise(F.col(col))
+    ).drop(k, v)
 
 
 class DreemPipeline:
@@ -110,73 +171,152 @@ class DreemPipeline:
         shaped = _limit(shaped, self.config.limits.get("ingest"))
         return self.store.append_new(shaped)
 
-    # -- stages 2-3: lookup resolutions ---------------------------------------
+    # -- stages 2-5: one resolution pass -------------------------------------
 
-    def _merge_resolved(self, resolved: DataFrame, set_cols: tuple[str, ...]) -> int:
-        """Shared merge step: compute the update set once, counting its
-        rows on that same action; skip an empty one (an idle run must not
-        rewrite a state partition), else MERGE the materialised set and
-        return the matched-row count the store observed on its write.
-        Under a plan audit ``materialize`` runs nothing, so there is no
-        count to skip on and the merge itself reports 0 for an empty set."""
+    def _resolve(
+        self,
+        uid_map: DataFrame | None = None,
+        serial_map: DataFrame | None = None,
+        assignments: DataFrame | None = None,
+        group: bool = False,
+    ) -> dict[str, int]:
+        """Stages 2-5 as one update set and one commit. The rungs run in
+        DAG order over one read of the state — the rows of this pipeline's
+        partition that any given rung selects — each filling only the rows
+        its own predicate selects on the previous rung's output:
+
+          serial  — ``uid_map`` broadcast on ``meta.dreem_uid`` (DRM-gated)
+          device  — ``serial_map`` broadcast on the filled serial
+          patient — ``assignments`` interval containment on the filled device
+          group   — day-window ``dmp_id`` on the filled patient
+
+        A rung whose input is None (``group`` False) is left out. Returns
+        the rows each given rung resolved under its run-report key
+        (``serials``, ``devices``, ``patients``, ``grouped``): a lookup rung
+        counts the rows whose key its dimension lists (also when it maps
+        to NULL), the patient rung its non-NULL matches, the group rung
+        every row it keys. ``limits`` caps the serial, device and patient
+        rungs per run (lowest ``hash`` first).
+
+        The update set is computed once (``plan_audit.materialize``) and
+        the rung counts are observed on that action. When no rung filled a
+        value the merge is skipped (an idle run must not rewrite a
+        partition); otherwise ONE non-overwriting MERGE commits every rung.
+        A dimension key listed more than once repeats the rows that look it
+        up; the merge refuses them with a ``ValueError`` that names the
+        dimension, and nothing is committed."""
+        dt = self.config.device_type
+        limits = self.config.limits
+        needs = {
+            "serials": filters.needs_serial(),
+            "devices": filters.needs_device_id(dt),
+            "patients": filters.needs_patient(dt),
+            "grouped": filters.needs_grouping(dt),
+        }
+        dims = {"serials": uid_map, "devices": serial_map}
+        given = (
+            uid_map is not None, serial_map is not None, assignments is not None, group
+        )
+        rungs = [r for r, on in zip(needs, given) if on]
+        # the worklist: any row a rung fills was selected by that rung's or
+        # an earlier rung's predicate on the state as read
+        cur = self.store.read().filter(
+            (F.col("device_type") == dt)
+            & functools.reduce(operator.or_, [needs[r] for r in rungs])
+        )
+        if uid_map is not None:
+            cur = _lookup(
+                cur, "serials", needs["serials"], uid_map, F.col("meta.dreem_uid"),
+                limits.get("serial"),
+            )
+        if serial_map is not None:
+            cur = _lookup(
+                cur, "devices", needs["devices"], serial_map, F.col("device_serial"),
+                limits.get("device"),
+            )
+        if assignments is not None:
+            # the join replaces patient_id by the match; keep the row's own
+            joined = interval_containment_join(
+                cur.withColumn("__want", needs["patients"])
+                .withColumnRenamed("patient_id", "__patient"),
+                assignments.select("device_id", "patient_id", "start_wear", "end_wear"),
+                order_cols=("start_wear", "patient_id"),
+                bucket_days=self.config.interval_bucket_days,
+            ).withColumn(
+                "__hit_patients",
+                F.col("__want") & F.col("patient_id").isNotNull(),
+            )
+            cur = _cap(joined, "__hit_patients", limits.get("patient")).withColumn(
+                "patient_id",
+                F.when(F.col("__hit_patients"), F.col("patient_id")).otherwise(
+                    F.col("__patient")
+                ),
+            )
+        if group:
+            # deliberately unlimited (db.py:200: "avoid data gaps")
+            cur = assign_group_id(
+                cur.withColumn("__hit_grouped", needs["grouped"]),
+                cut_off=self.config.cut_off_time,
+                ts_col="start",
+                out_col="__dmp_id",
+            ).withColumn(
+                "dmp_id",
+                F.when(F.col("__hit_grouped"), F.col("__dmp_id")).otherwise(
+                    F.col("dmp_id")
+                ),
+            )
+        set_cols = tuple(_SET_COL[r] for r in rungs)
+        hits = {r: F.col(f"__hit_{r}") for r in rungs}
+        filled = [hits[r] & F.col(_SET_COL[r]).isNotNull() for r in rungs]
         obs = Observation()
-        resolved = plan_audit.materialize(
-            resolved.observe(obs, F.count(F.lit(1)).alias("n"))
+        counted = cur.select("hash", *set_cols, *hits.values()).observe(
+            obs,
+            *[_sum(h).alias(r) for r, h in hits.items()],
+            _sum(functools.reduce(operator.or_, filled)).alias("filled"),
         )
-        if plan_audit.checkpoints_enabled() and int(obs.get["n"]) == 0:
-            return 0
-        return self.store.merge_non_overwrite(
-            resolved, set_cols, partition_value=self.config.device_type
+        # rows a rung matched to NULL ride along (a no-op fill), so a
+        # duplicated dimension key always reaches the merge's guard
+        updates = plan_audit.materialize(
+            counted.filter(functools.reduce(operator.or_, hits.values())).select(
+                "hash", *set_cols
+            )
         )
+        if not plan_audit.checkpoints_enabled():
+            counted.count()  # a plan audit materialises nothing to observe
+        m = obs.get
+        if m["filled"]:
+            try:
+                self.store.merge_non_overwrite(updates, set_cols, partition_value=dt)
+            except ValueError as e:
+                for r, dim in dims.items():
+                    name, key = _LOOKUP[r]
+                    if dim is not None and dim.groupBy(key).count().filter(
+                        F.col("count") > 1
+                    ).take(1):
+                        raise ValueError(
+                            f"{name} lists a {key} more than once; "
+                            "nothing was committed"
+                        ) from e
+                raise
+        return {r: int(m[r]) for r in rungs}
 
     def resolve_serial(self, uid_map: DataFrame) -> int:
         """uid_map(dreem_uid, device_serial); fills device_serial where NULL."""
-        work = filters.needing_serial(self.store.read())
-        work = _limit(work, self.config.limits.get("serial"))
-        resolved = work.select(
-            "hash", F.col("meta.dreem_uid").alias("dreem_uid")
-        ).join(F.broadcast(uid_map), "dreem_uid").select("hash", "device_serial")
-        return self._merge_resolved(resolved, ("device_serial",))
+        return self._resolve(uid_map=uid_map)["serials"]
 
     def resolve_device_id(self, serial_map: DataFrame) -> int:
         """serial_map(device_serial, device_id); fills device_id where NULL."""
-        work = filters.needing_device_id(self.store.read(), self.config.device_type)
-        work = _limit(work, self.config.limits.get("device"))
-        resolved = work.select("hash", "device_serial").join(
-            F.broadcast(serial_map), "device_serial"
-        ).select("hash", "device_id")
-        return self._merge_resolved(resolved, ("device_id",))
-
-    # -- stage 4: interval join -----------------------------------------------
+        return self._resolve(serial_map=serial_map)["devices"]
 
     def resolve_patient(self, assignments: DataFrame) -> int:
         """assignments(device_id, patient_id, start_wear, end_wear);
         interval-containment first-match (J4) fills patient_id."""
-        work = filters.needing_patient(self.store.read(), self.config.device_type)
-        work = _limit(work, self.config.limits.get("patient"))
-        joined = interval_containment_join(
-            work.select("hash", "device_id", "start", "end"),
-            assignments,
-            order_cols=("start_wear", "patient_id"),
-            bucket_days=self.config.interval_bucket_days,
-        )
-        resolved = joined.filter(F.col("patient_id").isNotNull()).select(
-            "hash", "patient_id"
-        )
-        return self._merge_resolved(resolved, ("patient_id",))
-
-    # -- stage 5: grouping ----------------------------------------------------
+        return self._resolve(assignments=assignments)["patients"]
 
     def group_records(self) -> int:
         """Day-window bucket + dmp_id for every fully-resolved row.
         Deliberately unlimited (db.py:200: 'avoid data gaps')."""
-        work = filters.needing_grouping(self.store.read(), self.config.device_type)
-        grouped = assign_group_id(
-            work.select("hash", "device_id", "patient_id", "start"),
-            cut_off=self.config.cut_off_time,
-            ts_col="start",
-        ).select("hash", "dmp_id")
-        return self._merge_resolved(grouped, ("dmp_id",))
+        return self._resolve(group=True)["grouped"]
 
     # -- stage 6: upload ------------------------------------------------------
 
@@ -268,10 +408,7 @@ class DreemPipeline:
         q.awaitTermination()
         return {
             "ingested": sum(batch_counts),
-            "serials": self.resolve_serial(uid_map),
-            "devices": self.resolve_device_id(serial_map),
-            "patients": self.resolve_patient(assignments),
-            "grouped": self.group_records(),
+            **self._resolve(uid_map, serial_map, assignments, group=True),
             "uploaded": self.upload(),
         }
 
@@ -303,10 +440,7 @@ class DreemPipeline:
 
         def _stages() -> dict:
             return {
-                "serials": self.resolve_serial(uid_map),
-                "devices": self.resolve_device_id(serial_map),
-                "patients": self.resolve_patient(assignments),
-                "grouped": self.group_records(),
+                **self._resolve(uid_map, serial_map, assignments, group=True),
                 "uploaded": self.upload(),
             }
 
@@ -369,10 +503,7 @@ class DreemPipeline:
         run-end small-file maintenance keeps scans fast across many runs."""
         return {
             "ingested": self.ingest(raw_api_rows),
-            "serials": self.resolve_serial(uid_map),
-            "devices": self.resolve_device_id(serial_map),
-            "patients": self.resolve_patient(assignments),
-            "grouped": self.group_records(),
+            **self._resolve(uid_map, serial_map, assignments, group=True),
             "uploaded": self.upload(),
             "compacted": self.maintain(),
         }

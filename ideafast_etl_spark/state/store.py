@@ -749,6 +749,12 @@ class StateStore:
         Returns the number of target rows matched by an update (observed on
         the write action itself — no separate count job). A merge that
         matches nothing publishes no new version.
+
+        Like ``merge``, an update set that lists a matched key more than
+        once raises ``ValueError`` and publishes nothing (a left join would
+        otherwise repeat the target row). The check rides the same write:
+        the target rows observed going into the join against the rows
+        coming out of it.
         """
         self.recover()
         selective = partition_value is not None and len(self.partition_by) == 1
@@ -768,22 +774,38 @@ class StateStore:
         )
         if broadcast_updates:
             upd = F.broadcast(upd)
-        obs = Observation()
-        # observe at the ROOT of the written plan: metrics survive AQE
-        # empty-relation pruning (an observe on an empty broadcast side
-        # would be optimised away and never fire)
-        merged = target.join(upd, on=self.key, how="left").observe(
+        obs, obs_target = Observation(), Observation()
+        # observe the counts at the ROOT of the written plan: metrics
+        # survive AQE empty-relation pruning (an observe on an empty
+        # broadcast side would be optimised away and never fire); the
+        # target's own row count rides its scan, the join's probe side
+        merged = target.observe(obs_target, F.count(F.lit(1)).alias("n")).join(
+            upd, on=self.key, how="left"
+        ).observe(
             obs,
             F.coalesce(
                 F.sum(F.col("__matched").cast("long")), F.lit(0)
             ).alias("n_matched"),
+            F.count(F.lit(1)).alias("n_out"),
         )
         for c in set_cols:
             merged = merged.withColumn(c, F.coalesce(F.col(c), F.col(f"__new_{c}")))
         # the key-first join output back in the target's column order
         merged = merged.select(*target.columns)
         version, out = self._write_uncommitted(merged, state.schema)
-        n = int(obs.get["n_matched"])
+        m = obs.get
+        # an update key listed twice repeats its target row; with no
+        # output rows there is nothing to repeat (and a shuffled join over
+        # an empty target may have pruned the target-side observe)
+        n_out = int(m["n_out"])
+        if n_out and n_out != int(obs_target.get["n"]):
+            self._discard(out)
+            raise ValueError(
+                f"merge_non_overwrite updates repeat a key (key column "
+                f"{self.key!r}): a target row matched more than once; "
+                "nothing was committed"
+            )
+        n = int(m["n_matched"])
         if n == 0:
             self._discard(out)
             return 0

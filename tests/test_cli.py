@@ -41,6 +41,8 @@ def test_cli_full_run_then_single_stage(spark, tmp_path):
     assert report["ingested"] == 30
     assert report["serials"] == 30
     assert report["uploaded_ok"] + report["uploaded_fail"] >= 1
+    # `all` is DreemPipeline.run: its run-end compaction check reports too
+    assert report["compacted"] == 0
 
     # single-stage re-run: nothing left to group
     report2 = main(["--state-dir", state, "--stage", "group"], spark=spark)

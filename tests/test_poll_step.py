@@ -1,10 +1,10 @@
 """One pass per poll step: each stage computes its update set once, and
 the REST source lands its pages through Arrow.
 
-``DreemPipeline._merge_resolved`` materialises a stage's update set and
-counts it on that same action; under a plan audit ``materialize`` is an
-identity, so the stage must still return the right count without waiting
-for a count that never arrives. ``PaginatedRestSource.load`` must return
+``DreemPipeline._resolve`` materialises a pass's update set and counts it
+on that same action; under a plan audit ``materialize`` is an identity, so
+the stage must still return the right count without waiting for a count
+that never arrives. ``PaginatedRestSource.load`` must return
 exactly what ``createDataFrame(list_of_dicts, schema)`` returned, without
 running a Python-worker job.
 """
