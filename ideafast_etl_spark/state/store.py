@@ -26,10 +26,16 @@ every worklist predicate filters on it → partition pruning); updates join on
 the uniformly-distributed ``hash`` key (no skew); nothing is ever collected
 to the driver. Writes are O(delta), not O(table): ``append_new`` adds only
 the new rows' part-files (every existing file is hardlinked into the next
-snapshot), and ``merge_non_overwrite`` / ``mark_uploaded`` with a
-``partition_value`` rewrite only the affected partition — mirroring the
-reference's per-document Mongo updates (db.py:88-125), where a 15-row ingest
-never touches the rest of the collection.
+snapshot), and a row rewrite scoped to a ``partition_value`` rewrites only
+the affected partition — mirroring the reference's per-document Mongo
+updates (db.py:88-125), where a 15-row ingest never touches the rest of the
+collection.
+
+One write path: every row-rewriting transition (``merge_non_overwrite``,
+``mark_uploaded``, ``merge``, ``compact``, ``_quarantined_delete``) is a
+plan plus an observed-count decision handed to ``_rewrite``, which alone
+runs recover → scope → write → decide → link → commit. ``append_new``'s
+file-level append is the one other commit (it writes only the delta).
 
 Concurrency contract: SINGLE WRITER. Transitions are read-modify-write with
 no lock; two concurrent writers would silently lose one side's updates
@@ -46,6 +52,7 @@ from __future__ import annotations
 import os
 import shutil
 import time
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -302,7 +309,7 @@ class StateStore:
 
     def _write_snapshot(self, df: DataFrame) -> None:
         version = f"{time.time_ns()}"
-        out = self._staging_dir(version)
+        out = self._snapshot_dir(version)
         schema = self._stage_schema(version, df, None)
         if df.isEmpty():
             # a partitionBy write of an empty frame emits NO files (no schema
@@ -376,27 +383,20 @@ class StateStore:
         # in-flight readers of the old version don't lose files mid-scan
         self._gc(keep=(version, prev) if prev else (version,))
 
-    def _link_other_partitions(self, out: str, partition_value: str) -> None:
-        """Hardlink every partition EXCEPT ``partition_value`` from the
-        current snapshot into ``out`` — the selective-rewrite half of an
-        O(affected partition) merge. At 100 TB a stage that touches one
-        device_type must not rewrite the other ten."""
-        assert len(self.partition_by) == 1
+    def _link_partitions_except(self, out: str, values: list[str]) -> None:
+        """Hardlink every partition EXCEPT ``values`` of the single
+        partition column from the current snapshot into ``out`` — the
+        selective-rewrite half of an O(affected partition) rewrite. At
+        100 TB a stage that touches one device_type must not rewrite the
+        other ten."""
         pcol = self.partition_by[0]
         old_dir = self._snapshot_dir(self.current_version())
-        skip = f"{pcol}={partition_value}"
+        skip = {f"{pcol}={v}" for v in values}
         for entry in os.listdir(old_dir):
             src = os.path.join(old_dir, entry)
-            if not os.path.isdir(src) or entry == skip or not entry.startswith(f"{pcol}="):
+            if not os.path.isdir(src) or entry in skip or not entry.startswith(f"{pcol}="):
                 continue
             self._link_tree(src, os.path.join(out, entry))
-
-    def _staging_dir(self, version: str) -> str:
-        """The next snapshot's data dir IS its final ``v_<version>`` dir:
-        unreferenced by any manifest, it is invisible to ``versions()`` /
-        ``read()`` / GC retention until ``_commit`` PUTs the manifest —
-        the object-store staging discipline (no rename exists there)."""
-        return self._snapshot_dir(version)
 
     def _write_uncommitted(
         self, df: DataFrame, base: StructType | None = None
@@ -406,13 +406,14 @@ class StateStore:
         files the commit will keep alongside (None: ``df`` is all of it).
         The files land in the final ``v_<version>`` dir but no
         manifest references it — invisible to ``versions()`` /
-        ``read(version)`` and to GC retention accounting — so a crash
+        ``read(version)`` and to GC retention accounting (the object-store
+        staging discipline: no rename exists there) — so a crash
         between write and commit can never expose a partial snapshot or
         eat a retention slot. Callers inspect their Observation after this
         action and either ``_commit`` (manifest PUT) or ``_discard``
         (no-op run — the state is unchanged, so no version is published)."""
         version = f"{time.time_ns()}"
-        out = self._staging_dir(version)
+        out = self._snapshot_dir(version)
         self._stage_schema(version, df, base)
         writer = df.write.mode("overwrite")
         if self.partition_by:
@@ -448,6 +449,91 @@ class StateStore:
                 if os.path.exists(dst):
                     dst = os.path.join(dst_dir, f"linked-{fn}")
                 os.link(os.path.join(root, fn), dst)
+
+    def _scope(self, partition_value: str | None) -> list[str] | None:
+        """The partition values a transition given ``partition_value``
+        rewrites: that one value when the store has a single partition
+        column, else None — the whole table."""
+        if partition_value is None or len(self.partition_by) != 1:
+            return None
+        return [partition_value]
+
+    def _rewrite(
+        self,
+        build: Callable[
+            [DataFrame, DataFrame], tuple[DataFrame, Callable[[], tuple[Any, bool]]]
+        ],
+        partition_values: list[str] | None = None,
+    ) -> Any:
+        """THE write path of every row-rewriting transition (the
+        snapshot-store analog of the reference's per-document updates,
+        db.py:88-125): ``recover()``; read the snapshot once and scope it
+        to ``partition_values`` of the single partition column (None: the
+        whole table); let ``build(state, target)`` plan the replacement
+        rows of that scope and write them uncommitted; then ask the
+        outcome ``build`` returned for ``(result, changed)`` — it reads
+        Observations that rode that write, so no count job runs. An
+        exception there discards the write and re-raises; nothing changed
+        discards it and publishes no version. Otherwise every partition
+        outside the scope is hardlinked in and one manifest PUT commits.
+        Returns ``result``."""
+        self.recover()
+        state = self.read()
+        target = state
+        if partition_values is not None:
+            target = state.filter(F.col(self.partition_by[0]).isin(*partition_values))
+        rows, outcome = build(state, target)
+        version, out = self._write_uncommitted(rows, state.schema)
+        try:
+            result, changed = outcome()
+        except BaseException:
+            self._discard(out)
+            raise
+        if not changed:
+            self._discard(out)
+            return result
+        if partition_values is not None:
+            self._link_partitions_except(out, partition_values)
+        self._commit(version, out)
+        return result
+
+    def _keyed_join(
+        self, target: DataFrame, updates: DataFrame, on: str, hit: F.Column
+    ) -> tuple[DataFrame, Callable[[], tuple[int, bool]]]:
+        """``target`` left-joined to the broadcast ``updates`` on ``on``,
+        and the outcome for ``_rewrite``: the number of joined rows where
+        ``hit`` holds, and whether that is any. An update set listing a
+        matched key more than once would repeat the target row, so the
+        outcome raises ``ValueError`` instead — the target rows observed
+        going into the join against the rows coming out of it. Counts are
+        observed at the ROOT of the written plan, where metrics survive
+        AQE empty-relation pruning (an observe on an empty broadcast side
+        would be optimised away and never fire); the target's own row
+        count rides its scan, the join's probe side."""
+        obs, obs_target = Observation(), Observation()
+        joined = target.observe(obs_target, F.count(F.lit(1)).alias("n")).join(
+            F.broadcast(updates), on=on, how="left"
+        ).observe(
+            obs,
+            F.coalesce(F.sum(hit.cast("long")), F.lit(0)).alias("n_hit"),
+            F.count(F.lit(1)).alias("n_out"),
+        )
+
+        def outcome() -> tuple[int, bool]:
+            m = obs.get
+            # a repeated key repeats its target row; with no output rows
+            # there is nothing to repeat (and a shuffled join over an
+            # empty target may have pruned the target-side observe)
+            n_out = int(m["n_out"])
+            if n_out and n_out != int(obs_target.get["n"]):
+                raise ValueError(
+                    f"updates repeat a key (key column {on!r}): a target "
+                    "row matched more than once; nothing was committed"
+                )
+            n = int(m["n_hit"])
+            return n, n > 0
+
+        return joined, outcome
 
     def _append_files(self, fresh: DataFrame, base: StructType) -> int:
         """O(delta) insert: write ONLY the new rows as part-files into the
@@ -578,7 +664,9 @@ class StateStore:
 
     def recover(self) -> dict[str, int]:
         """Crash recovery. Runs automatically at the start of every write
-        operation (writes are single-writer serialized, so no live
+        operation — ``append_new`` and every row rewrite through
+        ``_rewrite`` — so no write can commit past a staged change-log
+        entry and orphan it (writes are single-writer serialized, so no live
         operation can be mid-flight then; construction alone must NOT
         recover — a reader instance opened beside an in-flight writer
         would destroy its staging). Finalizes staged CDC entries whose
@@ -731,7 +819,6 @@ class StateStore:
         updates: DataFrame,
         set_cols: tuple[str, ...],
         partition_value: str | None = None,
-        broadcast_updates: bool = True,
     ) -> int:
         """K3-K6 — ``MERGE ... WHEN MATCHED AND target.col IS NULL THEN
         UPDATE``: fill ``set_cols`` from ``updates`` (keyed by ``self.key``)
@@ -741,10 +828,7 @@ class StateStore:
         With ``partition_value`` (a value of the single partition column —
         e.g. the stage's device_type), only that partition is merged and
         rewritten; all other partitions are hardlinked into the new snapshot.
-
-        ``broadcast_updates`` fits the usual worklist-sized batches; pass
-        False for bulk backfills larger than executor memory — the join then
-        shuffles both sides on the uniform hash key.
+        The updates are broadcast: they are worklist-sized.
 
         Returns the number of target rows matched by an update (observed on
         the write action itself — no separate count job). A merge that
@@ -756,14 +840,6 @@ class StateStore:
         the target rows observed going into the join against the rows
         coming out of it.
         """
-        self.recover()
-        selective = partition_value is not None and len(self.partition_by) == 1
-        state = self.read()
-        target = (
-            state.filter(F.col(self.partition_by[0]) == partition_value)
-            if selective
-            else state
-        )
         upd = updates.select(
             F.col(self.key),
             *[F.col(c).alias(f"__new_{c}") for c in set_cols],
@@ -772,47 +848,17 @@ class StateStore:
             # later columns carry fills — and the commit would be discarded
             F.lit(True).alias("__matched"),
         )
-        if broadcast_updates:
-            upd = F.broadcast(upd)
-        obs, obs_target = Observation(), Observation()
-        # observe the counts at the ROOT of the written plan: metrics
-        # survive AQE empty-relation pruning (an observe on an empty
-        # broadcast side would be optimised away and never fire); the
-        # target's own row count rides its scan, the join's probe side
-        merged = target.observe(obs_target, F.count(F.lit(1)).alias("n")).join(
-            upd, on=self.key, how="left"
-        ).observe(
-            obs,
-            F.coalesce(
-                F.sum(F.col("__matched").cast("long")), F.lit(0)
-            ).alias("n_matched"),
-            F.count(F.lit(1)).alias("n_out"),
-        )
-        for c in set_cols:
-            merged = merged.withColumn(c, F.coalesce(F.col(c), F.col(f"__new_{c}")))
-        # the key-first join output back in the target's column order
-        merged = merged.select(*target.columns)
-        version, out = self._write_uncommitted(merged, state.schema)
-        m = obs.get
-        # an update key listed twice repeats its target row; with no
-        # output rows there is nothing to repeat (and a shuffled join over
-        # an empty target may have pruned the target-side observe)
-        n_out = int(m["n_out"])
-        if n_out and n_out != int(obs_target.get["n"]):
-            self._discard(out)
-            raise ValueError(
-                f"merge_non_overwrite updates repeat a key (key column "
-                f"{self.key!r}): a target row matched more than once; "
-                "nothing was committed"
+
+        def build(_state: DataFrame, target: DataFrame):
+            merged, outcome = self._keyed_join(
+                target, upd, self.key, F.col("__matched")
             )
-        n = int(m["n_matched"])
-        if n == 0:
-            self._discard(out)
-            return 0
-        if selective:
-            self._link_other_partitions(out, partition_value)  # type: ignore[arg-type]
-        self._commit(version, out)
-        return n
+            for c in set_cols:
+                merged = merged.withColumn(c, F.coalesce(F.col(c), F.col(f"__new_{c}")))
+            # the key-first join output back in the target's column order
+            return merged.select(*target.columns), outcome
+
+        return self._rewrite(build, self._scope(partition_value))
 
     def merge(
         self,
@@ -821,7 +867,6 @@ class StateStore:
         matched_condition: str | None = None,
         insert_when_not_matched: bool = False,
         partition_value: str | None = None,
-        broadcast_source: bool = True,
     ) -> dict[str, int]:
         """General MERGE INTO (Delta-semantics superset of the specialised
         transitions): join ``source`` to the state on ``self.key`` and apply
@@ -862,102 +907,96 @@ class StateStore:
         the fast paths the pipeline uses (append_new is file-level append —
         cheaper than any join-based merge for pure inserts)."""
         when_matched_set = when_matched_set or {}
-        selective = partition_value is not None and len(self.partition_by) == 1
-        state = self.read()
-        target = (
-            state.filter(F.col(self.partition_by[0]) == partition_value)
-            if selective
-            else state
-        )
-        target_cols = target.columns
-        # per-key multiplicity for the duplicate-source guard; first() values
-        # are only ever committed when __src_n == 1, so the non-determinism
-        # of first() never reaches state
-        checked = source.groupBy(self.key).agg(
-            F.count(F.lit(1)).alias("__src_n"),
-            *[F.first(c).alias(c) for c in source.columns if c != self.key],
-        )
-        if selective and insert_when_not_matched:
-            other_keys = state.filter(
-                F.col(self.partition_by[0]) != partition_value
-            ).select(self.key)
-            checked = checked.join(other_keys, on=self.key, how="left_anti")
-        src = F.broadcast(checked) if broadcast_source else checked
-        # full_outer even for update-only merges: a source-only key must
-        # reach the projection so its duplicate marker is observable (a
-        # left_outer join would drop it and the duplicate-keys ValueError
-        # contract would silently pass); update-only drops those rows via
-        # the __keep filter AFTER the observe. Same shuffle either way.
-        j = target.alias("t").join(
-            src.alias("src"),
-            F.col(f"t.{self.key}") == F.col(f"src.{self.key}"),
-            "full_outer",
-        )
-        has_t = F.col(f"t.{self.key}").isNotNull()
-        has_s = F.col(f"src.{self.key}").isNotNull()
-        upd_guard = (
-            F.expr(matched_condition) if matched_condition else F.lit(True)
-        )
-        do_update = has_t & has_s & upd_guard
-        do_insert = (
-            (~has_t & has_s) if insert_when_not_matched else F.lit(False)
-        )
-        src_cols = set(source.columns)
-        out_cols = []
-        for c in target_cols:
-            current = F.col(f"t.{c}")
-            updated = (
-                F.expr(when_matched_set[c]) if c in when_matched_set else current
+        scope = self._scope(partition_value)
+
+        def build(state: DataFrame, target: DataFrame):
+            # per-key multiplicity for the duplicate-source guard; first()
+            # values are only ever committed when __src_n == 1, so the
+            # non-determinism of first() never reaches state
+            checked = source.groupBy(self.key).agg(
+                F.count(F.lit(1)).alias("__src_n"),
+                *[F.first(c).alias(c) for c in source.columns if c != self.key],
             )
-            inserted = F.col(f"src.{c}") if c in src_cols else F.lit(None)
-            out_cols.append(
-                F.when(do_update, updated)
-                .when(do_insert, inserted)
-                .otherwise(current)
-                .alias(c)
+            if scope is not None and insert_when_not_matched:
+                other_keys = state.filter(
+                    ~F.col(self.partition_by[0]).isin(*scope)
+                ).select(self.key)
+                checked = checked.join(other_keys, on=self.key, how="left_anti")
+            # full_outer even for update-only merges: a source-only key must
+            # reach the projection so its duplicate marker is observable (a
+            # left_outer join would drop it and the duplicate-keys
+            # ValueError contract would silently pass); update-only drops
+            # those rows via the __keep filter AFTER the observe. Same
+            # shuffle either way.
+            j = target.alias("t").join(
+                F.broadcast(checked).alias("src"),
+                F.col(f"t.{self.key}") == F.col(f"src.{self.key}"),
+                "full_outer",
             )
-        obs = Observation()
-        # metrics must ride the written plan itself (no separate count job),
-        # so the match/insert flags travel through the projection as hidden
-        # columns and the observe sums them at the root
-        merged = (
-            j.select(
-                *out_cols,
-                do_update.cast("long").alias("__upd"),
-                do_insert.cast("long").alias("__ins"),
-                (has_t | do_insert).alias("__keep"),
-                (F.coalesce(F.col("src.__src_n"), F.lit(0)) > 1)
-                .cast("long")
-                .alias("__dup"),
+            has_t = F.col(f"t.{self.key}").isNotNull()
+            has_s = F.col(f"src.{self.key}").isNotNull()
+            upd_guard = (
+                F.expr(matched_condition) if matched_condition else F.lit(True)
             )
-            # observe BEFORE the __keep filter: dup markers on source-only
-            # keys must count even when update-only merges then discard them
-            .observe(
-                obs,
-                F.coalesce(F.sum("__upd"), F.lit(0)).alias("n_updated"),
-                F.coalesce(F.sum("__ins"), F.lit(0)).alias("n_inserted"),
-                F.coalesce(F.sum("__dup"), F.lit(0)).alias("n_dup_src"),
+            do_update = has_t & has_s & upd_guard
+            do_insert = (
+                (~has_t & has_s) if insert_when_not_matched else F.lit(False)
             )
-            .filter(F.col("__keep"))
-            .drop("__upd", "__ins", "__keep", "__dup")
-        )
-        version, out = self._write_uncommitted(merged, state.schema)
-        m = obs.get
-        if int(m["n_dup_src"]) > 0:
-            self._discard(out)
-            raise ValueError(
-                "MERGE source contains duplicate keys "
-                f"(key column {self.key!r}); like Delta MERGE, multiple "
-                "source rows per key are an error — dedupe the source first"
+            src_cols = set(source.columns)
+            out_cols = []
+            for c in target.columns:
+                current = F.col(f"t.{c}")
+                updated = (
+                    F.expr(when_matched_set[c]) if c in when_matched_set else current
+                )
+                inserted = F.col(f"src.{c}") if c in src_cols else F.lit(None)
+                out_cols.append(
+                    F.when(do_update, updated)
+                    .when(do_insert, inserted)
+                    .otherwise(current)
+                    .alias(c)
+                )
+            obs = Observation()
+            # metrics must ride the written plan itself (no separate count
+            # job), so the match/insert flags travel through the projection
+            # as hidden columns and the observe sums them at the root
+            merged = (
+                j.select(
+                    *out_cols,
+                    do_update.cast("long").alias("__upd"),
+                    do_insert.cast("long").alias("__ins"),
+                    (has_t | do_insert).alias("__keep"),
+                    (F.coalesce(F.col("src.__src_n"), F.lit(0)) > 1)
+                    .cast("long")
+                    .alias("__dup"),
+                )
+                # observe BEFORE the __keep filter: dup markers on
+                # source-only keys must count even when update-only merges
+                # then discard them
+                .observe(
+                    obs,
+                    F.coalesce(F.sum("__upd"), F.lit(0)).alias("n_updated"),
+                    F.coalesce(F.sum("__ins"), F.lit(0)).alias("n_inserted"),
+                    F.coalesce(F.sum("__dup"), F.lit(0)).alias("n_dup_src"),
+                )
+                .filter(F.col("__keep"))
+                .drop("__upd", "__ins", "__keep", "__dup")
             )
-        n_upd, n_ins = int(m["n_updated"]), int(m["n_inserted"])
-        if n_upd == 0 and n_ins == 0:
-            self._discard(out)
-            return {"updated": 0, "inserted": 0}
-        if selective:
-            self._link_other_partitions(out, partition_value)  # type: ignore[arg-type]
-        self._commit(version, out)
-        return {"updated": n_upd, "inserted": n_ins}
+
+            def outcome() -> tuple[dict[str, int], bool]:
+                m = obs.get
+                if int(m["n_dup_src"]) > 0:
+                    raise ValueError(
+                        "MERGE source contains duplicate keys "
+                        f"(key column {self.key!r}); like Delta MERGE, multiple "
+                        "source rows per key are an error — dedupe the source first"
+                    )
+                n_upd, n_ins = int(m["n_updated"]), int(m["n_inserted"])
+                return {"updated": n_upd, "inserted": n_ins}, bool(n_upd or n_ins)
+
+            return merged, outcome
+
+        return self._rewrite(build, scope)
 
     def changes(
         self, since: str, until: str | None = None, include_preimage: bool = False
@@ -1083,59 +1122,32 @@ class StateStore:
         otherwise every partition with at least ``min_files`` files is
         rewritten. Readers are unaffected (manifest-committed snapshot). Returns
         the number of partitions compacted."""
-        counts = self.file_counts()
-        if partition_value is not None and len(self.partition_by) == 1:
-            pdir = f"{self.partition_by[0]}={partition_value}"
-            if counts.get(pdir, 0) < min_files:
-                return 0
-            state = self.read()
-            part = state.filter(F.col(self.partition_by[0]) == partition_value)
-            version, out = self._write_uncommitted(
-                part.repartition(target_partitions), state.schema
-            )
-            self._link_other_partitions(out, partition_value)
-            self._commit(version, out)
-            return 1
-        # >= to match the selective path: a partition at exactly min_files
-        # compacts in both modes
-        fragmented = {d for d, n in counts.items() if n >= min_files}
+        fragmented = [d for d, n in self.file_counts().items() if n >= min_files]
+        scope = None
+        if len(self.partition_by) == 1:
+            prefix = f"{self.partition_by[0]}="
+            # >= in both modes: a partition at exactly min_files compacts
+            # whether it is named or found
+            scope = fragmented = [
+                d[len(prefix):]
+                for d in fragmented
+                if d.startswith(prefix)
+                and (partition_value is None or d == prefix + partition_value)
+            ]
         if not fragmented:
             return 0
-        if len(self.partition_by) == 1:
-            pcol = self.partition_by[0]
-            frag_vals = [
-                d.split("=", 1)[1] for d in fragmented if d.startswith(f"{pcol}=")
-            ]
-            if not frag_vals:
-                return 0
-            state = self.read()
-            part = state.filter(F.col(pcol).isin(frag_vals))
-            version, out = self._write_uncommitted(
-                part.repartition(target_partitions), state.schema
-            )
-            # non-fragmented partitions ride along as hardlinks
-            old_dir = self._snapshot_dir(self.current_version())
-            for entry in os.listdir(old_dir):
-                src = os.path.join(old_dir, entry)
-                if (
-                    os.path.isdir(src)
-                    and entry.startswith(f"{pcol}=")
-                    and entry not in fragmented
-                ):
-                    self._link_tree(src, os.path.join(out, entry))
-            self._commit(version, out)
-            return len(frag_vals)
-        version, out = self._write_uncommitted(
-            self.read().repartition(target_partitions)
-        )
-        self._commit(version, out)
-        return 1
+        n = len(scope) if scope is not None else 1
+
+        def build(_state: DataFrame, target: DataFrame):
+            return target.repartition(target_partitions), lambda: (n, True)
+
+        return self._rewrite(build, scope)
 
     def _quarantined_delete(self, keys: DataFrame) -> int:
         """K7 — delete by key. The reference name-mangles this and warns
         'Never use this method within the pipeline' (db.py:127-133); we keep
-        it equally quarantined: UserWarning + explicit anti-join rewrite.
-        Returns number of rows removed."""
+        it equally quarantined: UserWarning + explicit keyed rewrite that
+        keeps the unmatched rows. Returns number of rows removed."""
         import warnings
 
         warnings.warn(
@@ -1144,14 +1156,14 @@ class StateStore:
             UserWarning,
             stacklevel=2,
         )
-        state = self.read()
-        kept = state.join(
-            keys.select(self.key), on=self.key, how="left_anti"
-        ).select(*state.columns)
-        removed = state.count() - kept.count()
-        if removed:
-            self._write_snapshot(kept)
-        return removed
+        gone = keys.select(self.key).distinct().withColumn("__gone", F.lit(True))
+
+        def build(_state: DataFrame, target: DataFrame):
+            joined, outcome = self._keyed_join(target, gone, self.key, F.col("__gone"))
+            kept = joined.filter(F.col("__gone").isNull()).select(*target.columns)
+            return kept, outcome
+
+        return self._rewrite(build)
 
     def mark_uploaded(
         self, dmp_ids: DataFrame, partition_value: str | None = None
@@ -1164,45 +1176,23 @@ class StateStore:
         — the same O(affected partition) path as ``merge_non_overwrite``.
         Returns the number of rows newly flagged; flagging nothing new
         publishes no new version."""
-        self.recover()
-        selective = partition_value is not None and len(self.partition_by) == 1
-        state = self.read()
-        target = (
-            state.filter(F.col(self.partition_by[0]) == partition_value)
-            if selective
-            else state
-        )
         flagged = dmp_ids.select(F.col("dmp_id"), F.lit(True).alias("__up"))
-        obs = Observation()
-        merged = (
-            target.join(F.broadcast(flagged), on="dmp_id", how="left")
-            .observe(
-                obs,
-                F.coalesce(
-                    F.sum(
-                        (
-                            F.col("__up").isNotNull()
-                            & ~F.coalesce(F.col("is_uploaded"), F.lit(False))
-                        ).cast("long")
-                    ),
-                    F.lit(0),
-                ).alias("n_flipped"),
+
+        def build(_state: DataFrame, target: DataFrame):
+            merged, outcome = self._keyed_join(
+                target,
+                flagged,
+                "dmp_id",
+                F.col("__up").isNotNull()
+                & ~F.coalesce(F.col("is_uploaded"), F.lit(False)),
             )
-            .withColumn(
+            merged = merged.withColumn(
                 "is_uploaded",
                 F.when(F.col("__up").isNotNull(), F.lit(True)).otherwise(
                     F.col("is_uploaded")
                 ),
             )
             # the dmp_id-first join output back in the target's order
-            .select(*target.columns)
-        )
-        version, out = self._write_uncommitted(merged, state.schema)
-        n = int(obs.get["n_flipped"])
-        if n == 0:
-            self._discard(out)
-            return 0
-        if selective:
-            self._link_other_partitions(out, partition_value)  # type: ignore[arg-type]
-        self._commit(version, out)
-        return n
+            return merged.select(*target.columns), outcome
+
+        return self._rewrite(build, self._scope(partition_value))

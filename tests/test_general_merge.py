@@ -3,7 +3,7 @@ counter bumps, no-op version hygiene, partition-selective rewrites."""
 
 import os
 
-from pyspark.sql import functions as F
+import pytest
 
 from ideafast_etl_spark.state import StateStore
 
@@ -89,27 +89,74 @@ def test_merge_noop_publishes_no_version(spark, tmp_path):
     assert store.current_version() == v0
 
 
-def test_merge_partition_selective_hardlinks_other_partitions(spark, tmp_path):
-    store = _store(spark, tmp_path / "s")
-    btf_before = {
-        rel: ino
-        for rel, ino in _data_files(
-            store._snapshot_dir(store.current_version())
-        ).items()
-        if rel.startswith("device_type=BTF")
-    }
-    src = spark.createDataFrame([("h1", "s-1")], "hash string, serial string")
-    res = store.merge(
-        src,
+def _fragment_drm_store(spark, path):
+    """The ``_store`` rows plus upload columns, with one appended DRM row:
+    DRM then holds two data files (fragmented), BTF one."""
+    store = StateStore(spark, str(path))
+    schema = (
+        "hash string, device_type string, serial string, n_seen int,"
+        " dmp_id string, is_uploaded boolean"
+    )
+    rows = [
+        ("h1", "DRM", None, 0, "g1", False),
+        ("h2", "DRM", "serial-2", 5, "g2", False),
+        ("h3", "BTF", None, 1, "g3", False),
+    ]
+    store.init(spark.createDataFrame(rows, schema))
+    store.append_new(
+        spark.createDataFrame([("h4", "DRM", None, 0, "g4", False)], schema)
+    )
+    return store
+
+
+SELECTIVE_TRANSITIONS = {
+    "merge": lambda spark, store: store.merge(
+        spark.createDataFrame([("h1", "s-1")], "hash string, serial string"),
         when_matched_set={"serial": "src.serial"},
         partition_value="DRM",
-    )
-    assert res["updated"] == 1
+    )["updated"],
+    "merge_non_overwrite": lambda spark, store: store.merge_non_overwrite(
+        spark.createDataFrame([("h1", "s-1")], "hash string, serial string"),
+        ("serial",),
+        partition_value="DRM",
+    ),
+    "mark_uploaded": lambda spark, store: store.mark_uploaded(
+        spark.createDataFrame([("g1",)], "dmp_id string"), partition_value="DRM"
+    ),
+    "compact_selective": lambda spark, store: store.compact(partition_value="DRM"),
+    "compact_all_partitions": lambda spark, store: store.compact(),
+}
+
+
+@pytest.mark.parametrize("transition", list(SELECTIVE_TRANSITIONS))
+def test_merge_partition_selective_hardlinks_other_partitions(
+    spark, tmp_path, transition
+):
+    """Every row-rewriting transition scoped to DRM (by ``partition_value``,
+    or by all-partitions compaction finding only DRM fragmented) rewrites
+    DRM and hardlinks the BTF partition's data files into the new snapshot."""
+    store = _fragment_drm_store(spark, tmp_path / "s")
+    v0 = store.current_version()
+    files_before = _data_files(store._snapshot_dir(v0))
+    btf_before = {
+        rel: ino
+        for rel, ino in files_before.items()
+        if rel.startswith("device_type=BTF")
+    }
+    assert btf_before
+    assert SELECTIVE_TRANSITIONS[transition](spark, store) == 1
+    assert store.current_version() != v0
     files_now = _data_files(store._snapshot_dir(store.current_version()))
     for rel, ino in btf_before.items():
         assert files_now.get(rel) == ino  # BTF partition untouched
-    # and the BTF row is still readable/intact
-    assert store.read().filter(F.col("hash") == "h3").count() == 1
+    drm_now = {
+        ino for rel, ino in files_now.items() if rel.startswith("device_type=DRM")
+    }
+    assert drm_now and not drm_now & set(files_before.values())  # DRM rewritten
+    # and every row is still readable/intact
+    assert sorted(r["hash"] for r in store.read().collect()) == [
+        "h1", "h2", "h3", "h4",
+    ]
 
 
 def test_incremental_aggregate_maintenance(spark, tmp_path):

@@ -1,6 +1,7 @@
 """State-store hardening: multi-column match counting, Delta-style
 duplicate-source guard, cross-partition insert guard, crash-safe staging,
-compaction threshold consistency, numeric CDC retention compare."""
+compaction threshold consistency, numeric CDC retention compare, recovery
+before every rewrite, repeated upload-group guard."""
 
 import os
 
@@ -226,3 +227,92 @@ def test_truncate_cdc_compares_versions_numerically(spark, tmp_path):
     assert len(os.listdir(store.cdc_path())) == n_commits
     # and the real retention path still works numerically
     assert store.truncate_cdc(before_version=str(10**20)) == n_commits
+
+
+class _Crash(RuntimeError):
+    pass
+
+
+NEXT_WRITES = {
+    "merge_non_overwrite": lambda spark, store: store.merge_non_overwrite(
+        spark.createDataFrame([("h1", "a1")], "hash string, col_a string"),
+        ("col_a",),
+    ),
+    "mark_uploaded": lambda spark, store: store.mark_uploaded(
+        spark.createDataFrame([("g1",)], "dmp_id string")
+    ),
+    "merge": lambda spark, store: store.merge(
+        spark.createDataFrame([("h1", "a1")], "hash string, col_a string"),
+        when_matched_set={"col_a": "src.col_a"},
+    )["updated"],
+    "compact": lambda spark, store: store.compact(partition_value="DRM"),
+    "_quarantined_delete": lambda spark, store: store._quarantined_delete(
+        spark.createDataFrame([("h2",)], "hash string")
+    ),
+}
+
+
+@pytest.mark.parametrize("next_write", list(NEXT_WRITES))
+@pytest.mark.filterwarnings("ignore:Never use this method:UserWarning")
+def test_write_after_crashed_append_publishes_its_change_log(
+    spark, tmp_path, next_write
+):
+    """``append_new`` dies after its manifest PUT, before its CDC finalize.
+    Whatever write comes next must recover first: it commits a newer
+    version, and a staged change-log entry whose version is no longer the
+    current one reads as uncommitted and is dropped — losing the rows of a
+    committed append from the log."""
+    schema = (
+        "hash string, device_type string, dmp_id string, is_uploaded boolean,"
+        " col_a string"
+    )
+    store = StateStore(spark, str(tmp_path / "s"))
+    store.init(
+        spark.createDataFrame(
+            [("h1", "DRM", "g1", False, None), ("h2", "BTF", "g2", False, None)],
+            schema,
+        )
+    )
+    new_rows = [("h3", "DRM", "g3", False, None), ("h4", "BTF", "g3", False, None)]
+    commit = store._commit
+
+    def commit_then_crash(version, out):
+        commit(version, out)
+        raise _Crash()
+
+    store._commit = commit_then_crash
+    with pytest.raises(_Crash):
+        store.append_new(spark.createDataFrame(new_rows, schema))
+    store = StateStore(spark, store.path)  # the process restarts
+    v = store.current_version()
+    assert NEXT_WRITES[next_write](spark, store) == 1
+    assert store.current_version() != v
+    assert store.recover()["cdc_dropped"] == 0
+    logged = spark.read.parquet(store.cdc_path()).select(
+        "hash", "device_type", "dmp_id", "is_uploaded", "col_a"
+    )
+    assert sorted(map(tuple, logged.collect())) == new_rows
+
+
+def test_mark_uploaded_rejects_a_repeated_group_id(spark, tmp_path):
+    """A ``dmp_ids`` frame that lists a group twice would repeat every
+    member row in the left join; like ``merge_non_overwrite`` it raises and
+    commits nothing."""
+    store = StateStore(spark, str(tmp_path / "s"))
+    store.init(
+        spark.createDataFrame(
+            [
+                ("h1", "DRM", "g1", False),
+                ("h2", "DRM", "g1", False),
+                ("h3", "DRM", "g2", False),
+            ],
+            "hash string, device_type string, dmp_id string, is_uploaded boolean",
+        )
+    )
+    v = store.current_version()
+    ids = spark.createDataFrame([("g1",), ("g1",)], "dmp_id string")
+    with pytest.raises(ValueError, match="repeat a key"):
+        store.mark_uploaded(ids, partition_value="DRM")
+    assert store.current_version() == v
+    assert sorted(r["hash"] for r in store.read().collect()) == ["h1", "h2", "h3"]
+    assert [d for d in os.listdir(store.path) if d.startswith("v_")] == [f"v_{v}"]

@@ -14,13 +14,14 @@ surface, not just the 50-query sample the driver records (ADVICE r6).
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from ideafast_etl_spark.session import get_spark  # noqa: E402
