@@ -127,6 +127,65 @@ def ensure_replica(
     return False
 
 
+class _Timings:
+    """The per-query maps of the one-line JSON; :meth:`run` is the one
+    timing loop, used by the headline and the scaled block alike."""
+
+    def __init__(self) -> None:
+        self.cold: dict[str, float] = {}
+        self.warm: dict[str, float] = {}
+        self.warm_median: dict[str, float] = {}
+        self.warm_min: dict[str, float] = {}
+        self.warm_jobs: dict[str, float] = {}
+
+    def run(self, spark, name: str, fn, data_dir: str, iters: int) -> None:
+        """Time query ``fn`` over ``data_dir`` as ``name``: one cold count,
+        then ``iters`` warm counts. A failing query records -1.0 as its
+        cold time and no warm figures, so the JSON line stays intact."""
+        # cold run: plan compile + execute, as a first caller sees it
+        t0 = time.time()
+        try:
+            n = fn(spark, data_dir).count()
+        except Exception as e:
+            self.cold[name] = -1.0
+            print(f"# {name}: FAILED {e}", file=sys.stderr)
+            return
+        self.cold[name] = round(time.time() - t0, 3)
+        # warm runs: fresh plan in the warmed session — separates per-query
+        # plan-compile overhead (dominant at tiny SF) from compute, which is
+        # the number that extrapolates to long-lived cluster sessions.
+        # n iterations; first kept as `warm_queries` for cross-round
+        # continuity, median/min reported alongside.
+        samples = []
+        tracker = spark.sparkContext.statusTracker()
+        jobs_before = max(tracker.getJobIdsForGroup(), default=0)
+        for _ in range(iters):
+            t1 = time.time()
+            fn(spark, data_dir).count()
+            samples.append(time.time() - t1)
+        # Spark jobs per warm run — a BOX-INDEPENDENT structural metric:
+        # wall-clock swings with machine load (the r10/r11 phantom
+        # regressions), but the number of scheduler barriers a query pays
+        # only changes when the code's plan/action structure changes. A
+        # jobs-per-run jump between rounds is a real structural regression
+        # even when the box is too noisy to trust the seconds.
+        # job IDs are monotone; the tracker only RETAINS the last
+        # spark.ui.retainedJobs ids, so len() deltas go wrong (negative)
+        # once the session passes the retention horizon — diff the max id.
+        jobs_after = max(tracker.getJobIdsForGroup(), default=0)
+        self.warm_jobs[name] = round((jobs_after - jobs_before) / iters, 1)
+        self.warm[name] = round(samples[0], 3)
+        srt = sorted(samples)
+        self.warm_median[name] = round(srt[len(srt) // 2], 3)
+        self.warm_min[name] = round(srt[0], 3)
+        print(
+            f"# {name}: cold {self.cold[name]}s / warm {self.warm[name]}s "
+            f"(median {self.warm_median[name]}s, min {self.warm_min[name]}s "
+            f"over {len(samples)}; {n} rows)",
+            file=sys.stderr,
+        )
+
+
 def _quiet_box_guard() -> dict:
     """Stamp box state into the bench artifact (r11 verdict #1).
 
@@ -199,61 +258,13 @@ def main() -> None:
     # JVM/codegen warmup so the first measured query doesn't absorb startup
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     qs = entrymod.queries()
-    timings: dict[str, float] = {}
-    warm: dict[str, float] = {}
-    warm_median: dict[str, float] = {}
-    warm_min: dict[str, float] = {}
-    warm_jobs: dict[str, float] = {}
+    t = _Timings()
     for name in HEADLINE + EXTENDED:
-        fn = qs[name]
-        # cold run: plan compile + execute, like the driver sees it
-        t0 = time.time()
-        try:
-            n = fn(spark, sf_dir).count()
-        except Exception as e:  # keep the JSON line intact if one query breaks
-            timings[name] = -1.0
-            print(f"# {name}: FAILED {e}", file=sys.stderr)
-            continue
-        timings[name] = round(time.time() - t0, 3)
-        # warm runs: fresh plan in the warmed session — separates per-query
-        # plan-compile overhead (dominant at tiny SF) from compute, which is
-        # the number that extrapolates to long-lived cluster sessions.
-        # n iterations; first kept as `warm_queries` for cross-round
-        # continuity, median/min reported alongside.
-        samples = []
-        tracker = spark.sparkContext.statusTracker()
-        jobs_before = max(tracker.getJobIdsForGroup(), default=0)
-        for _ in range(max(1, iters)):
-            t1 = time.time()
-            fn(spark, sf_dir).count()
-            samples.append(time.time() - t1)
-        # Spark jobs per warm run — a BOX-INDEPENDENT structural metric:
-        # wall-clock swings with machine load (the r10/r11 phantom
-        # regressions), but the number of scheduler barriers a query pays
-        # only changes when the code's plan/action structure changes. A
-        # jobs-per-run jump between rounds is a real structural regression
-        # even when the box is too noisy to trust the seconds.
-        # job IDs are monotone; the tracker only RETAINS the last
-        # spark.ui.retainedJobs ids, so len() deltas go wrong (negative)
-        # once the session passes the retention horizon — diff the max id.
-        jobs_after = max(
-            spark.sparkContext.statusTracker().getJobIdsForGroup(), default=0
-        )
-        warm_jobs[name] = round((jobs_after - jobs_before) / max(1, iters), 1)
-        warm[name] = round(samples[0], 3)
-        srt = sorted(samples)
-        warm_median[name] = round(srt[len(srt) // 2], 3)
-        warm_min[name] = round(srt[0], 3)
-        print(
-            f"# {name}: cold {timings[name]}s / warm {warm[name]}s "
-            f"(median {warm_median[name]}s, min {warm_min[name]}s over "
-            f"{len(samples)}; {n} rows)",
-            file=sys.stderr,
-        )
+        t.run(spark, name, qs[name], sf_dir, max(1, iters))
     # ---- r13 scaled block (VERDICT r12 #2; additions-only — see SCALED
-    # above). Same timing methodology as the main loop (cold count + warm
-    # iterations + jobs/run), fewer warm iterations (the queries are ~10x
-    # heavier), keys suffixed `_x<mult>` so nothing pre-existing changes.
+    # above). The headline's timing loop (`_Timings.run`), fewer warm
+    # iterations (the queries are ~10x heavier), keys suffixed `_x<mult>`
+    # so nothing pre-existing changes.
     scaled_meta: dict = {}
     mult = int(os.environ.get("SPARK_GRAFT_BENCH_SF_MULT", "40") or "0")
     scaled_iters = max(
@@ -295,40 +306,7 @@ def main() -> None:
                 "scaled_names": [f"{n}_x{mult}" for n in SCALED],
             }
             for base in SCALED:
-                name = f"{base}_x{mult}"
-                fn = qs[base]
-                t0 = time.time()
-                try:
-                    n = fn(spark, scaled_dir).count()
-                except Exception as e:
-                    timings[name] = -1.0
-                    print(f"# {name}: FAILED {e}", file=sys.stderr)
-                    continue
-                timings[name] = round(time.time() - t0, 3)
-                samples = []
-                tracker = spark.sparkContext.statusTracker()
-                jobs_before = max(tracker.getJobIdsForGroup(), default=0)
-                for _ in range(scaled_iters):
-                    t1 = time.time()
-                    fn(spark, scaled_dir).count()
-                    samples.append(time.time() - t1)
-                jobs_after = max(
-                    spark.sparkContext.statusTracker().getJobIdsForGroup(),
-                    default=0,
-                )
-                warm_jobs[name] = round(
-                    (jobs_after - jobs_before) / scaled_iters, 1
-                )
-                warm[name] = round(samples[0], 3)
-                srt = sorted(samples)
-                warm_median[name] = round(srt[len(srt) // 2], 3)
-                warm_min[name] = round(srt[0], 3)
-                print(
-                    f"# {name}: cold {timings[name]}s / warm {warm[name]}s "
-                    f"(median {warm_median[name]}s, min {warm_min[name]}s "
-                    f"over {len(samples)}; {n} rows)",
-                    file=sys.stderr,
-                )
+                t.run(spark, f"{base}_x{mult}", qs[base], scaled_dir, scaled_iters)
         except Exception as e:  # scaled block must never break the artifact
             scaled_meta = {"scaled_mult": mult, "scaled_error": str(e)[:200]}
             print(f"# scaled block FAILED: {e}", file=sys.stderr)
@@ -336,9 +314,9 @@ def main() -> None:
     # the headline metric stays the COLD total of the ORIGINAL 14 so the
     # cross-round trend (BENCH_r1..r6) remains comparable; the extended
     # batch reports as its own labelled subtotal
-    total = round(sum(timings.get(n, 0.0) for n in HEADLINE if timings.get(n, 0) >= 0), 3)
+    total = round(sum(t.cold.get(n, 0.0) for n in HEADLINE if t.cold.get(n, 0) >= 0), 3)
     ext_total = round(
-        sum(timings.get(n, 0.0) for n in EXTENDED if timings.get(n, 0) >= 0), 3
+        sum(t.cold.get(n, 0.0) for n in EXTENDED if t.cold.get(n, 0) >= 0), 3
     )
     print(
         json.dumps(
@@ -347,23 +325,23 @@ def main() -> None:
                 "metric": "headline_queries_total",
                 "value": total,
                 "unit": "sec",
-                "queries": timings,
-                "warm_queries": warm,
-                "warm_total": round(sum(warm[n] for n in HEADLINE if n in warm), 3),
-                "warm_median_queries": warm_median,
-                "warm_min_queries": warm_min,
+                "queries": t.cold,
+                "warm_queries": t.warm,
+                "warm_total": round(sum(t.warm[n] for n in HEADLINE if n in t.warm), 3),
+                "warm_median_queries": t.warm_median,
+                "warm_min_queries": t.warm_min,
                 "warm_median_total": round(
-                    sum(warm_median[n] for n in HEADLINE if n in warm_median), 3
+                    sum(t.warm_median[n] for n in HEADLINE if n in t.warm_median), 3
                 ),
                 "warm_min_total": round(
-                    sum(warm_min[n] for n in HEADLINE if n in warm_min), 3
+                    sum(t.warm_min[n] for n in HEADLINE if n in t.warm_min), 3
                 ),
                 "warm_iters": iters,
-                "warm_jobs_per_run": warm_jobs,
+                "warm_jobs_per_run": t.warm_jobs,
                 "extended_queries": EXTENDED,
                 "extended_total": ext_total,
                 "extended_warm_total": round(
-                    sum(warm[n] for n in EXTENDED if n in warm), 3
+                    sum(t.warm[n] for n in EXTENDED if n in t.warm), 3
                 ),
                 "sf": sf,
                 # r13 scaled-block stamp (mult, generation cost, whether

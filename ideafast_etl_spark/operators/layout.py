@@ -101,8 +101,10 @@ def optimize_table(
 
     READERS resolve the live data dir through
     ``state.manifest.resolve_dir(path)`` (also returned as ``stats["dir"]``);
-    a never-optimized flat directory resolves to itself, and the first
-    optimize retires the flat layout (delete-only, after commit).
+    a never-optimized flat directory resolves to itself and stays one
+    commit as the reader grace window; the second optimize retires it
+    (delete-only, after commit). A symlinked ``path`` raises ``ValueError``
+    before anything is read or staged.
 
     Returns {files_before, files_after, bytes, skipped, dir}. No-ops
     (skipped) when the table already has fewer than
@@ -145,7 +147,7 @@ def optimize_table(
     if not any(f.endswith(".parquet") for f in os.listdir(new_dir)):
         raise RuntimeError(f"compaction produced no parquet files in {new_dir}")
     live = commit_dir(base, ver)
-    # legacy flat-dir retirement happens inside commit_dir with a
+    # flat input-dir retirement happens inside commit_dir with a
     # one-commit reader grace window (r11 advice): the first optimize
     # leaves the flat dir readable for in-flight scans; the second commit
     # retires it — and also heals a leak from a crash after an earlier

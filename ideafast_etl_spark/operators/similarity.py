@@ -362,36 +362,46 @@ def _ivf_cent_re():
 _IVF_CENT_RE = None
 
 
-def _ivf_live(root: str) -> tuple[int, list[str], str]:
-    """(commit id, ordered live cell-data dir paths, live centroid dir) —
-    resolved through the newest valid manifest (state/manifest.py),
-    falling back to the flat ``cells``/``centroids`` layout of
-    pre-manifest indexes. A manifest is committed only if every
-    referenced data dir exists (they are written BEFORE the manifest
-    PUT); a manifest with a ``centroids`` key additionally requires that
-    dir (rebuilds version the quantizer too, r11 advice)."""
+def _ivf_manifest(root: str) -> tuple[int, dict] | None:
+    """The newest valid manifest (state/manifest.py): committed only if
+    every referenced cell dir and its ``centroids`` dir exist (they are
+    written BEFORE the manifest PUT). An index holding flat ``cells`` or
+    ``centroids`` dirs (the layout before manifests) raises
+    ``ValueError``: it is never read, migrated or deleted."""
     import os
 
     from ..state.manifest import latest_manifest
 
+    for flat in ("cells", "centroids"):
+        if os.path.isdir(os.path.join(root, flat)):
+            raise ValueError(
+                f"IVF index at {root!r} has a flat {flat!r} dir: the "
+                "pre-manifest index layout is no longer read or migrated"
+            )
+
     def _valid(payload: dict) -> bool:
         dirs = payload.get("dirs", [])
-        if not dirs or not all(
-            os.path.isdir(os.path.join(root, str(d))) for d in dirs
-        ):
-            return False
-        cent = payload.get("centroids")
-        return cent is None or os.path.isdir(os.path.join(root, str(cent)))
+        return bool(dirs) and all(
+            d is not None and os.path.isdir(os.path.join(root, str(d)))
+            for d in dirs + [payload.get("centroids")]
+        )
 
-    got = latest_manifest(os.path.join(root, _IVF_META), valid=_valid)
+    return latest_manifest(os.path.join(root, _IVF_META), valid=_valid)
+
+
+def _ivf_live(root: str) -> tuple[int, list[str], str]:
+    """(commit id, ordered live cell-data dir paths, live centroid dir) of
+    the committed index."""
+    import os
+
+    got = _ivf_manifest(root)
     if got is None:
-        return 0, [os.path.join(root, "cells")], os.path.join(root, "centroids")
+        raise FileNotFoundError(f"no committed IVF index at {root!r}")
     cid, payload = got
-    cent = payload.get("centroids")
     return (
         cid,
         [os.path.join(root, str(d)) for d in payload["dirs"]],
-        os.path.join(root, str(cent) if cent else "centroids"),
+        os.path.join(root, str(payload["centroids"])),
     )
 
 
@@ -400,8 +410,7 @@ def _ivf_repair(root: str) -> None:
     increment/generation cell dirs and versioned centroid dirs no
     committed manifest references (a crashed append/rebuild's partial
     write, or a superseded generation left one maintenance cycle as the
-    reader grace window), the flat ``cells``/``centroids`` dirs once a
-    manifest supersedes them, and manifests other than the winning one.
+    reader grace window), and manifests other than the winning one.
     Safe under the single-maintenance-writer contract. Runs at the START
     of every maintenance op, so superseded dirs survive from their
     superseding commit until the next maintenance call — a reader that
@@ -415,18 +424,12 @@ def _ivf_repair(root: str) -> None:
         return
     cid, dirs, cent_dir = _ivf_live(root)
     live = {os.path.basename(p) for p in dirs} | {os.path.basename(cent_dir)}
-    versioned_cent = os.path.basename(cent_dir) != "centroids"
     for e in os.scandir(root):
         if not e.is_dir() or e.name in live:
             continue
-        if (
-            _ivf_delta_re().match(e.name)
-            or _ivf_cent_re().match(e.name)
-            or (cid > 0 and e.name == "cells")
-            or (versioned_cent and e.name == "centroids")
-        ):
+        if _ivf_delta_re().match(e.name) or _ivf_cent_re().match(e.name):
             shutil.rmtree(e.path, ignore_errors=True)
-    prune_manifests(os.path.join(root, _IVF_META), cid if cid > 0 else None)
+    prune_manifests(os.path.join(root, _IVF_META), cid)
 
 
 def _read_cells(spark, dirs: list[str]) -> DataFrame:
@@ -449,7 +452,7 @@ def write_ivf_index(
     seed: int = 42,
 ) -> None:
     """Persist the IVF index: cell assignments written PARTITIONED BY cell
-    (``<path>/cells/cell=N/``) plus the centroid table — the build/query
+    (``<path>/cells-g<gen>/cell=N/``) plus the centroid table — the build/query
     separation a production ANN deployment uses. A query via
     :func:`ivf_topk_from_index` then reads only its n_probe cell
     partitions (physical partition pruning on the filesystem layout),
@@ -476,8 +479,8 @@ def write_ivf_index(
     from ..state.manifest import put_manifest
 
     root = path.rstrip("/")
-    cid, _live, _cent = _ivf_live(root)
-    gen = cid + 1
+    got = _ivf_manifest(root)
+    gen = (got[0] if got else 0) + 1
     cells_name, cent_name = f"cells-g{gen}", f"centroids-g{gen}"
     assigned, cent = _ivf_build(df, n_cells, id_col, vec_col)
     # staged into FINAL generation dirs (a crashed retry overwrites its
@@ -562,10 +565,10 @@ def append_ivf_index(
     assigned.write.mode("overwrite").partitionBy("cell").parquet(
         os.path.join(root, inc_name)
     )
-    payload = {"dirs": [os.path.basename(p) for p in live] + [inc_name]}
-    if os.path.basename(cent_dir) != "centroids":
-        # carry the versioned quantizer forward (set by a rebuild commit)
-        payload["centroids"] = os.path.basename(cent_dir)
+    payload = {
+        "dirs": [os.path.basename(p) for p in live] + [inc_name],
+        "centroids": os.path.basename(cent_dir),
+    }
     put_manifest(os.path.join(root, _IVF_META), cid + 1, payload)
 
 
@@ -594,9 +597,7 @@ def compact_ivf_index(spark, path: str) -> dict:
         .partitionBy("cell")
         .parquet(os.path.join(root, new_name))
     )
-    payload = {"dirs": [new_name]}
-    if os.path.basename(cent_dir) != "centroids":
-        payload["centroids"] = os.path.basename(cent_dir)
+    payload = {"dirs": [new_name], "centroids": os.path.basename(cent_dir)}
     put_manifest(os.path.join(root, _IVF_META), cid + 1, payload)
     # superseded dirs are NOT removed here (r11 advice): a probe that
     # resolved them just before this commit keeps its files; the next

@@ -200,9 +200,10 @@ def prune_manifests(meta_dir: str, keep_id: int | None) -> None:
 # logical path (an optimized table, a monitoring report snapshot): data for
 # commit N lives in the sibling dir `<base>.v<N>`, the manifest log lives in
 # `<base>._meta/`, and readers resolve through `resolve_dir(base)` — the flat
-# `base` dir itself when no manifest exists (legacy layout). Rename-free end
-# to end: stage into the final versioned dir, PUT one manifest, delete
-# superseded dirs afterwards (crash-repaired by the next committer).
+# `base` dir itself before the first commit (optimize_table's input table).
+# Rename-free end to end: stage into the final versioned dir, PUT one
+# manifest, delete superseded dirs afterwards (crash-repaired by the next
+# committer). A symlinked `base` (the pre-manifest layout) is refused.
 
 
 def _dir_meta(base: str) -> str:
@@ -213,119 +214,75 @@ def _ver_dir(base: str, ver: int) -> str:
     return f"{base.rstrip('/')}.v{ver}"
 
 
-def resolve_dir(base: str) -> str:
-    """The live data dir: the newest manifest-committed `<base>.v<N>`
-    whose dir exists, else the flat ``base`` itself (legacy / never
-    committed). Read-only — never repairs."""
-    got = latest_manifest(
+def _latest_dir_commit(base: str) -> tuple[int, dict] | None:
+    """The newest manifest whose `<base>.v<N>` dir exists. Raises
+    ``ValueError`` on a symlinked ``base``: the pre-manifest layout
+    pointed it at its live `<base>.v<N>`, which the next stage would
+    overwrite."""
+    if os.path.islink(base):
+        raise ValueError(
+            f"{base!r} is a symlink: the pre-manifest versioned-dir layout "
+            "is no longer read or migrated"
+        )
+    return latest_manifest(
         _dir_meta(base),
         valid=lambda p: isinstance(p.get("ver"), int)
         and os.path.isdir(_ver_dir(base, p["ver"])),
     )
-    return _ver_dir(base, got[1]["ver"]) if got else base.rstrip("/")
 
 
-def _sibling_versions(base: str) -> list[int]:
-    """Every existing `<base>.v<N>` sibling dir's N — committed or not,
-    manifest-era or legacy."""
-    import re
-
-    name = os.path.basename(base)
-    parent = os.path.dirname(os.path.abspath(base)) or "."
-    pat = re.compile(rf"^{re.escape(name)}\.v(\d+)$")
-    out = []
-    try:
-        entries = os.listdir(parent)
-    except OSError:
-        return out
-    for entry in entries:
-        m = pat.match(entry)
-        if m:
-            out.append(int(m.group(1)))
-    return out
+def resolve_dir(base: str) -> str:
+    """The live data dir: the newest manifest-committed `<base>.v<N>`
+    whose dir exists, else the flat ``base`` itself (never committed).
+    Read-only — never repairs."""
+    base = base.rstrip("/")
+    got = _latest_dir_commit(base)
+    return _ver_dir(base, got[1]["ver"]) if got else base
 
 
 def next_dir_version(base: str) -> tuple[int, str]:
     """(next commit id, the final dir to stage it into). A crashed
     attempt at the same id is simply overwritten by the retry (the dir is
-    unreferenced until its manifest lands).
-
-    Counts BOTH the manifest log and existing `<base>.v<N>` sibling dirs
-    (r11 advice): a pre-manifest release numbered versions by sibling scan
-    with a live ``base`` symlink, so on such a store the manifest log is
-    empty while `<base>.v1` is the LIVE data — staging into it would
-    destroy the current snapshot before any commit. max(manifest id, max
-    sibling N) + 1 never collides with committed or legacy data."""
+    unreferenced until its manifest lands)."""
     base = base.rstrip("/")
-    got = latest_manifest(
-        _dir_meta(base),
-        valid=lambda p: isinstance(p.get("ver"), int)
-        and os.path.isdir(_ver_dir(base, p["ver"])),
-    )
-    sibs = _sibling_versions(base)
-    nid = max(got[0] if got else 0, max(sibs) if sibs else 0) + 1
+    got = _latest_dir_commit(base)
+    nid = (got[0] if got else 0) + 1
     return nid, _ver_dir(base, nid)
 
 
 def commit_dir(base: str, ver: int) -> str:
     """THE commit point for a staged `<base>.v<ver>` dir: one manifest
-    PUT, then delete-only cleanup of superseded version dirs, legacy-layout
-    remnants, and stale manifests. Single-writer contract. Returns the
-    committed dir.
+    PUT, then delete-only cleanup of superseded version dirs and stale
+    manifests. Single-writer contract. Returns the committed dir.
 
     Reader grace window (r11 advice): the dir that was live IMMEDIATELY
     before this commit is retained through one commit — a reader that
     resolved it via :func:`resolve_dir` just before the publish can finish
     its scan; it is deleted by the NEXT commit (same discipline as
-    ``StateStore._gc``). Everything older goes now. Legacy layouts are
-    migrated on the same schedule: on the first manifest-era commit the
-    legacy live data (the flat ``base`` dir, or the `<base>.v<N>` target of
-    a ``base`` symlink) gets the grace window; the second commit retires
-    it, along with any `<base>.v<N>.legacy` dirs and `<base>.lnk.*` temp
-    symlinks a crashed pre-manifest publish left behind."""
+    ``StateStore._gc``). Everything older goes now. A flat ``base`` dir
+    (the input table before its first commit) gets the same grace: the
+    first commit keeps it, the second retires it."""
     import re
     import shutil
 
     base = base.rstrip("/")
     # what readers resolved as live BEFORE this commit — kept one round
-    prev_got = latest_manifest(
-        _dir_meta(base),
-        valid=lambda p: isinstance(p.get("ver"), int)
-        and os.path.isdir(_ver_dir(base, p["ver"])),
-    )
-    keep = {os.path.realpath(_ver_dir(base, ver))}
+    prev_got = _latest_dir_commit(base)
+    keep = {os.path.abspath(_ver_dir(base, ver))}
     if prev_got is not None:
-        keep.add(os.path.realpath(_ver_dir(base, prev_got[1]["ver"])))
-    elif os.path.islink(base):
-        # pre-manifest layout: the symlink target IS the live data
-        keep.add(os.path.realpath(base))
+        keep.add(os.path.abspath(_ver_dir(base, prev_got[1]["ver"])))
     put_manifest(_dir_meta(base), ver, {"ver": ver})
     name = os.path.basename(base)
     parent = os.path.dirname(os.path.abspath(base)) or "."
-    stale = re.compile(
-        rf"^{re.escape(name)}(\.v\d+|\.v\d+\.legacy|\.lnk\..*)$"
-    )
+    stale = re.compile(rf"^{re.escape(name)}\.v\d+$")
     for entry in os.listdir(parent):
         full = os.path.join(parent, entry)
-        if not stale.match(entry) or os.path.realpath(full) in keep:
-            continue
-        if os.path.islink(full):
-            try:
-                os.unlink(full)
-            except OSError:
-                pass
-        else:
+        if stale.match(entry) and full not in keep:
             shutil.rmtree(full, ignore_errors=True)
-    # retire a flat legacy `base` dir / symlink once it has had its grace
-    # window (i.e. a previous manifest commit already exists). On the FIRST
-    # manifest-era commit it stays: a reader may have just resolved it.
-    if prev_got is not None:
-        if os.path.islink(base):
-            try:
-                os.unlink(base)
-            except OSError:
-                pass
-        elif os.path.isdir(base):
-            shutil.rmtree(base, ignore_errors=True)
+    # retire a flat `base` dir once it has had its grace window (i.e. a
+    # previous manifest commit already exists). On the FIRST commit it
+    # stays: a reader may have just resolved it.
+    if prev_got is not None and os.path.isdir(base):
+        shutil.rmtree(base, ignore_errors=True)
     prune_manifests(_dir_meta(base), ver)
     return _ver_dir(base, ver)

@@ -18,8 +18,15 @@ snapshot holds (fields merged by name across kept and written files, every
 field nullable, partition columns last). ``read()`` hands it to the reader,
 so opening a snapshot runs no footer-inference job. Every rewrite keeps the
 target's column order, so all part-files of a snapshot agree on it.
-Manifests written before the schema was recorded (and pointer-era stores)
-fall back to ``mergeSchema`` inference.
+
+One layout: a store holding a ``_CURRENT`` pointer file (the pre-manifest
+layout) or a manifest without a schema is refused with ``ValueError`` —
+never read, migrated or cleaned up.
+
+Storage: the store needs a POSIX filesystem with hardlinks — appends and
+partition-scoped rewrites hardlink the kept part-files into the next
+snapshot, and the append change log hardlinks each delta. Delta Lake is
+the object-store path.
 
 Scale posture: snapshots are partitioned by ``device_type`` (the reference's
 every worklist predicate filters on it → partition pruning); updates join on
@@ -71,7 +78,6 @@ from .manifest import (
     read_manifest,
 )
 
-_POINTER = "_CURRENT"  # legacy layout: pre-manifest stores only
 _META = "_meta"
 
 
@@ -129,11 +135,10 @@ class StateStore:
     #6): snapshot data is written DIRECTLY into its final ``v_<version>``
     dir — invisible until referenced — and the commit point is one
     immutable self-checksummed manifest PUT (state/manifest.py), the
-    same create/delete-only discipline the BM25/IVF indexes and the
-    streaming accumulations use, so the store holds on object storage
-    where directory rename is neither atomic nor guaranteed to exist.
-    Stores written by the previous layout (``_CURRENT`` pointer file)
-    are read via a legacy fallback and migrate on their next write."""
+    same discipline the BM25/IVF indexes and the streaming accumulations
+    use. Snapshot commits are rename-free, but kept part-files and the
+    change log are hardlinked, so the store needs a POSIX filesystem
+    with hardlinks; on object storage use Delta."""
 
     def __init__(
         self,
@@ -143,40 +148,32 @@ class StateStore:
         partition_by: tuple[str, ...] = ("device_type",),
         keep_versions: int = 1,
         log_appends: bool = True,
-        cdc_mode: str = "hardlink",
     ) -> None:
         """``keep_versions`` > 1 retains older snapshots for time travel
         (``read(version=...)`` / ``versions()``) — the snapshot-store analog
         of Delta's VERSION AS OF, bounded so storage stays O(keep_versions).
 
         ``log_appends`` keeps an append change log under ``_cdc/`` that
-        ``stream_appends()`` exposes as a Structured-Streaming source.
+        ``stream_appends()`` exposes as a Structured-Streaming source: each
+        insert delta's part-files are hardlinked into a staged ``_tmp_…``
+        dir and published by one atomic rename — zero byte copies.
 
-        ``cdc_mode`` selects how that log is published (r11 verdict #3):
-
-        - ``"hardlink"`` (default, POSIX fast path): each insert delta's
-          part-files are hardlinked into a staged ``_tmp_…`` dir and
-          published by one atomic rename — zero byte copies, but needs a
-          filesystem with inodes and rename.
-        - ``"copy"`` (object-store-safe): staging is one tiny
-          underscore-prefixed JSON PUT listing the delta's part-files
-          (invisible to Spark readers), and publication copies those
-          bytes from the COMMITTED snapshot dir into the final
-          ``commit_version=<v>`` dir — create/delete-only, no links, no
-          renames, so it holds where the rest of the manifest protocol
-          holds. Each destination file is one single-key PUT (atomic on
-          object storage; torn local files from a simulated crash are
-          healed by ``recover()``'s size-checked idempotent re-copy).
+        A directory holding a ``_CURRENT`` pointer file (the pre-manifest
+        layout) raises ``ValueError`` here, before anything reads or
+        repairs it: ``recover()`` would delete every ``v_`` dir no
+        manifest lists, which on such a store is all of them.
         """
-        if cdc_mode not in ("hardlink", "copy"):
-            raise ValueError(f"cdc_mode must be hardlink|copy, got {cdc_mode}")
+        if os.path.exists(os.path.join(path, "_CURRENT")):
+            raise ValueError(
+                f"state store at {path} has a _CURRENT pointer file: the "
+                "pre-manifest layout is no longer read or migrated"
+            )
         self.spark = spark
         self.path = path
         self.key = key
         self.partition_by = partition_by
         self.keep_versions = max(1, keep_versions)
         self.log_appends = log_appends
-        self.cdc_mode = cdc_mode
         # (version, schema) of the snapshot staged by the last write; its
         # manifest records the schema when that version commits
         self._staged_schema: tuple[str, StructType] | None = None
@@ -184,39 +181,12 @@ class StateStore:
 
     # -- snapshot mechanics ---------------------------------------------------
 
-    def _pointer_file(self) -> str:
-        return os.path.join(self.path, _POINTER)
-
     def _meta_dir(self) -> str:
         return os.path.join(self.path, _META)
 
-    def _committed_versions(self) -> list[str]:
-        """Versions with a valid manifest (parses + self-checksums) whose
-        snapshot dir exists, ascending. A manifest truncated by a crashed
-        PUT fails the checksum and is ignored; a data dir without a
-        manifest is an uncommitted crash remnant and is ignored."""
-        if not os.path.isdir(self._meta_dir()):
-            return []
-        out = []
-        for e in os.scandir(self._meta_dir()):
-            got = read_manifest(e.path) if e.is_file() else None
-            if got is None:
-                continue
-            v = str(got[1].get("version", ""))
-            if v and os.path.isdir(self._snapshot_dir(v)):
-                out.append(v)
-        return sorted(out, key=int)
-
     def current_version(self) -> str | None:
-        vs = self._committed_versions()
-        if vs:
-            return vs[-1]
-        # legacy pre-manifest layout: resolve through the pointer file
-        try:
-            with open(self._pointer_file()) as f:
-                return f.read().strip() or None
-        except FileNotFoundError:
-            return None
+        vs = self.versions()
+        return vs[-1] if vs else None
 
     def _snapshot_dir(self, version: str) -> str:
         return os.path.join(self.path, f"v_{version}")
@@ -225,32 +195,28 @@ class StateStore:
         return self.current_version() is not None
 
     def versions(self) -> list[str]:
-        """Retained snapshot versions, oldest first (monotone timestamps) —
-        COMMITTED versions only (manifest-resolved); an uncommitted data
-        dir left by a crash is never listed. Legacy pointer-file stores
-        fall back to the directory listing."""
-        vs = self._committed_versions()
-        if vs or not os.path.exists(self._pointer_file()):
-            return vs
-        # Orphan guard on the pointer-era fallback (r11 advice): versions
-        # are monotone time_ns stamps, so a dir NEWER than the pointer is
-        # a staged-but-uncommitted snapshot (a crash between the data
-        # write and the store's first manifest PUT) — it must not be
-        # listed, served by read(version=...), or protected from
-        # recover(). Only dirs the pointer (or an older commit) reached
-        # are real.
-        cur = self.current_version()
-        if cur is None:
+        """Retained snapshot versions, oldest first (monotone timestamps):
+        those with a valid manifest (parses + self-checksums) whose
+        snapshot dir exists. A manifest truncated by a crashed PUT fails
+        the checksum and is ignored; a data dir without a manifest is an
+        uncommitted crash remnant and is never listed. A valid manifest
+        without a schema (the layout before schemas were recorded) raises
+        ``ValueError``, so every read and write refuses such a store."""
+        if not os.path.isdir(self._meta_dir()):
             return []
         out = []
-        for d in os.listdir(self.path):
-            if not d.startswith("v_"):
+        for e in os.scandir(self._meta_dir()):
+            got = read_manifest(e.path) if e.is_file() else None
+            if got is None:
                 continue
-            try:
-                if int(d[2:]) <= int(cur):
-                    out.append(d[2:])
-            except ValueError:
-                continue
+            if "schema" not in got[1]:
+                raise ValueError(
+                    f"state store at {self.path}: manifest {e.name} records "
+                    "no schema; the schema-less manifest layout is no longer read"
+                )
+            v = str(got[1].get("version", ""))
+            if v and os.path.isdir(self._snapshot_dir(v)):
+                out.append(v)
         return sorted(out, key=int)
 
     def read(self, version: str | None = None) -> DataFrame:
@@ -261,9 +227,7 @@ class StateStore:
         batch carrying new columns) a snapshot legitimately mixes
         old-schema (hardlinked) and new-schema part-files; the recorded
         schema is their merge, and rows from old files read NULL for the
-        new columns. A manifest without a schema (written before schemas
-        were recorded, or a pointer-era store) falls back to ``mergeSchema``
-        inference: one footer-read job over the snapshot's files."""
+        new columns."""
         version = version or self.current_version()
         if version is None:
             raise FileNotFoundError(f"state store at {self.path} not initialised")
@@ -272,19 +236,15 @@ class StateStore:
                 f"version {version} not retained (keep_versions="
                 f"{self.keep_versions}) or never committed"
             )
-        schema = self._recorded_schema(version)
-        reader = (
-            self.spark.read.schema(schema)
-            if schema is not None
-            else self.spark.read.option("mergeSchema", "true")
+        return self.spark.read.schema(self._recorded_schema(version)).parquet(
+            self._snapshot_dir(version)
         )
-        return reader.parquet(self._snapshot_dir(version))
 
-    def _recorded_schema(self, version: str) -> StructType | None:
-        """The schema ``version``'s manifest records, if it records one."""
+    def _recorded_schema(self, version: str) -> StructType:
+        """The schema ``version``'s manifest records (``versions()`` has
+        refused any committed manifest without one)."""
         got = read_manifest(manifest_path(self._meta_dir(), int(version)))
-        schema = got[1].get("schema") if got else None
-        return StructType.fromJson(schema) if schema else None
+        return StructType.fromJson(got[1]["schema"])
 
     def _stage_schema(
         self, version: str, df: DataFrame, base: StructType | None
@@ -332,12 +292,10 @@ class StateStore:
         """Delete-only retention: committed snapshots beyond the pinned
         set and the keep_versions window lose their data dir AND their
         manifest file; manifests that fail to parse (truncated PUTs) or
-        whose data dir is gone are unlinked; legacy staging dirs are
-        cleared. Never touches an uncommitted data dir — recover() owns
-        crash-remnant removal (GC may run while a legacy store has
-        pointer-era dirs that the fallback versions() still lists)."""
+        whose data dir is gone are unlinked. Never touches an uncommitted
+        data dir — recover() owns crash-remnant removal."""
         current = self.current_version()
-        committed = self._committed_versions()
+        committed = self.versions()
         keep_set = set(keep) | ({current} if current else set())
         keep_set |= set(committed[-self.keep_versions:])
         for v in committed:
@@ -358,27 +316,20 @@ class StateStore:
                         os.unlink(e.path)
                     except OSError:
                         pass
-        # legacy-layout staging dirs orphaned by a pre-migration crash
-        for d in os.listdir(self.path):
-            if d.startswith("_tmp_v_"):
-                shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
 
     def _commit_manifest(self, version: str) -> None:
         """THE commit point: one manifest PUT (no rename anywhere). The
         manifest id is the integer version itself — versions are monotone
         time_ns stamps, so the highest-id manifest IS the newest commit.
-        A legacy pointer file is retired on the first manifest commit.
         The manifest records the schema the write staged for ``version``."""
         prev = self.current_version()
-        payload: dict = {"version": version}
         staged, schema = self._staged_schema or (None, None)
-        if staged == version:
-            payload["schema"] = schema.jsonValue()
-        put_manifest(self._meta_dir(), int(version), payload)
-        try:
-            os.unlink(self._pointer_file())
-        except OSError:
-            pass
+        assert staged == version, "every write stages its schema before it commits"
+        put_manifest(
+            self._meta_dir(),
+            int(version),
+            {"version": version, "schema": schema.jsonValue()},
+        )
         # grace window: the just-superseded snapshot survives this commit so
         # in-flight readers of the old version don't lose files mid-scan
         self._gc(keep=(version, prev) if prev else (version,))
@@ -567,10 +518,6 @@ class StateStore:
     def cdc_path(self) -> str:
         return os.path.join(self.path, "_cdc")
 
-    def _staged_listing(self, version: str) -> str:
-        # underscore prefix: invisible to Spark's path filter, like _tmp_
-        return os.path.join(self.cdc_path(), f"_staged_v{version}.json")
-
     def _log_append(self, delta_dir: str, version: str) -> None:
         """STAGE the delta's part-files into the append change log. The
         leading underscore keeps every staged artifact invisible to Spark
@@ -580,87 +527,27 @@ class StateStore:
         right after the manifest commit; a crash in between is healed by
         ``recover()`` (the snapshot dir proves the commit happened).
 
-        hardlink mode: links the delta files into
-        ``_cdc/_tmp_commit_version=<v>/`` (partition subdirs preserved) —
-        the log is free at write time and published by one atomic rename.
-
-        copy mode (object-store-safe): records only the delta files'
-        relative paths in one small ``_staged_v<v>.json`` PUT.
-        ``delta_dir`` is always the version's own snapshot dir (the delta
-        part-files land there FIRST, before old files link in), so the
-        publish step can later copy the bytes from the committed snapshot
-        — no second write job, no links, no renames."""
+        Links the delta files into ``_cdc/_tmp_commit_version=<v>/``
+        (partition subdirs preserved) — the log is free at write time and
+        published by one atomic rename."""
         if not self.log_appends:
             return
-        if self.cdc_mode == "hardlink":
-            self._link_tree(
-                delta_dir,
-                os.path.join(self.cdc_path(), f"_tmp_commit_version={version}"),
-            )
-            return
-        import json
-
-        rels = []
-        for root, _dirs, files in os.walk(delta_dir):
-            rel = os.path.relpath(root, delta_dir)
-            for fn in files:
-                if fn.startswith(("_", ".")):
-                    continue
-                rels.append(fn if rel == "." else os.path.join(rel, fn))
-        os.makedirs(self.cdc_path(), exist_ok=True)
-        with open(self._staged_listing(version), "w") as f:
-            f.write(json.dumps({"files": sorted(rels)}))
-            f.flush()
-            os.fsync(f.fileno())
+        self._link_tree(
+            delta_dir,
+            os.path.join(self.cdc_path(), f"_tmp_commit_version={version}"),
+        )
 
     def _finalize_log(self, version: str) -> None:
-        """Publish the staged CDC entry for a just-committed version.
-
-        hardlink mode: a single atomic rename of the staged dir.
-
-        copy mode: copy each listed delta file from the committed
-        ``v_<version>`` snapshot dir into ``commit_version=<v>/`` —
-        create-only single-key PUTs (atomic per file on object storage),
-        then delete the staged listing. Idempotent and crash-repairable:
-        a re-run (or ``recover()``) skips files already fully copied
-        (size check heals a torn local file from a simulated mid-copy
-        crash) and re-deletes the listing. The copy happens while the
-        source snapshot is the CURRENT version, which GC always retains,
-        so sources cannot vanish mid-publish."""
+        """Publish the staged CDC entry for a just-committed version: a
+        single atomic rename of the staged dir."""
         if not self.log_appends:
             return
-        # the STAGED ARTIFACT decides the publish protocol, not the
-        # instance's cdc_mode: a store reopened under the other mode must
-        # still heal a predecessor's staged entry
         tmp = os.path.join(self.cdc_path(), f"_tmp_commit_version={version}")
         if os.path.isdir(tmp):
             os.rename(
                 tmp,
                 os.path.join(self.cdc_path(), f"commit_version={version}"),
             )
-        import json
-
-        listing = self._staged_listing(version)
-        if not os.path.isfile(listing):
-            return
-        with open(listing) as f:
-            rels = json.load(f)["files"]
-        src_root = self._snapshot_dir(version)
-        dst_root = os.path.join(self.cdc_path(), f"commit_version={version}")
-        for rel in rels:
-            src = os.path.join(src_root, rel)
-            dst = os.path.join(dst_root, rel)
-            try:
-                if os.path.getsize(dst) == os.path.getsize(src):
-                    continue  # already fully published (idempotent re-run)
-            except OSError:
-                pass
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            with open(src, "rb") as s, open(dst, "wb") as d:
-                shutil.copyfileobj(s, d)
-                d.flush()
-                os.fsync(d.fileno())
-        os.unlink(listing)
 
     def recover(self) -> dict[str, int]:
         """Crash recovery. Runs automatically at the start of every write
@@ -670,21 +557,22 @@ class StateStore:
         operation can be mid-flight then; construction alone must NOT
         recover — a reader instance opened beside an in-flight writer
         would destroy its staging). Finalizes staged CDC entries whose
-        snapshot commit completed (the ``v_<version>`` dir exists), drops
+        snapshot commit completed (the version is the newest committed
+        manifest), drops
         staged entries of versions that never committed, and clears orphan
-        ``_tmp_v_*`` staging dirs. Exactly-once CDC publication per commit
+        snapshot dirs. Exactly-once CDC publication per commit
         follows: a committed append's change entry always becomes visible
         (here, if not already finalized), and an uncommitted one never
         does."""
         finalized = dropped = staging = 0
-        cur = self.current_version()
+        vs = self.versions()
+        cur = vs[-1] if vs else None
         # Orphan snapshot dirs: data written but never manifest-committed
-        # (a crash between write and PUT), or pre-migration legacy dirs a
-        # manifest-era store no longer lists. They must go BEFORE the CDC
+        # (a crash between write and PUT). They must go BEFORE the CDC
         # pass — "the v_ dir exists" does NOT mean committed. Truncated
         # manifest files (a crashed PUT) are invalid by checksum and
         # removed by _gc on the next commit; they are ignored here.
-        committed = set(self.versions())
+        committed = set(vs)
         for d in os.listdir(self.path):
             if d.startswith("v_") and d[2:] not in committed:
                 shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
@@ -694,36 +582,16 @@ class StateStore:
             for d in os.listdir(root):
                 if d.startswith("_tmp_commit_version="):
                     v = d.split("=", 1)[1]
-                    # committed ⟺ the pointer reached this version: staged
-                    # entries only linger from the LAST crashed write
-                    # (single-writer), and every pre-swap crash leaves the
-                    # pointer on an older version
+                    # committed ⟺ the newest manifest is this version:
+                    # staged entries only linger from the LAST crashed
+                    # write (single-writer), and every pre-commit crash
+                    # leaves the newest manifest on an older version
                     if v == cur:
                         self._finalize_log(v)
                         finalized += 1
                     else:
                         shutil.rmtree(os.path.join(root, d), ignore_errors=True)
                         dropped += 1
-                elif d.startswith("_staged_v") and d.endswith(".json"):
-                    # copy-mode staged listing (one small PUT): same
-                    # committed ⟺ current-version reasoning as above; the
-                    # finalize re-copy is idempotent and size-checked, so
-                    # it also heals a torn destination file from a crash
-                    # mid-publish
-                    v = d[len("_staged_v"):-len(".json")]
-                    if v == cur:
-                        self._finalize_log(v)
-                        finalized += 1
-                    else:
-                        try:
-                            os.unlink(os.path.join(root, d))
-                        except OSError:
-                            pass
-                        dropped += 1
-        for d in os.listdir(self.path):
-            if d.startswith("_tmp_v_"):
-                shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
-                staging += 1
         return {
             "cdc_finalized": finalized,
             "cdc_dropped": dropped,
@@ -786,9 +654,9 @@ class StateStore:
         existing snapshot files are hardlinked, only the delta is written.
 
         Additive schema evolution: a batch may carry columns the state has
-        never seen (they join the table schema; existing rows read NULL via
-        mergeSchema) and may omit existing columns (filled NULL, typed from
-        the state schema) — Delta's mergeSchema-on-append contract. Returns
+        never seen (they join the recorded table schema; existing rows read
+        NULL) and may omit existing columns (filled NULL, typed from the
+        state schema) — Delta's mergeSchema-on-append contract. Returns
         the number of rows inserted."""
         self.recover()
         incoming = incoming.dropDuplicates([self.key])
@@ -927,9 +795,10 @@ class StateStore:
             # left_outer join would drop it and the duplicate-keys
             # ValueError contract would silently pass); update-only drops
             # those rows via the __keep filter AFTER the observe. Same
-            # shuffle either way.
+            # shuffle either way. No broadcast hint: Spark cannot broadcast
+            # either side of a full outer join and would drop it.
             j = target.alias("t").join(
-                F.broadcast(checked).alias("src"),
+                checked.alias("src"),
                 F.col(f"t.{self.key}") == F.col(f"src.{self.key}"),
                 "full_outer",
             )

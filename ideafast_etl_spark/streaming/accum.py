@@ -50,13 +50,12 @@ semantics), never a rename:
   so reads stay exact, and the next compaction (or stream start)
   deletes the remnants.
 
-This mirrors the pointer-file discipline of ``state/store.py`` (the
-atomic pointer swap at store.py:158) in the shape object stores
-support: an append-only metadata log with validity checks, as in
-Delta's ``_last_checkpoint`` / Iceberg's metadata files. Pre-r10
-rename-committed ``compact-<id>`` directories remain readable as
-committed snapshots (they could only exist post-rename) and are
-migrated away by the next compaction.
+This is the manifest discipline of ``state/manifest.py``, shared with
+the state store: an append-only metadata log with validity checks, as
+in Delta's ``_last_checkpoint`` / Iceberg's metadata files. An
+accumulation holding a rename-committed ``compact-<id>`` directory (the
+layout before manifests) is refused with ``ValueError``: it is never
+read, migrated or deleted.
 """
 
 from __future__ import annotations
@@ -76,7 +75,7 @@ from ..state.manifest import (
 )
 
 _BATCH_RE = re.compile(r"^batch-(\d+)$")
-_LEGACY_COMPACT_RE = re.compile(r"^compact-(\d+)$")
+_LEGACY_COMPACT_RE = re.compile(r"^compact-\d+$")  # refused, never read
 _DATA_RE = re.compile(r"^compactdata-(\d+)$")
 _MANIFEST_DIRNAME = "_compact"  # underscore prefix: invisible to Spark scans
 
@@ -111,25 +110,23 @@ def _read_manifest(path: str) -> tuple[int, str] | None:
 def _compact_dir(accum_dir: str) -> tuple[int, str] | None:
     """(high-water batch id, data path) of the newest COMMITTED
     consolidated snapshot: the highest-id valid manifest whose data
-    directory exists, or a legacy rename-committed ``compact-<id>``
-    directory, whichever is newer."""
+    directory exists. Every reader and writer resolves through here, so
+    a rename-committed ``compact-<id>`` directory raises ``ValueError``
+    before anything reads or repairs the accumulation."""
     root = accum_dir.rstrip("/")
     if not os.path.isdir(root):
         return None
+    for e in os.scandir(root):
+        if _LEGACY_COMPACT_RE.match(e.name) and e.is_dir():
+            raise ValueError(
+                f"accumulation {root!r} holds {e.name!r}: the rename-committed "
+                "compact-<id> layout is no longer read or migrated"
+            )
     got = latest_manifest(
         _manifest_dir(root),
         valid=lambda p: os.path.isdir(os.path.join(root, str(p["data"]))),
     )
-    best = (
-        (got[0], os.path.join(root, str(got[1]["data"]))) if got else None
-    )
-    for e in os.scandir(root):
-        m = _LEGACY_COMPACT_RE.match(e.name)
-        if m and e.is_dir():
-            hwm = int(m.group(1))
-            if best is None or hwm > best[0]:
-                best = (hwm, e.path)
-    return best
+    return (got[0], os.path.join(root, str(got[1]["data"]))) if got else None
 
 
 def _checkpoint_used(checkpoint_dir: str) -> bool:
@@ -163,7 +160,7 @@ def guard_fresh_checkpoint(checkpoint_dir: str, *accum_dirs: str) -> None:
     if _checkpoint_used(checkpoint_dir):
         return
     for d in accum_dirs:
-        if _batch_dirs(d) or _compact_dir(d):
+        if _compact_dir(d) or _batch_dirs(d):
             raise ValueError(
                 f"accumulation directory {d!r} already contains batch data "
                 f"but checkpoint {checkpoint_dir!r} is empty: a fresh "
@@ -177,9 +174,8 @@ def _repair(accum_dir: str) -> None:
     """Remove crash remnants (delete-only — safe under the single-writer
     contract): folded batch dirs at or below the committed high-water
     mark, data directories no valid manifest references (crashed or
-    superseded snapshot writes), manifests other than the winning one
-    (truncated commit attempts and superseded entries), superseded
-    legacy snapshots, and pre-r10 hidden staging dirs."""
+    superseded snapshot writes), and manifests other than the winning one
+    (truncated commit attempts and superseded entries)."""
     root = accum_dir.rstrip("/")
     if not os.path.isdir(root):
         return
@@ -190,14 +186,8 @@ def _repair(accum_dir: str) -> None:
         if bid <= hwm:
             shutil.rmtree(path, ignore_errors=True)
     for e in os.scandir(root):
-        if e.name.startswith(".compact-") and e.is_dir():
+        if _DATA_RE.match(e.name) and e.is_dir() and e.name != live_data:
             shutil.rmtree(e.path, ignore_errors=True)
-        elif _DATA_RE.match(e.name) and e.is_dir() and e.name != live_data:
-            shutil.rmtree(e.path, ignore_errors=True)
-        else:
-            m = _LEGACY_COMPACT_RE.match(e.name)
-            if m and e.is_dir() and (comp is None or e.path != comp[1]):
-                shutil.rmtree(e.path, ignore_errors=True)
     prune_manifests(_manifest_dir(root), hwm if live_data else None)
 
 

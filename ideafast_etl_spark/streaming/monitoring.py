@@ -61,11 +61,9 @@ def _publish(report: DataFrame, out_dir: str) -> None:
     prune). Rename-free, so the publish holds on object storage. Readers
     resolve the live snapshot with :func:`latest_report_dir` — always
     either the previous snapshot or the new one, never a partial write.
-    Legacy flat/symlink layouts (older releases) are retired by
-    ``commit_dir`` itself: the first manifest commit makes them
-    unreachable but keeps them one commit as a reader grace window; the
-    second commit removes them (r11 advice — a reader that resolved the
-    old dir just before the publish must not lose files mid-scan)."""
+    The superseded snapshot is kept one commit as a reader grace window
+    (r11 advice — a reader that resolved it just before the publish must
+    not lose files mid-scan)."""
     from ..state.manifest import commit_dir, next_dir_version
 
     base = out_dir.rstrip("/")
@@ -76,8 +74,7 @@ def _publish(report: DataFrame, out_dir: str) -> None:
 
 def latest_report_dir(out_dir: str) -> str:
     """The live committed snapshot dir for a detector report — pass this
-    to ``spark.read.parquet``. Falls back to ``out_dir`` itself for
-    pre-manifest layouts."""
+    to ``spark.read.parquet``."""
     from ..state.manifest import resolve_dir
 
     return resolve_dir(out_dir)

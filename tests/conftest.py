@@ -35,7 +35,6 @@ def spark():
 # whole files: themed heavy suites — crash matrices, compaction protocols,
 # e2e pipelines, streaming twins, dup-dense posture parity
 SLOW_FILES = {
-    "test_store_crash_recovery.py",   # 109 s: crash matrix
     "test_accum_compaction.py",       # 135 s: compaction + crash protocol
     "test_bm25_compaction.py",        # 78 s: compaction protocol
     "test_pipeline_e2e.py",           # 105 s: full-DAG e2e reruns

@@ -299,27 +299,6 @@ def test_crash_after_data_before_manifest_is_invisible(spark, tmp_path):
     assert _compact_dir(root)[0] == 1
 
 
-def test_legacy_rename_committed_snapshot_still_reads_and_migrates(
-    spark, tmp_path
-):
-    """A pre-r10 ``compact-<id>`` dir (rename-committed, no manifest)
-    counts as committed; the next compaction folds it into a
-    manifest-committed snapshot and removes it."""
-    root, ckpt = str(tmp_path / "acc"), str(tmp_path / "ck")
-    _fake_accum(spark, root, ckpt, {2: [3]}, {2})
-    spark.createDataFrame(
-        [(1, "t1"), (2, "t2")], SCHEMA
-    ).coalesce(1).write.parquet(f"{root}/compact-1")
-
-    assert _compact_dir(root)[0] == 1
-    assert _ids(spark, root) == [1, 2, 3]
-
-    assert compact_accumulation(spark, root, ckpt) == 1
-    assert _ids(spark, root) == [1, 2, 3]
-    assert not os.path.exists(f"{root}/compact-1")
-    assert {os.path.basename(p) for p in live_paths(root)} == {"compactdata-2"}
-
-
 # ---------------------------------------------------------------------------
 # Retention (r9 verdict #6): log accumulations expire rows older than a
 # committed-batch horizon at compaction time; replay idempotence and the

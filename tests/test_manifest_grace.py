@@ -1,16 +1,14 @@
 """r11-advice hardening of the shared versioned-dir commit primitive
-(state/manifest.py): legacy-sibling version numbering, the one-commit
-reader grace window, and legacy-layout remnant cleanup.
+(state/manifest.py): the one-commit reader grace window and crash-remnant
+cleanup.
 
 Scenarios (ADVICE r11):
-- a pre-manifest release numbered snapshot dirs by sibling scan with a
-  live ``base`` symlink; the first manifest-era publish must NOT stage
-  into the legacy live dir (next_dir_version counts siblings);
 - commit_dir keeps the immediately-previous live dir through one commit
   so a reader that resolved it just before the publish can finish its
   scan (StateStore._gc's discipline);
-- `<base>.v<N>.legacy` dirs and `<base>.lnk.*` temp symlinks from a
-  crashed pre-manifest publish are removed by the commit's cleanup.
+- a flat input dir gets the same grace before it is retired;
+- a crashed attempt's unreferenced staged dir is never live and gets no
+  grace.
 """
 
 import os
@@ -31,34 +29,6 @@ def _mkdata(d: str, tag: str) -> None:
 def _tag(d: str) -> str:
     with open(os.path.join(d, "data.txt")) as f:
         return f.read()
-
-
-def test_next_version_skips_legacy_sibling_dirs(tmp_path):
-    """A legacy store (sibling-numbered dirs + live symlink, empty
-    manifest log) must not have its live snapshot staged over."""
-    base = str(tmp_path / "t")
-    _mkdata(base + ".v1", "legacy-live")
-    os.symlink(base + ".v1", base)
-    ver, new_dir = next_dir_version(base)
-    assert (ver, new_dir) == (2, base + ".v2")
-    # staging + committing never touched the legacy live data
-    _mkdata(new_dir, "new")
-    assert _tag(base + ".v1") == "legacy-live"
-    live = commit_dir(base, ver)
-    assert resolve_dir(base) == live == base + ".v2"
-    # grace window: the legacy live target survives the FIRST commit so a
-    # reader mid-scan through the symlink keeps its files
-    assert os.path.isdir(base + ".v1")
-    assert _tag(os.path.realpath(base)) == "legacy-live"
-    # the SECOND commit retires symlink + legacy target together
-    ver2, dir2 = next_dir_version(base)
-    assert ver2 == 3
-    _mkdata(dir2, "newer")
-    commit_dir(base, ver2)
-    assert not os.path.lexists(base)  # symlink gone
-    assert not os.path.isdir(base + ".v1")  # legacy data gone
-    assert os.path.isdir(base + ".v2")  # prev commit in grace
-    assert resolve_dir(base) == base + ".v3"
 
 
 def test_grace_window_keeps_exactly_one_previous_commit(tmp_path):
@@ -92,32 +62,20 @@ def test_flat_legacy_dir_grace_then_retire(tmp_path):
     assert os.path.isdir(base + ".v1")  # prev commit now holds the grace
 
 
-def test_cleanup_removes_legacy_remnants(tmp_path):
-    """Crashed pre-manifest publishes left `<base>.v<N>.legacy` dirs and
-    `<base>.lnk.*` temp symlinks; the commit's cleanup removes them."""
-    base = str(tmp_path / "r")
-    _mkdata(base + ".v7.legacy", "old")
-    _mkdata(base + ".victim-not-matching", "keep")  # foreign sibling
-    os.symlink(base + ".v7.legacy", base + ".lnk.1234")
-    ver, d = next_dir_version(base)
-    assert ver == 1  # .legacy / .lnk names don't count as versions
-    _mkdata(d, "v1")
-    commit_dir(base, ver)
-    assert not os.path.isdir(base + ".v7.legacy")
-    assert not os.path.lexists(base + ".lnk.1234")
-    assert os.path.isdir(base + ".victim-not-matching")  # untouched
-    assert resolve_dir(base) == base + ".v1"
-
-
 def test_unreferenced_staging_remnant_gets_no_grace(tmp_path):
-    """A crashed attempt's staged dir was never live — cleanup removes it
-    at the next commit and the version counter moves past it."""
+    """A crashed attempt's staged dir was never live: the retry stages
+    over it at the same id, and cleanup removes any other unreferenced
+    version dir at the next commit."""
     base = str(tmp_path / "u")
     _mkdata(base + ".v1", "crashed-staging")  # no manifest ever PUT
+    _mkdata(base + ".v5", "stray-staging")
+    _mkdata(base + ".victim-not-matching", "keep")  # foreign sibling
     assert resolve_dir(base) == base  # invisible
     ver, d = next_dir_version(base)
-    assert ver == 2  # sibling scan: never stage over an existing dir
-    _mkdata(d, "v2")
+    assert (ver, d) == (1, base + ".v1")  # the retry reuses the crashed id
+    _mkdata(d, "v1")
     commit_dir(base, ver)
-    assert not os.path.isdir(base + ".v1")
-    assert resolve_dir(base) == base + ".v2"
+    assert _tag(base + ".v1") == "v1"
+    assert not os.path.isdir(base + ".v5")
+    assert os.path.isdir(base + ".victim-not-matching")  # untouched
+    assert resolve_dir(base) == base + ".v1"

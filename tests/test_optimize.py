@@ -115,16 +115,15 @@ def test_crashed_attempt_is_invisible_then_repaired(spark, tmp_path):
     assert resolve_dir(p) == p  # fails checksum, ignored
     assert sorted(map(tuple, _read(spark, p).collect())) == before
 
-    # the retry commits for real; the sibling scan (r11 advice) skips past
-    # the crashed remnant's number instead of staging over it, and the
-    # commit's cleanup removes the remnant (no manifest ever referenced it)
+    # the retry commits for real at the crashed attempt's id: it clears
+    # the unreferenced remnant, stages over it, and its manifest PUT
+    # replaces the truncated one at the same key
     stats = optimize_table(spark, p, target_file_mb=128)
     assert stats["skipped"] is False and stats["files_before"] == 20
-    assert stats["dir"] == p + ".v2"
-    assert not os.path.isdir(p + ".v1")  # unreferenced remnant: no grace
+    assert stats["dir"] == p + ".v1"
+    # no remnant row survives the restage
     assert sorted(map(tuple, _read(spark, p).collect())) == before
-    # truncated manifest pruned by the commit
     assert sorted(os.listdir(_dir_meta(p))) == [
-        os.path.basename(manifest_path(_dir_meta(p), 2))
+        os.path.basename(manifest_path(_dir_meta(p), 1))
     ]
     assert not glob.glob(p + ".__*")  # no old-protocol remnants ever

@@ -3,9 +3,8 @@
 Every commit records the schema parquet ``mergeSchema`` would infer over
 the snapshot's files, so ``read()`` runs no footer-inference job. These
 tests check the recorded schema against real inference after every kind of
-transition, that such a read launches no Spark job, that a manifest
-without a schema still reads by inference, and that no transition moves
-the state's columns around.
+transition, that such a read launches no Spark job, and that no
+transition moves the state's columns around.
 """
 
 import warnings
@@ -13,7 +12,6 @@ import warnings
 from pyspark.sql import functions as F
 
 from ideafast_etl_spark.state import StateStore
-from ideafast_etl_spark.state.manifest import put_manifest
 
 COLS = "hash string, ref string, dmp_id string, is_uploaded boolean, x string, device_type string"
 
@@ -194,32 +192,6 @@ def test_read_with_recorded_schema_runs_no_job(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert tracker.getJobIdsForGroup("state-read-no-job") == []
     assert df.count() == 9
-
-
-def test_manifest_without_schema_reads_by_inference(spark, tmp_path):
-    store = _store(spark, tmp_path)
-    v = store.current_version()
-    want = sorted(map(tuple, store.read().collect()))
-    schema = store.read().schema
-    # rewrite the manifest the way stores committed before schemas were
-    # recorded: the version alone
-    put_manifest(store._meta_dir(), int(v), {"version": v})
-    assert store._recorded_schema(v) is None
-    sc = spark.sparkContext
-    sc.setJobGroup("state-read-infer", "read() of a legacy manifest")
-    try:
-        df = store.read()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert sc.statusTracker().getJobIdsForGroup("state-read-infer") != []
-    assert df.schema == schema
-    assert sorted(map(tuple, df.collect())) == want
-    # the next commit records a schema again
-    store.merge_non_overwrite(
-        spark.createDataFrame([("h1", "X")], "hash string, x string"), ("x",)
-    )
-    _check(spark, store)
-    assert store.read().filter(F.col("x") == "X").count() == 1
 
 
 def test_conflicting_column_type_fails_before_writing(spark, tmp_path):

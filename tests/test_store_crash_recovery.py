@@ -52,8 +52,8 @@ class Crash(RuntimeError):
     pass
 
 
-def _mkstore(spark, path, cdc_mode="hardlink"):
-    store = StateStore(spark, str(path), cdc_mode=cdc_mode)
+def _mkstore(spark, path):
+    store = StateStore(spark, str(path))
     store.init(spark.createDataFrame(BASE_ROWS, SCHEMA))
     return store
 
@@ -145,15 +145,13 @@ def _apply(op, spark, store):
 
 OPS = ["append_new", "merge_non_overwrite", "mark_uploaded"]
 POINTS = ["staged", "manifest_truncated", "committed"]
-CDC_MODES = ["hardlink", "copy"]
 
 
 @pytest.mark.parametrize("op", OPS)
 @pytest.mark.parametrize("point", POINTS)
-@pytest.mark.parametrize("cdc_mode", CDC_MODES)
-def test_crash_then_retry_converges(spark, tmp_path, op, point, cdc_mode):
-    store = _mkstore(spark, tmp_path / "s", cdc_mode)
-    control = _mkstore(spark, tmp_path / "control", cdc_mode)
+def test_crash_then_retry_converges(spark, tmp_path, op, point):
+    store = _mkstore(spark, tmp_path / "s")
+    control = _mkstore(spark, tmp_path / "control")
     pre_rows = _rows(store)
     pre_cdc = _cdc_rows(spark, store)
 
@@ -163,9 +161,9 @@ def test_crash_then_retry_converges(spark, tmp_path, op, point, cdc_mode):
     _disarm(store)
 
     # invariant 1: a fresh open sees a consistent snapshot — pre-write for
-    # any crash before the pointer swap, post-write after it — and the
+    # any crash before the manifest commit, post-write after it — and the
     # published CDC never contains rows of an uncommitted version
-    reopened = StateStore(spark, str(tmp_path / "s"), cdc_mode=cdc_mode)
+    reopened = StateStore(spark, str(tmp_path / "s"))
     if point == "committed":
         assert _rows(reopened) != pre_rows
     else:
@@ -187,15 +185,12 @@ def test_crash_then_retry_converges(spark, tmp_path, op, point, cdc_mode):
     assert _rows(reopened) == _rows(control)
     # CDC published exactly once per committed append, zero for merges
     assert _cdc_rows(spark, reopened) == _cdc_rows(spark, control)
-    # no staged CDC entry or staging dir survives the recovered retry
+    # no staged CDC entry survives the recovered retry
     assert not [
         d
         for d in os.listdir(reopened.cdc_path())
-        if d.startswith(("_tmp_commit_version=", "_staged_v"))
+        if d.startswith("_tmp_commit_version=")
     ] if os.path.isdir(reopened.cdc_path()) else True
-    assert not [
-        d for d in os.listdir(reopened.path) if d.startswith("_tmp_v_")
-    ]
 
 
 def test_append_crash_mid_link_recovers(spark, tmp_path):
@@ -231,7 +226,7 @@ def test_append_crash_mid_link_recovers(spark, tmp_path):
 
 
 def test_committed_crash_cdc_finalized_on_next_write(spark, tmp_path):
-    """Crash AFTER the pointer swap but BEFORE the CDC finalize: the
+    """Crash AFTER the manifest commit but BEFORE the CDC finalize: the
     append is durable but its change entry is still staged. The next
     write's recover() must publish it — committed appends reach the CDC
     exactly once, even across this crash."""
@@ -261,10 +256,9 @@ def test_store_commit_protocol_is_rename_free(spark, tmp_path, monkeypatch):
     """r10 verdict #6: every SNAPSHOT commit point (init, append, merge,
     mark_uploaded, GC) runs on create/delete-only filesystem ops — no
     os.rename/os.replace/shutil.move anywhere in the protocol, so it
-    holds on object storage. The hardlink CDC change log is excluded by
-    design (hardlinks + a rename publish — the documented POSIX-layout
-    fast path, log_appends=False here); cdc_mode="copy" covers the
-    object-store CDC story in the test below."""
+    holds on object storage. The CDC change log is excluded by design
+    (hardlinks + a rename publish on the POSIX filesystem the store
+    requires; log_appends=False here)."""
     import shutil as _sh
 
     from ideafast_etl_spark.state import StateStore
@@ -285,146 +279,3 @@ def test_store_commit_protocol_is_rename_free(spark, tmp_path, monkeypatch):
     store.merge_non_overwrite(upd, ("device_id",))
     store.mark_uploaded(spark.createDataFrame([("d1",)], "dmp_id string"))
     assert len(_rows(store)) == 5
-
-
-def test_copy_cdc_mode_is_rename_and_link_free(spark, tmp_path, monkeypatch):
-    """r11 verdict #3: with cdc_mode="copy" the FULL protocol — snapshot
-    commits AND the CDC publish — runs on create/delete-only ops: no
-    rename, no replace, no move, and no hardlink in the CDC path either
-    (object stores have none of them). The published log must be
-    byte-equivalent to the hardlink mode's."""
-    import shutil as _sh
-
-    from ideafast_etl_spark.state import StateStore
-
-    def boom(*a, **k):  # pragma: no cover - the assertion IS the test
-        raise AssertionError("rename used in the copy-mode protocol")
-
-    monkeypatch.setattr(os, "rename", boom)
-    monkeypatch.setattr(os, "replace", boom)
-    monkeypatch.setattr(_sh, "move", boom)
-
-    real_link = os.link
-    links_into_cdc = []
-    cdc_root = str(tmp_path / "s" / "_cdc")
-
-    def watch_link(src, dst, **kw):
-        if str(dst).startswith(cdc_root):
-            links_into_cdc.append(dst)
-        return real_link(src, dst, **kw)
-
-    monkeypatch.setattr(os, "link", watch_link)
-
-    store = StateStore(spark, str(tmp_path / "s"), cdc_mode="copy")
-    store.init(spark.createDataFrame(BASE_ROWS, SCHEMA))
-    assert store.append_new(spark.createDataFrame(NEW_ROWS, SCHEMA)) == 2
-    assert links_into_cdc == []  # the log was copied, never linked
-
-    # published log matches a hardlink-mode control store's, row for row
-    # (the control legitimately renames — lift the tripwires first)
-    monkeypatch.undo()
-    control = StateStore(spark, str(tmp_path / "control"))
-    control.init(spark.createDataFrame(BASE_ROWS, SCHEMA))
-    control.append_new(spark.createDataFrame(NEW_ROWS, SCHEMA))
-    assert _cdc_rows(spark, store) == _cdc_rows(spark, control)
-    # commit_version partitioning intact for windowed/replay consumers
-    import pyspark.sql.functions as _F
-
-    vers = (
-        spark.read.parquet(store.cdc_path())
-        .select(_F.countDistinct("commit_version").alias("n"))
-        .collect()[0]["n"]
-    )
-    # one logged commit: direct init() doesn't log (only the append_new
-    # bootstrap path does), so the single append is the whole log here
-    assert vers == 1
-
-
-def test_legacy_pointer_store_hides_staged_migration_orphan(spark, tmp_path):
-    """r11 advice (store.py legacy migration window): on a pointer-era
-    store (no manifests yet), a crash between _write_uncommitted's data
-    write and the FIRST manifest PUT leaves a v_<ts> dir NEWER than the
-    pointer. The fallback versions() must not list it, read(version=...)
-    must not serve it, and recover() must delete it — versions are
-    monotone time_ns stamps, so "newer than the pointer" identifies the
-    orphan exactly."""
-    import shutil as _sh
-
-    from ideafast_etl_spark.state.store import _META, _POINTER
-
-    store = _mkstore(spark, tmp_path / "legacy")
-    cur = store.current_version()
-    # devolve to the pre-manifest layout: pointer file, no manifest log
-    with open(os.path.join(store.path, _POINTER), "w") as f:
-        f.write(cur)
-    _sh.rmtree(os.path.join(store.path, _META))
-    reopened = StateStore(spark, store.path)
-    assert reopened.current_version() == cur
-    assert reopened.versions() == [cur]
-
-    # fabricate the crashed first manifest-era write: a partial staged
-    # snapshot strictly newer than the pointer
-    orphan = str(int(cur) + 1)
-    os.makedirs(os.path.join(store.path, f"v_{orphan}"))
-    with open(
-        os.path.join(store.path, f"v_{orphan}", "part-00000.parquet"), "wb"
-    ) as f:
-        f.write(b"\x00partial")
-
-    assert reopened.versions() == [cur]  # orphan never listed
-    got = reopened.read().select(
-        "hash", "device_type", "dmp_id", "is_uploaded", "device_id"
-    )
-    assert sorted(map(tuple, got.collect())) == sorted(BASE_ROWS)
-    # the next write's recover() clears the orphan instead of keeping it
-    stats = reopened.recover()
-    assert stats["staging_cleared"] == 1
-    assert not os.path.isdir(os.path.join(store.path, f"v_{orphan}"))
-    # and the store still works: a retry commits through the manifest
-    assert reopened.append_new(spark.createDataFrame(NEW_ROWS, SCHEMA)) == 2
-    assert len(_rows(reopened)) == 5
-
-
-def test_copy_cdc_crash_mid_publish_heals(spark, tmp_path, monkeypatch):
-    """Copy-mode's own widest window: the snapshot is committed and the
-    publish copy dies midway, leaving a torn destination file. recover()
-    must re-run the size-checked idempotent copy — the log ends complete
-    and exact, no duplicate and no torn file."""
-    import shutil as _sh
-
-    store = _mkstore(spark, tmp_path / "s", "copy")
-    pre_cdc = _cdc_rows(spark, store)
-
-    calls = {"n": 0}
-    real_copy = _sh.copyfileobj
-
-    def torn_copy(src, dst, *a, **k):
-        calls["n"] += 1
-        if calls["n"] == 1:
-            dst.write(src.read(7))  # tear the first file...
-            raise Crash()  # ...and die before the rest
-        return real_copy(src, dst, *a, **k)
-
-    monkeypatch.setattr(_sh, "copyfileobj", torn_copy)
-    with pytest.raises(Crash):
-        store.append_new(spark.createDataFrame(NEW_ROWS, SCHEMA))
-    monkeypatch.setattr(_sh, "copyfileobj", real_copy)
-
-    # the append itself is durable (commit happened before the publish)
-    reopened = StateStore(spark, str(tmp_path / "s"), cdc_mode="copy")
-    assert len(_rows(reopened)) == len(BASE_ROWS) + len(NEW_ROWS)
-    # healing: the next write's recover() completes the publish
-    stats = reopened.recover()
-    assert stats["cdc_finalized"] == 1
-    got = _cdc_rows(spark, reopened)
-    assert len(got) == len(pre_cdc) + len(NEW_ROWS)
-    # no staged listing left behind
-    assert not [
-        d
-        for d in os.listdir(reopened.cdc_path())
-        if d.startswith("_staged_v")
-    ]
-    # control equivalence
-    control = _mkstore(spark, tmp_path / "control", "copy")
-    control.append_new(spark.createDataFrame(NEW_ROWS, SCHEMA))
-    assert got == _cdc_rows(spark, control)

@@ -7,11 +7,13 @@ in-session comparison), warm median of 5 after 1 warmup, bench SF.
 Usage: python tools/ab_mmr.py <auto|driver|rowcollect|distributed> [sf_dir]
 """
 
+import os
 import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F
 

@@ -14,11 +14,13 @@ Usage: python tools/ab_shj.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import hashlib
+import os
 import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from ideafast_etl_spark.session import get_spark  # noqa: E402

@@ -14,10 +14,12 @@ Writes full plans to PLANS.md for review.
 from __future__ import annotations
 
 import io
+import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from ideafast_etl_spark import plan_audit  # noqa: E402
@@ -378,7 +380,7 @@ def main() -> int:
         if missing:
             failures.append(name)
         sections.append(f"## {label}\n\nexpect: {markers}\nstatus: {status}\n\n```\n{plan}\n```\n")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write(
             "# Physical plans (sf0.01) — audited markers\n\n"
             "Generated by tools/explain_plans.py; re-run after plan-affecting changes.\n\n"

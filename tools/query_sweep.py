@@ -7,10 +7,12 @@ Usage: python tools/query_sweep.py [sf_dir] [top_n]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from ideafast_etl_spark.session import get_spark  # noqa: E402
