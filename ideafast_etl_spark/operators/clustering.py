@@ -130,10 +130,9 @@ def kmeans_fit(
                 "cid", F.row_number().over(Window.orderBy("__id")) - F.lit(1)
             )
         )
-        cent = (
+        cent = materialize(
             pts.join(F.broadcast(seed_ids), "__id")
             .select("cid", "pos", F.col("ival").alias("icval"))
-            .localCheckpoint(eager=True)
         )
         for _ in range(iters):
             # assignment: cosine = dot(unit point, unit centroid)
@@ -174,7 +173,7 @@ def kmeans_fit(
                 .over(Window.partitionBy("cid"))
                 .cast("double")
             ) / _SCALE
-            cent = (
+            cent = materialize(  # k·dim rows: truncate lineage
                 sums.withColumn("__cnorm", cnorm)
                 # zero-norm guard: a cluster whose quantised mean is all zeros
                 # would divide by 0 → Inf/NaN → null icval; drop it instead —
@@ -189,7 +188,6 @@ def kmeans_fit(
                     .cast("long")
                     .alias("icval"),
                 )
-                .localCheckpoint(eager=True)  # k·dim rows: truncate lineage
             )
         # n rows of 3 columns
         assign = materialize(_assign_to_centroids(pts, cent, id_col))
@@ -299,17 +297,14 @@ def kmeans_assign_hierarchical(
     k2 = -(-k_total // k1)
 
     a1, _ = kmeans_fit(df, vec_col, id_col, k1, iters, target_cluster_size)
-    pts2 = (
-        _pos_exploded(df, id_col, vec_col)
-        .join(
+    with reuse(
+        _pos_exploded(df, id_col, vec_col).join(
             a1.select(
                 F.col(id_col).alias("__id"), F.col("cluster_id").alias("c1")
             ),
             "__id",
         )
-        .persist()
-    )
-    try:
+    ) as pts2:
         seed_ids = (
             a1.select(F.col(id_col).alias("__id"), F.col("cluster_id").alias("c1"))
             .withColumn(
@@ -320,10 +315,9 @@ def kmeans_assign_hierarchical(
             .filter(F.col("scid") < k2)
             .select("__id", "scid")
         )
-        cent = (
+        cent = materialize(
             pts2.join(F.broadcast(seed_ids), "__id")
             .select("c1", "scid", "pos", F.col("ival").alias("icval"))
-            .localCheckpoint(eager=True)
         )
         for _ in range(iters):
             sims = (
@@ -365,7 +359,7 @@ def kmeans_assign_hierarchical(
                 .over(Window.partitionBy("c1", "scid"))
                 .cast("double")
             ) / _SCALE
-            cent = (
+            cent = materialize(  # ≤ k·dim rows: lineage cut
                 sums.withColumn("__cnorm", cnorm)
                 .filter(F.col("__cnorm") > 0)
                 .select(
@@ -376,7 +370,6 @@ def kmeans_assign_hierarchical(
                     .cast("long")
                     .alias("icval"),
                 )
-                .localCheckpoint(eager=True)  # ≤ k·dim rows: lineage cut
             )
         sims = (
             pts2.join(F.broadcast(cent), ["c1", "pos"])
@@ -388,7 +381,7 @@ def kmeans_assign_hierarchical(
                 ).alias("sim")
             )
         )
-        assign = (
+        assign = materialize(  # n rows of 3 columns
             sims.withColumn(
                 "rn",
                 F.row_number().over(
@@ -403,10 +396,7 @@ def kmeans_assign_hierarchical(
                 (F.col("c1") * F.lit(k2) + F.col("scid")).alias("cluster_id"),
                 F.round(F.col("sim"), 6).alias("sim"),
             )
-            .localCheckpoint(eager=True)  # n rows of 3 columns
         )
-    finally:
-        pts2.unpersist()
     return assign
 
 

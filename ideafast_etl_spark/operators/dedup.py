@@ -21,7 +21,9 @@ In production (no oracle constraint) swap `_shingle_hash` to `xxhash64` for
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from contextlib import ExitStack
+
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import norm_text
@@ -436,27 +438,24 @@ def ngram_jaccard_pairs(
     actually trims; for exact results on hot-shingle corpora use
     :func:`minhash_near_dup_pairs` instead."""
     base = _spread(df, id_col)
-    sh = (
-        shingle_rows(base, text_col, id_col, shingle_words)
-        .join(
-            base.select(F.col(id_col), *([F.col(block_col)] if block_col else [])),
-            id_col,
-        )
-        if block_col
-        else shingle_rows(base, text_col, id_col, shingle_words)
-    ).persist()
-    try:
+    with ExitStack() as caches:
+        sh = caches.enter_context(reuse(
+            shingle_rows(base, text_col, id_col, shingle_words).join(
+                base.select(F.col(id_col), F.col(block_col)), id_col
+            )
+            if block_col
+            else shingle_rows(base, text_col, id_col, shingle_words)
+        ))
         if hot_doc_freq is not None:
             import warnings
 
             shingle_keys = ["shingle"] + ([block_col] if block_col else [])
-            hot = (
+            hot = caches.enter_context(reuse(
                 sh.groupBy(*shingle_keys)
                 .agg(F.count(F.lit(1)).alias("sdf"))
                 .filter(F.col("sdf") > hot_doc_freq)
                 .select(*shingle_keys)
-                .persist()
-            )
+            ))
             n_hot = hot.count()
             if n_hot:
                 warnings.warn(
@@ -468,10 +467,9 @@ def ngram_jaccard_pairs(
                     UserWarning,
                     stacklevel=2,
                 )
-                trimmed = sh.join(hot, shingle_keys, "left_anti").persist()
-                sh.unpersist()
-                sh = trimmed
-            hot.unpersist()
+                sh = caches.enter_context(
+                    reuse(sh.join(hot, shingle_keys, "left_anti"))
+                )
         sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
         a_cols = [F.col(id_col).alias("id_a"), F.col("shingle")] + (
             [F.col(block_col)] if block_col else []
@@ -502,10 +500,7 @@ def ngram_jaccard_pairs(
             .filter(F.col("jaccard_sim") >= threshold)
             .select("id_a", "id_b", "jaccard_sim")
         )
-        out = verified.localCheckpoint(eager=True)
-    finally:
-        sh.unpersist()
-    return out
+        return materialize(verified)
 
 
 def near_dup_clusters(
@@ -535,16 +530,16 @@ def near_dup_clusters(
     pairs = minhash_near_dup_pairs(
         df, text_col, id_col, threshold, candidates=candidates
     ).select("id_a", "id_b")
-    edges = pairs.unionByName(
-        pairs.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))
-    ).persist()
-    labels = (
-        edges.select(F.col("id_a").alias(id_col))
-        .distinct()
-        .withColumn("cluster_id", F.col(id_col))
-        .persist()
-    )
-    try:
+    with reuse(
+        pairs.unionByName(
+            pairs.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))
+        )
+    ) as edges:
+        labels = (
+            edges.select(F.col("id_a").alias(id_col))
+            .distinct()
+            .withColumn("cluster_id", F.col(id_col))
+        )
         changed = -1
         for _ in range(50):  # diameter bound; tiny in practice
             neighbor_min = (
@@ -556,27 +551,26 @@ def near_dup_clusters(
             # neighbour mins), so "new != old" is exactly
             # "neighbour_min < old" — compute the change flag inside the
             # label-update projection instead of re-joining the new
-            # label relation against the old one every round. Same
-            # single convergence-probe job per iteration, one join (and
-            # its exchange/broadcast build) fewer.
-            new_labels = (
+            # label relation against the old one every round. The flag is
+            # observed on the round's one materialising action, so a round
+            # runs one action and the last round's labels are the output.
+            obs = Observation()
+            step = (
                 labels.join(neighbor_min, id_col, "left")
+                .withColumn("__n", F.coalesce(F.col("n_min"), F.col("cluster_id")))
+                .observe(
+                    obs,
+                    F.count_if(F.col("__n") < F.col("cluster_id")).alias("changed"),
+                )
                 .select(
                     F.col(id_col),
-                    F.least(
-                        F.col("cluster_id"),
-                        F.coalesce(F.col("n_min"), F.col("cluster_id")),
-                    ).alias("cluster_id"),
-                    (
-                        F.coalesce(F.col("n_min"), F.col("cluster_id"))
-                        < F.col("cluster_id")
-                    ).alias("__chg"),
+                    F.least(F.col("cluster_id"), F.col("__n")).alias("cluster_id"),
                 )
-                .persist()
             )
-            changed = new_labels.filter(F.col("__chg")).limit(1).count()
-            labels.unpersist()
-            labels = new_labels
+            labels = materialize(step)
+            if not checkpoints_enabled():
+                step.count()  # a plan audit materialises nothing to observe
+            changed = obs.get["changed"]
             if changed == 0:
                 break
         if changed != 0:
@@ -588,10 +582,7 @@ def near_dup_clusters(
                 "within 50 rounds — a pair-graph component has diameter > 50; "
                 "raise the bound or switch to large-star/small-star."
             )
-        return labels.select(id_col, "cluster_id").localCheckpoint(eager=True)
-    finally:
-        edges.unpersist()
-        labels.unpersist()
+        return labels
 
 
 # --- SimHash ----------------------------------------------------------------

@@ -81,51 +81,48 @@ def pagerank(
     # cache hash-partitioned by src, only the O(|V|) rank relation
     # shuffles per iteration, and outdeg derives exchange-free (groupBy on
     # the partitioning key).
-    e = e.repartition(
-        edges.sparkSession.sparkContext.defaultParallelism, "src"
-    ).persist()  # scanned once per iteration — never recomputed from source
-    nodes = (
+    base = (PR_DAMPING_DEN - PR_DAMPING_NUM) * PR_SCALE // PR_DAMPING_DEN
+    with reuse(  # scanned once per iteration — never recomputed from source
+        e.repartition(edges.sparkSession.sparkContext.defaultParallelism, "src")
+    ) as e, reuse(
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
-        .persist()
-    )
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg")).persist()
-    base = (PR_DAMPING_DEN - PR_DAMPING_NUM) * PR_SCALE // PR_DAMPING_DEN
-    ranks = nodes.withColumn("irank", F.lit(PR_SCALE).cast("long"))
-    for _ in range(iters):
-        contribs = (
-            e.join(ranks, e.src == ranks.node)
-            .join(outdeg, "src")
-            .select(
-                "dst",
-                # exact integral division (both positive) — no float detour
-                F.expr("irank div outdeg").alias("c"),
+    ) as nodes, reuse(
+        e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
+    ) as outdeg:
+        ranks = nodes.withColumn("irank", F.lit(PR_SCALE).cast("long"))
+        for _ in range(iters):
+            contribs = (
+                e.join(ranks, e.src == ranks.node)
+                .join(outdeg, "src")
+                .select(
+                    "dst",
+                    # exact integral division (both positive) — no float detour
+                    F.expr("irank div outdeg").alias("c"),
+                )
+                .groupBy("dst")
+                .agg(F.sum("c").alias("contrib"))
             )
-            .groupBy("dst")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        ranks = (
-            nodes.join(contribs, nodes.node == contribs.dst, "left")
-            .withColumn("__c", F.coalesce(F.col("contrib"), F.lit(0).cast("long")))
-            .select(
-                "node",
-                F.expr(
-                    f"CAST({base} AS BIGINT)"
-                    f" + (({PR_DAMPING_NUM} * __c) div {PR_DAMPING_DEN})"
-                ).alias("irank"),
+            ranks = materialize(  # |V| rows: truncate lineage
+                nodes.join(contribs, nodes.node == contribs.dst, "left")
+                .withColumn(
+                    "__c", F.coalesce(F.col("contrib"), F.lit(0).cast("long"))
+                )
+                .select(
+                    "node",
+                    F.expr(
+                        f"CAST({base} AS BIGINT)"
+                        f" + (({PR_DAMPING_NUM} * __c) div {PR_DAMPING_DEN})"
+                    ).alias("irank"),
+                )
             )
-            .localCheckpoint(eager=True)  # |V| rows: truncate lineage
-        )
-    out = ranks.select(
+    # ranks is checkpointed each iteration, so the cached inputs can go
+    return ranks.select(
         "node",
         "irank",
         F.round(F.col("irank") / PR_SCALE, 6).alias("rank"),
     )
-    # ranks is checkpointed each iteration, so the cached inputs can go
-    for c in (e, nodes, outdeg):
-        c.unpersist()
-    return out
 
 
 def purchase_graph_edges(

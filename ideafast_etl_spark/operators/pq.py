@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..plan_audit import reuse
+from ..plan_audit import materialize, reuse
 from .clustering import _pos_exploded
 
 _SCALE = 1_000_000
@@ -108,14 +108,13 @@ def train_from_pts(
     shared by raw-vector PQ and residual IVF-PQ (operators/ivfpq.py).
     ``seed_ids`` is (__id, cid); the seeds' subvectors initialise every
     subspace's codebook."""
-    cent = (
+    cent = materialize(
         pts.join(F.broadcast(seed_ids), "__id")
         .select("sub", "cid", "spos", F.col("ival").alias("icval"))
-        .localCheckpoint(eager=True)
     )
     for _ in range(iters):
         best = _assign(pts, cent)
-        cent = (
+        cent = materialize(  # m·k·subdim rows
             pts.join(best, ["__id", "sub"])
             .groupBy("sub", "cid", "spos")
             .agg(F.sum("ival").alias("s"), F.count(F.lit(1)).alias("n"))
@@ -127,7 +126,6 @@ def train_from_pts(
                 .cast("long")
                 .alias("icval"),
             )
-            .localCheckpoint(eager=True)  # m·k·subdim rows
         )
     return cent
 

@@ -39,6 +39,32 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def _range_offsets(
+    df: DataFrame, order: list[Column], total: Column, num_partitions: int | None
+) -> tuple[DataFrame, DataFrame]:
+    """Range-repartition ``df`` on ``order`` (tagging each row with its
+    ``__pid``) and return it with ``(__pid, __off)``: the sum of ``total``
+    over every lower partition. The per-partition totals are collected —
+    one row per partition, bounded by the partition count, not the data."""
+    np_ = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    parted = df.repartitionByRange(np_, *order).withColumn(
+        "__pid", F.spark_partition_id()
+    )
+    # raw, not plan_audit.materialize: range bounds are re-sampled on every
+    # execution, so the offsets hold only for this one — an audit keeps it
+    parted = parted.localCheckpoint(eager=True)
+    totals = parted.groupBy("__pid").agg(total.alias("__t")).collect()
+    rows = []
+    acc = 0
+    for r in sorted(totals, key=lambda r: r["__pid"]):
+        rows.append((r["__pid"], acc))
+        acc += r["__t"] or 0
+    offsets = df.sparkSession.createDataFrame(
+        rows or [(0, 0)], "__pid int, __off long"
+    )
+    return parted, offsets
+
+
 def global_rank(
     df: DataFrame,
     order: list[Column],
@@ -47,22 +73,7 @@ def global_rank(
 ) -> DataFrame:
     """Add an exact 1-based global rank under ``order`` (must be a total
     order: include a unique key as the last sort column)."""
-    np_ = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    parted = df.repartitionByRange(np_, *order).withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    parted = parted.localCheckpoint(eager=True)  # stabilise sampled ranges
-    sizes = (
-        parted.groupBy("__pid").agg(F.count(F.lit(1)).alias("__n"))
-    ).collect()  # one row per partition — bounded by np_, not by data
-    rows = []
-    acc = 0
-    for r in sorted(sizes, key=lambda r: r["__pid"]):
-        rows.append((r["__pid"], acc))
-        acc += r["__n"]
-    offsets = df.sparkSession.createDataFrame(
-        rows or [(0, 0)], "__pid int, __off long"
-    )
+    parted, offsets = _range_offsets(df, order, F.count(F.lit(1)), num_partitions)
     w = Window.partitionBy("__pid").orderBy(*order)
     return (
         parted.withColumn("__rn", F.row_number().over(w))
@@ -88,22 +99,7 @@ def global_prefix_sum(
     discipline) broadcast back and added. Bit-exact for integer values
     under any layout; ``order`` must be a total order (include a unique
     key last) for deterministic per-row prefixes."""
-    np_ = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    parted = df.repartitionByRange(np_, *order).withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    parted = parted.localCheckpoint(eager=True)  # stabilise sampled ranges
-    totals = (
-        parted.groupBy("__pid").agg(F.sum(value_col).alias("__t"))
-    ).collect()  # one row per partition — bounded by np_, not by data
-    rows = []
-    acc = 0
-    for r in sorted(totals, key=lambda r: r["__pid"]):
-        rows.append((r["__pid"], acc))
-        acc += r["__t"] or 0
-    offsets = df.sparkSession.createDataFrame(
-        rows or [(0, 0)], "__pid int, __off long"
-    )
+    parted, offsets = _range_offsets(df, order, F.sum(value_col), num_partitions)
     w = (
         Window.partitionBy("__pid")
         .orderBy(*order)

@@ -32,6 +32,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..plan_audit import checkpoints_enabled, materialize, reuse
 from .dedup import _tokens
 
 
@@ -388,7 +389,6 @@ def mmr_rerank(
     Returns (query_id, neighbor_id, mmr_rank, relevance) with relevance
     the quantized cosine as a double.
     """
-    from ..plan_audit import checkpoints_enabled, materialize
     from .similarity import dot, unit_normalized
 
     if loop not in ("auto", "driver", "distributed"):
@@ -737,15 +737,11 @@ def _write_bm25(
     # persist the term-frequency relation: dl/postings/dfreq/stats all
     # fan out from it, and without the pin each write re-triggers the
     # explode/tokenize lineage — three corpus tokenizations per build
-    tf = (
-        df.select(
-            F.col(id_col), F.explode(_tokens(F.col(text_col))).alias("t")
-        )
+    with reuse(
+        df.select(F.col(id_col), F.explode(_tokens(F.col(text_col))).alias("t"))
         .groupBy(id_col, "t")
         .agg(F.count("*").alias("tf"))
-        .persist()
-    )
-    try:
+    ) as tf:
         dl = tf.groupBy(id_col).agg(F.sum("tf").alias("dl"))
         dfreq = tf.groupBy("t").agg(F.count("*").alias("df"))
         bucket = F.pmod(F.xxhash64("t"), F.lit(N_TERM_BUCKETS)).cast("int")
@@ -759,8 +755,6 @@ def _write_bm25(
         dl.agg(
             F.count("*").alias("n_docs"), F.sum("dl").alias("sum_dl")
         ).write.mode(mode).parquet(dirs["stats"])
-    finally:
-        tf.unpersist()
 
 
 def bm25_scores_from_index(

@@ -109,6 +109,8 @@ def bpe_train(
     the symbolized word-frequency table after all merges (word, freq,
     sym). Training stops early when no pair reaches ``min_freq``."""
     spark = df.sparkSession
+    # raw, not plan_audit.materialize (eager): these LAZY checkpoints ride
+    # the next action instead of running a job each
     vocab = _symbolize(_word_freq(df, text_col)).localCheckpoint(eager=False)
     merges: list[tuple[str, str, int]] = []
     for _ in range(n_merges):

@@ -85,10 +85,12 @@ class PipelineConfig:
     interval_bucket_days: int | None = None
 
 
-def _limit(df: DataFrame, n: int | None) -> DataFrame:
-    # `is not None`, not truthiness: limit=0 means "process nothing",
-    # not "unlimited"
-    return df.limit(n) if n is not None else df
+def _refuse_ingest_cap(limits: dict[str, int | None]) -> None:
+    """A stream cannot cap its ingest: the file source never re-delivers a
+    consumed file, so the rows a cap passed over would be lost."""
+    if limits.get("ingest") is not None:
+        raise ValueError("a streaming run cannot apply an ingest limit: the "
+                         "rows past the cap would never be delivered again")
 
 
 # rung, by its run-report key -> the state column it fills
@@ -164,11 +166,20 @@ class DreemPipeline:
     def ingest(self, raw_api_rows: DataFrame) -> int:
         """Shape vendor rows, drop already-seen hashes, insert the rest.
         The insert count is observed on the store's own write — no
-        before/after table counts."""
+        before/after table counts.
+
+        ``limits["ingest"]`` caps the NEW rows, the lowest ``hash`` values
+        the state does not hold yet (the reference slices after its dedup,
+        dags/dreem.py:66): every poll re-reads the whole feed, so a cap on
+        feed rows would stall once those rows were in state."""
         shaped = init_lifecycle(
             shape_api_rows(raw_api_rows, self.config.device_type)
         )
-        shaped = _limit(shaped, self.config.limits.get("ingest"))
+        n, key = self.config.limits.get("ingest"), self.store.key
+        if n is not None:  # not truthiness: a cap of 0 inserts nothing
+            if self.store.exists():
+                shaped = shaped.join(self.store.read().select(key), key, "left_anti")
+            shaped = shaped.dropDuplicates([key]).orderBy(key).limit(n)
         return self.store.append_new(shaped)
 
     # -- stages 2-5: one resolution pass -------------------------------------
@@ -364,7 +375,8 @@ class DreemPipeline:
             ),
             F.count(F.lit(1)).alias("n_groups"),
         )
-        # exactly one execution of the side-effecting upload stage
+        # exactly one execution of the side-effecting upload stage — raw, not
+        # plan_audit.materialize, which under an audit would re-upload per action
         results = results.localCheckpoint(eager=True)
         m = obs.get
         n_ok = int(m["n_ok"])
@@ -392,8 +404,11 @@ class DreemPipeline:
         feed files through the checkpointed Structured-Streaming path
         (availableNow + foreachBatch MERGE), then run the resolution stages
         over the refreshed state — the reference's poll-then-process cycle
-        with exactly-once file consumption."""
+        with exactly-once file consumption. Raises ``ValueError`` before
+        the stream starts when ``limits["ingest"]`` is set."""
         from ..streaming.incremental import run_streaming_ingest
+
+        _refuse_ingest_cap(self.config.limits)
 
         batch_counts: list[int] = []
         q = run_streaming_ingest(
@@ -436,7 +451,10 @@ class DreemPipeline:
         re-uploads. Returns one stage-report dict per micro-batch; if the
         restart found no new files (no batch fired), a trailing
         resolution+upload pass still runs — the reference retries pending
-        work every poll cycle even when the feed is quiet."""
+        work every poll cycle even when the feed is quiet. Raises
+        ``ValueError`` before the stream starts when ``limits["ingest"]`` is
+        set."""
+        _refuse_ingest_cap(self.config.limits)
 
         def _stages() -> dict:
             return {
@@ -450,9 +468,7 @@ class DreemPipeline:
             shaped = init_lifecycle(
                 shape_api_rows(batch_df, self.config.device_type)
             )
-            n = self.store.append_new(
-                _limit(shaped, self.config.limits.get("ingest"))
-            )
+            n = self.store.append_new(shaped)
             reports.append({"batch_id": batch_id, "ingested": n, **_stages()})
 
         stream = (

@@ -15,6 +15,18 @@ joins/aggregates/windows. Outside an audit the default is always on.
 
 Decisions that are not about caching (auto-posture probes, an early exit
 on an empty frontier) read ``checkpoints_enabled()`` directly.
+
+Three functions keep a raw ``localCheckpoint``, because an audit must not
+lift it (``tests/test_plan_audit.py`` allowlists exactly these):
+
+- ``operators/ranking.py::_range_offsets`` — a correctness barrier: range
+  bounds are re-sampled on every execution, so the collected partition
+  offsets only fit the one checkpointed execution, and an audit must
+  return production's results;
+- ``operators/tokenizer.py::bpe_train`` — its checkpoints are LAZY, riding
+  the next action instead of running a job each; ``materialize`` is eager;
+- ``pipeline/dreem.py::DreemPipeline.upload`` — the upload is a side
+  effect that must run exactly once, not once per later action.
 """
 
 from __future__ import annotations

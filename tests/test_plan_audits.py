@@ -1,5 +1,5 @@
-"""Plan audits as a pytest gate (r8 verdict #5): PLANS.md's marker
-assertions were only regenerated by hand (tools/explain_plans.py), so a
+"""Plan audits as a pytest gate (r8 verdict #5): the marker assertions
+were only checked by hand (``python tools/explain_plans.py``), so a
 plan regression between rounds — a broadcast silently degrading to a
 nested loop, a pushdown lost to a refactor — was invisible to the test
 suite. This module runs the same audit set at the small SF on every

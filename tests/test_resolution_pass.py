@@ -16,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, MapType, StringType, StructField, StructType
 
+from ideafast_etl_spark.operators.projections import shape_api_rows
 from ideafast_etl_spark.pipeline import DreemPipeline, PipelineConfig
 from ideafast_etl_spark.sources.rest import PaginatedRestSource, mock_dreem_api
 from ideafast_etl_spark.state import StateStore
@@ -238,3 +239,37 @@ def test_limit_zero_fills_nothing(spark, tmp_path):
     got = pipe._resolve(*_dims(spark, late=True), group=True)
     assert got == {"serials": 0, "devices": 0, "patients": 0, "grouped": 0}
     assert pipe.store.current_version() == v
+
+
+def test_ingest_limit_caps_new_rows_by_lowest_hash(spark, tmp_path):
+    """Every poll re-reads the whole feed, so the ingest cap counts the
+    rows the state does not hold yet: successive runs insert the next
+    lowest hashes until the feed is drained."""
+    caps = {"ingest": 15}
+    pipe = DreemPipeline(spark, StateStore(spark, str(tmp_path / "s")),
+                         PipelineConfig(limits=caps))
+    api = _api(spark, 40)
+    feed = sorted(r["hash"] for r in shape_api_rows(api, "DRM").select("hash").collect())
+    assert [pipe.ingest(api) for _ in range(4)] == [15, 15, 10, 0]
+    assert sorted(_rows(pipe.store, "hash")) == feed
+    first = DreemPipeline(spark, StateStore(spark, str(tmp_path / "f")),
+                          PipelineConfig(limits=caps))
+    first.ingest(api)
+    assert sorted(_rows(first.store, "hash")) == feed[:15]
+
+
+@pytest.mark.parametrize("run", ["run_from_stream", "run_stream_full_dag"])
+def test_stream_runs_refuse_an_ingest_limit(spark, tmp_path, run):
+    """The file source never re-delivers a consumed file, so a capped
+    micro-batch would lose the rows past the cap: refuse before the
+    stream starts, consuming nothing."""
+    _api(spark, 25).coalesce(1).write.parquet(str(tmp_path / "feed" / "b1"))
+    store = StateStore(spark, str(tmp_path / "state"))
+    pipe = DreemPipeline(spark, store, PipelineConfig(limits={"ingest": 10}))
+    with pytest.raises(ValueError, match="ingest limit"):
+        getattr(pipe, run)(
+            str(tmp_path / "feed") + "/*/", API_SCHEMA, *_dims(spark, late=False),
+            checkpoint_dir=str(tmp_path / "ckpt"),
+        )
+    assert not store.exists()
+    assert not (tmp_path / "ckpt").exists()
