@@ -530,42 +530,39 @@ def near_dup_clusters(
     pairs = minhash_near_dup_pairs(
         df, text_col, id_col, threshold, candidates=candidates
     ).select("id_a", "id_b")
+    node = F.explode(F.array("id_a", "id_b"))
+    # both directions of every pair, plus a self-loop per node: one join of
+    # the edges against the labels then yields each node's old label (its
+    # self edge) next to the least label among itself and its neighbours
     with reuse(
         pairs.unionByName(
             pairs.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))
+        ).unionByName(
+            pairs.select(node.alias("id_a")).distinct().withColumn("id_b", F.col("id_a"))
         )
     ) as edges:
-        labels = (
-            edges.select(F.col("id_a").alias(id_col))
-            .distinct()
-            .withColumn("cluster_id", F.col(id_col))
+        labels = edges.filter(edges.id_a == edges.id_b).select(
+            F.col("id_a").alias(id_col), F.col("id_a").alias("cluster_id")
         )
         changed = -1
         for _ in range(50):  # diameter bound; tiny in practice
-            neighbor_min = (
-                edges.join(labels, edges.id_b == labels[id_col])
-                .groupBy(edges.id_a.alias(id_col))
-                .agg(F.min("cluster_id").alias("n_min"))
-            )
-            # r12 job shave: labels only ever DECREASE (least of old and
-            # neighbour mins), so "new != old" is exactly
-            # "neighbour_min < old" — compute the change flag inside the
-            # label-update projection instead of re-joining the new
-            # label relation against the old one every round. The flag is
-            # observed on the round's one materialising action, so a round
-            # runs one action and the last round's labels are the output.
+            # labels only ever DECREASE, so "new != old" is exactly
+            # "new < old"; the flag is observed on the round's one
+            # materialising action, which reads the previous labels once
             obs = Observation()
             step = (
-                labels.join(neighbor_min, id_col, "left")
-                .withColumn("__n", F.coalesce(F.col("n_min"), F.col("cluster_id")))
+                edges.join(labels, edges.id_b == labels[id_col])
+                .groupBy(edges.id_a.alias(id_col))
+                .agg(
+                    F.min("cluster_id").alias("__new"),
+                    F.max(
+                        F.when(edges.id_a == edges.id_b, F.col("cluster_id"))
+                    ).alias("__old"),
+                )
                 .observe(
-                    obs,
-                    F.count_if(F.col("__n") < F.col("cluster_id")).alias("changed"),
+                    obs, F.count_if(F.col("__new") < F.col("__old")).alias("changed")
                 )
-                .select(
-                    F.col(id_col),
-                    F.least(F.col("cluster_id"), F.col("__n")).alias("cluster_id"),
-                )
+                .select(F.col(id_col), F.col("__new").alias("cluster_id"))
             )
             labels = materialize(step)
             if not checkpoints_enabled():

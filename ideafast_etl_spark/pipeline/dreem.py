@@ -343,10 +343,18 @@ class DreemPipeline:
         keeps the rest of the run alive, and the rows remain visible as
         pending-with-conflict for operators to resolve).
 
-        Plan shape: the ``any_uploaded`` window shares the dmp_id hash
-        partitioning with the per-group applyInPandas, so the guard adds no
-        extra shuffle; the side-effecting upload is materialised exactly once
-        via an eager localCheckpoint (a real uploader must not re-POST per
+        ``limits["upload"]`` caps the groups the stage attempts — the
+        lowest ``dmp_id`` values among the groups with no uploaded member,
+        a total order like the resolution rungs' caps. Conflicting groups
+        are reported every run but never take a cap slot, so they cannot
+        starve the clean groups behind them.
+
+        Plan shape: the scoped rows are hash-partitioned by ``dmp_id`` once;
+        the ``any_uploaded`` window sorts within that partitioning, and the
+        upload sink's one ``mapInPandas`` pass per partition reuses both
+        (no further shuffle or sort) to walk each partition's contiguous
+        groups. The side-effecting upload is materialised exactly once via
+        an eager localCheckpoint (a real uploader must not re-POST per
         downstream action), and ok/fail/conflict counts ride the checkpoint
         as observed metrics."""
         state = self.store.read()
@@ -362,8 +370,19 @@ class DreemPipeline:
         ).filter(~F.col("is_uploaded"))
         limit = self.config.limits.get("upload")
         if limit is not None:
-            ids = work.select("dmp_id").distinct().limit(limit)
-            work = work.join(ids, "dmp_id", "left_semi")
+            picked = (
+                work.filter(F.col("any_up") == 0)
+                .select("dmp_id")
+                .distinct()
+                .orderBy("dmp_id")
+                .limit(limit)
+                .withColumn("__picked", F.lit(True))
+            )
+            work = (
+                work.join(F.broadcast(picked), "dmp_id", "left")
+                .filter((F.col("any_up") != 0) | F.col("__picked").isNotNull())
+                .select(*work.columns)
+            )
         obs = Observation()
         results = upload_groups(
             work, self.uploader, conflict_col="any_up", retry=self.retry

@@ -3,10 +3,13 @@
 The reference streams one zip per upload group to a GraphQL multipart
 endpoint, swallowing errors into a success boolean that drives the
 at-least-once retry loop (is_uploaded stays false → group re-selected next
-run). Spark-native shape: the per-group upload runs executor-side inside
-``mapInPandas`` (one HTTP session per partition, not per row), and the
-success booleans come back as a DataFrame the caller MERGEs into state —
-no driver-side loop, arbitrarily many groups in flight.
+run). Spark-native shape: the rows are hash-partitioned by group and sorted
+within each partition, so every group's rows are contiguous; one
+``mapInPandas`` pass per partition walks the groups of each Arrow batch
+(carrying a group that spans two batches into the next), calls the uploader
+once per group on the executor, and returns one ``(group, success)`` frame
+per batch for the caller to MERGE into state — no driver-side loop, and no
+pandas frame or Python call per group beyond the uploader's own.
 
 The uploader is injected; the default is a stub that succeeds
 deterministically (no network in this environment). A real implementation
@@ -16,8 +19,9 @@ reference; failure → False, never an exception (dmp.py:120-160).
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -34,6 +38,45 @@ def stub_uploader(dmp_id: str, payload: pd.DataFrame) -> bool:
     return not hashlib.sha256(dmp_id.encode()).hexdigest().endswith("f")
 
 
+def _each_group(
+    groups: DataFrame,
+    group_col: str,
+    fn: Callable[[pd.DataFrame, np.ndarray], pd.DataFrame],
+    schema: str,
+) -> DataFrame:
+    """``fn(rows, starts)`` over whole groups, one call per Arrow batch:
+    ``rows`` holds complete groups one after another (index 0..n-1) and
+    ``starts`` the offset of each group's first row; ``fn`` returns that
+    batch's result frame. The hash partitioning and the sort are free when
+    the input is already partitioned by ``group_col`` (a window over it)."""
+
+    def _walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        carry = None  # a batch's last group may go on in the next batch
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            if carry is not None:
+                pdf = pd.concat([carry, pdf], ignore_index=True)
+            keys = pdf[group_col].to_numpy()
+            starts = np.flatnonzero(np.r_[True, keys[1:] != keys[:-1]])
+            carry = pdf.iloc[starts[-1]:]
+            if len(starts) > 1:
+                yield fn(pdf.iloc[: starts[-1]], starts[:-1])
+        if carry is not None:
+            yield fn(carry.reset_index(drop=True), np.zeros(1, dtype=np.int64))
+
+    return (
+        groups.repartition(group_col)
+        .sortWithinPartitions(group_col)
+        .mapInPandas(_walk, schema=schema)
+    )
+
+
+def _spans(rows: pd.DataFrame, starts: np.ndarray):
+    """(first row, end row) of each group of a batch."""
+    return zip(starts, np.append(starts[1:], len(rows)))
+
+
 def upload_groups(
     groups: DataFrame,
     uploader: Uploader = stub_uploader,
@@ -43,8 +86,9 @@ def upload_groups(
 ) -> DataFrame:
     """Upload each group's rows; returns one row per group — ``(dmp_id,
     success)``, plus a ``conflict`` flag when ``conflict_col`` is given.
-    Partitioned by group so one upload sees all member rows
-    (``applyInPandas`` per group, Arrow-batched).
+    The uploader sees all of a group's rows in one call, as a pandas frame
+    with the input's columns (``conflict_col`` left out), a fresh 0..n-1
+    index, naive session-time timestamps and maps as dicts.
 
     ``conflict_col`` names a boolean/int marker (e.g. the ``any_uploaded``
     window flag): a group carrying it is NOT uploaded — the guard runs on
@@ -60,24 +104,27 @@ def upload_groups(
 
         uploader = retrying(uploader, retry, absorb=lambda _e: False)
 
-    def _upload(pdf: pd.DataFrame) -> pd.DataFrame:
-        dmp_id = pdf[group_col].iloc[0]
+    def _upload(rows: pd.DataFrame, starts: np.ndarray) -> pd.DataFrame:
+        keys = rows[group_col].to_numpy()[starts]
+        payload, skip = rows, np.zeros(len(starts), dtype=bool)
         if conflict_col is not None:
-            if bool(pdf[conflict_col].max()):
-                return pd.DataFrame(
-                    {group_col: [dmp_id], "success": [False], "conflict": [True]}
-                )
-            ok = uploader(dmp_id, pdf.drop(columns=[conflict_col]))
-            return pd.DataFrame(
-                {group_col: [dmp_id], "success": [ok], "conflict": [False]}
-            )
-        ok = uploader(dmp_id, pdf)
-        return pd.DataFrame({group_col: [dmp_id], "success": [ok]})
+            payload = rows.drop(columns=[conflict_col])
+            flags = rows[conflict_col].to_numpy(dtype="float64", na_value=np.nan)
+            # NaN-skipping max per group, like pandas' Series.max
+            skip = np.fmax.reduceat(flags, starts).astype(bool)
+        out = pd.DataFrame({group_col: keys})
+        out["success"] = [
+            False if s else uploader(k, payload.iloc[a:b].reset_index(drop=True))
+            for k, (a, b), s in zip(keys, _spans(rows, starts), skip)
+        ]
+        if conflict_col is not None:
+            out["conflict"] = skip
+        return out
 
     schema = f"{group_col} string, success boolean"
     if conflict_col is not None:
         schema += ", conflict boolean"
-    return groups.groupBy(group_col).applyInPandas(_upload, schema=schema)
+    return _each_group(groups, group_col, _upload, schema)
 
 
 # archive_uploader(dmp_id, zip_bytes) -> success
@@ -104,24 +151,26 @@ def upload_group_archives(
     import io
     import zipfile
 
-    def _upload(pdf: pd.DataFrame) -> pd.DataFrame:
-        dmp_id = pdf[group_col].iloc[0]
-        buf = io.BytesIO()
-        with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
-            for r in pdf.sort_values(name_col).to_dict("records"):
-                zf.writestr(f"{r[name_col]}.h5", bytes(r[content_col]))
-        payload = buf.getvalue()
-        ok = uploader(dmp_id, payload)
-        return pd.DataFrame(
-            {
-                group_col: [dmp_id],
-                "n_files": [len(pdf)],
-                "zip_bytes_len": [len(payload)],
-                "success": [ok],
-            }
-        )
+    def _upload(rows: pd.DataFrame, starts: np.ndarray) -> pd.DataFrame:
+        out: dict[str, list] = {"n_files": [], "zip_bytes_len": [], "success": []}
+        keys = rows[group_col].to_numpy()[starts]
+        for dmp_id, (a, b) in zip(keys, _spans(rows, starts)):
+            buf = io.BytesIO()
+            with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
+                for name, content in (
+                    rows.iloc[a:b].sort_values(name_col)[[name_col, content_col]]
+                    .itertuples(index=False)
+                ):
+                    zf.writestr(f"{name}.h5", bytes(content))
+            payload = buf.getvalue()
+            out["n_files"].append(b - a)
+            out["zip_bytes_len"].append(len(payload))
+            out["success"].append(uploader(dmp_id, payload))
+        return pd.DataFrame({group_col: keys, **out})
 
-    return groups.groupBy(group_col).applyInPandas(
+    return _each_group(
+        groups,
+        group_col,
         _upload,
-        schema=f"{group_col} string, n_files long, zip_bytes_len long, success boolean",
+        f"{group_col} string, n_files long, zip_bytes_len long, success boolean",
     )

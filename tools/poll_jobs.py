@@ -5,10 +5,11 @@
 Runs ``perfbench``'s poll cycle with tracing on, set up the way
 ``perfbench/run.py --workload poll_cycle --trace 1`` sets it up (same
 session configuration, same work directory under ``.perfbench_work/``,
-removed at the end), and reads the jobs of every ``poll`` span. Prints,
-per poll kind (delta, idle, backlog), the median jobs per poll, then the
-per-poll state figures (``state.commits``, ``state.merge_s``,
-``state.bytes_written``); the last line is the same as one JSON object.
+removed at the end), and reads the jobs and wall time of every ``poll``
+span. Prints, per poll kind (delta, idle, backlog), the median jobs and
+the median wall seconds per poll (the first poll runs cold and is left out
+of the seconds), then the per-poll state figures (``state.commits``,
+``state.merge_s``, ``state.bytes_written``); the last line is the same as one JSON object.
 Exits 1 when a poll's count check or the final-state check failed.
 """
 
@@ -57,10 +58,17 @@ def main(argv: list[str] | None = None) -> int:
         shutil.rmtree(work, ignore_errors=True)
 
     jobs: dict[str, list[int]] = {kind: [] for kind in polls.CYCLE}
+    wall: dict[str, list[float]] = {kind: [] for kind in polls.CYCLE}
     for i, s in enumerate(x for x in out["spans"] if x.name == "poll"):
-        jobs[polls.CYCLE[i % len(polls.CYCLE)]].append(s.jobs)
+        kind = polls.CYCLE[i % len(polls.CYCLE)]
+        jobs[kind].append(s.jobs)
+        if i:
+            wall[kind].append(s.seconds)
     result = {
         "jobs_per_poll": {k: statistics.median(v) for k, v in jobs.items() if v},
+        "seconds_per_poll": {
+            k: round(statistics.median(v), 3) for k, v in wall.items() if v
+        },
         "polls": out["ops"],
         **{
             k: layers[k]
@@ -69,7 +77,12 @@ def main(argv: list[str] | None = None) -> int:
         "failures": out["failures"],
     }
     for kind, n in result["jobs_per_poll"].items():
-        print(f"# {kind}: {n} Spark jobs per poll (median of {len(jobs[kind])})")
+        secs = result["seconds_per_poll"].get(kind)
+        print(
+            f"# {kind}: {n} Spark jobs per poll (median of {len(jobs[kind])}), "
+            + (f"{secs:.3f} s per warm poll (median of {len(wall[kind])})"
+               if secs is not None else "no warm poll")
+        )
     for k in ("state.commits", "state.merge_s", "state.bytes_written"):
         print(f"# {k} = {result[k]:.6g} per poll")
     for f in out["failures"]:
