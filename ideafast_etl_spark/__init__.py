@@ -18,7 +18,9 @@ Layout:
   - ``sinks``        — upload/archive sinks
   - ``state``        — state table with MERGE-style non-overwrite transitions
   - ``pipeline``     — the end-to-end incremental pipeline assembly
-  - ``streaming``    — Structured Streaming variants
+  - ``streaming``    — the Structured Streaming form of the ingest (the
+                       pipeline's stream mode) and watermarked hash dedup
+  - ``queries``      — the registered queries; ``oracles`` their DuckDB twins
 """
 
 __version__ = "0.1.0"

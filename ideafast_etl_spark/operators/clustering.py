@@ -225,24 +225,6 @@ def _assign_to_centroids(pts: DataFrame, cent: DataFrame, id_col: str) -> DataFr
     )
 
 
-def kmeans_assign_to(
-    df: DataFrame,
-    cent: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Assign vectors to an EXISTING quantised centroid relation
-    (cid, pos, icval) — the exact arithmetic of :func:`kmeans_fit`'s
-    final assignment, exposed for incremental maintenance: a persisted
-    coarse quantizer stays fixed between scheduled retrains while new
-    vectors stream in (similarity.append_ivf_index). Bit-identical to
-    what kmeans_fit would have assigned these vectors given the same
-    centroids."""
-    return _assign_to_centroids(
-        _pos_exploded(df, id_col, vec_col), cent, id_col
-    )
-
-
 def kmeans_assign(
     df: DataFrame,
     vec_col: str = "embedding",

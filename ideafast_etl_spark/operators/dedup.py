@@ -176,51 +176,6 @@ def with_minhash(
     return out.withColumn("minhash", minhash_signature(F.col("shingles")))
 
 
-def lsh_candidate_pairs(
-    sig_df: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """Banded-LSH candidate generation: explode the signature into LSH_BANDS
-    band keys, self-join on (band, band_key), keep each unordered pair once.
-    Returns (id_a, id_b) distinct candidate pairs."""
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.element_at(F.col("minhash"), b * LSH_ROWS + r + 1)
-                        for r in range(LSH_ROWS)
-                    ],
-                ).alias("band_key"),
-            )
-            for b in range(LSH_BANDS)
-        ]
-    )
-    banded = (
-        sig_df.select(F.col(id_col), F.explode(bands).alias("bk"))
-        .select(id_col, F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key"))
-    )
-    left = banded.alias("l")
-    right = banded.alias("r")
-    pairs = left.join(
-        right,
-        (F.col("l.band") == F.col("r.band"))
-        & (F.col("l.band_key") == F.col("r.band_key"))
-        & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-    ).select(
-        F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b")
-    )
-    return pairs.distinct()
-
-
-def jaccard(a: Column, b: Column) -> Column:
-    """Exact Jaccard over two distinct-element arrays."""
-    inter = F.size(F.array_intersect(a, b)).cast("double")
-    union = F.size(F.array_union(a, b)).cast("double")
-    return F.when(union == 0, F.lit(0.0)).otherwise(inter / union)
-
-
 def _auto_candidates(
     banded: DataFrame,
     n_bands: int,

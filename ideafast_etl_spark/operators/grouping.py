@@ -63,14 +63,3 @@ def assign_group_id(
             group_key(device_col, patient_col, "bucket_start", "bucket_end"),
         )
     )
-
-
-def group_upload_stats(df: DataFrame, group_col: str = "dmp_id") -> DataFrame:
-    """G4 — per-group membership aggregates: member count, span, and the
-    partial-upload conflict guard ``any_uploaded`` (dags/dreem.py:185-204)."""
-    return df.groupBy(group_col).agg(
-        F.count(F.lit(1)).alias("n_records"),
-        F.min("start").alias("first_start"),
-        F.max("end").alias("last_end"),
-        F.max(F.col("is_uploaded").cast("int")).cast("boolean").alias("any_uploaded"),
-    )

@@ -306,8 +306,8 @@ def ngram_lm_perplexity(
     id_col: str = "doc_id",
     materialize: bool = False,
 ) -> DataFrame:
-    """Train-and-score over ONE corpus with ONE gram pass (r9 verdict
-    #5). ``train_ngram_lm`` + ``score_*`` compose as three independent
+    """Train-and-score over ONE corpus from ONE gram relation (r9
+    verdict #5). ``train_ngram_lm`` + ``score_*`` compose as three independent
     tokenize+explode passes (train grams, score grams, vocab distinct)
     with TWO full-size gram-stream shuffles; at the 100x sweep their
     combined shuffle left page cache. Here every training count rolls up
@@ -316,13 +316,15 @@ def ngram_lm_perplexity(
 
         c(ctx, w) = Σ_docs c_occ      — an exact integer identity,
 
-    so the per-occurrence gram stream is exploded and shuffled ONCE (the
-    occ aggregate — AQE's stage cache reuses the identical exchange
-    across the probe and training consumers) and the training tables are
-    rollups of its bounded output. The vocabulary distinct keeps its own
+    so the training tables are rollups of the one ``occ`` aggregate the
+    probe side also reads. The vocabulary distinct keeps its own
     tokenize of the raw text (it must see tokens of sub-n-gram docs that
-    the gram stream excludes): 2 corpus passes total, down from 3, and
-    one corpus-sized shuffle, down from 2.
+    the gram stream excludes). That sharing is logical only unless
+    ``materialize=True``: Spark does not reuse the ``occ`` exchange
+    across its consumers — the executed adaptive plan of the
+    ``ngram_lm_perplexity`` query (add-k, sf0.01) has no
+    ``ReusedExchange`` and four ``FileScan``/``Generate`` pairs, so each
+    consumer re-scans, re-tokenizes and re-shuffles the corpus.
 
     Output is bit-identical to the composed form — same count tables,
     same fixed-point scoring tail (``_addk_scores`` / ``_kn_scores`` are
@@ -332,10 +334,10 @@ def ngram_lm_perplexity(
     checkpoint), the audited plan IS the production plan. The KN tail
     consumes ``ngram_counts`` four ways (the probe join, both
     continuation rollups, the type total), and lazily each consumer
-    re-derives it from the corpus-sized ``occ`` exchange unless AQE's
-    stage cache happens to line the subtrees up — the r10 doc-skew A/B
-    measured the fused-lazy form LOSING to composed under full
-    materialization for exactly this reason (881.8 vs 774.6 s cold).
+    re-derives it from the corpus-sized ``occ`` exchange — the r10
+    doc-skew A/B measured the fused-lazy form LOSING to composed under
+    full materialization for exactly this reason (881.8 vs 774.6 s
+    cold).
 
     ``materialize=True`` (r11 verdict #5 — the bucket-stage posture):
     ``occ`` is persisted across its 2 + smoothing-dependent consumers,

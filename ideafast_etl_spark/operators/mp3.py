@@ -180,8 +180,6 @@ def mp3_stream_info(b: bytes) -> dict | None:
 # fixture generator
 # --------------------------------------------------------------------------
 
-_SR_BITS = {v: i for ver, rates in _RATES.items() for i, v in enumerate(rates)}
-
 
 def encode_mp3_silence(
     n_frames: int,

@@ -37,7 +37,6 @@ import struct
 
 import numpy as np
 
-_CONTAINERS = {b"moov", b"trak", b"mdia", b"minf", b"stbl", b"dinf", b"edts"}
 _JPEG_FOURCC = {b"jpeg", b"mjpa", b"mjpb"}
 
 

@@ -482,10 +482,6 @@ def _sub420(p: np.ndarray) -> np.ndarray:
 # --------------------------------------------------------------------------
 
 
-def is_mp4v(b: bytes) -> bool:
-    return len(b) > 4 and b[:3] == b"\x00\x00\x01" and b[3] in (0xB0, 0xB6, 0x20)
-
-
 def _find_start(b: bytes, pos: int, code_pred) -> int | None:
     while True:
         i = b.find(b"\x00\x00\x01", pos)

@@ -39,8 +39,6 @@ SAMPLING_FREQ = b"\xb5"
 CLUSTER = b"\x1f\x43\xb6\x75"
 DOCTYPE = b"\x42\x82"
 
-_MASTERS = {SEGMENT, INFO, TRACKS, TRACK_ENTRY, VIDEO, AUDIO, EBML_HEADER}
-
 
 def _read_id(b: bytes, pos: int) -> tuple[bytes, int] | None:
     if pos >= len(b):

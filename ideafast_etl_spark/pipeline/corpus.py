@@ -41,8 +41,7 @@ def corpus_prep(
 ) -> tuple[DataFrame, DataFrame]:
     """Run the prep chain; return (survivors, stage_report) — the cleaned
     corpus (doc_id, text) after the final dedup rung, and the per-stage
-    (stage, n_docs, n_tokens) accounting. The streaming twin
-    (streaming/corpus.py) publishes both as snapshots per drain."""
+    (stage, n_docs, n_tokens) accounting."""
     # each stage feeds BOTH its report aggregate and the next stage (and
     # d4 feeds the returned corpus): without materializing it the
     # report's five union branches re-execute the cumulative chain —

@@ -4233,8 +4233,7 @@ def timeseries_gapfill_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def event_transition_matrix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-order Markov transitions over per-user event sequences
     (operators/timeseries.py::transition_counts): lag window on (ts,
-    event_id) then a keyed count + per-source share. The streaming funnel
-    (streaming/stateful.py) is the stateful online view of this matrix."""
+    event_id) then a keyed count + per-source share."""
     from .operators.timeseries import transition_counts
 
     return transition_counts(_t(spark, sf_dir, "events"))

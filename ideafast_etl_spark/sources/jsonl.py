@@ -58,9 +58,8 @@ def parse_jsonl_lines(
     lines: DataFrame, schema: str
 ) -> tuple[DataFrame, DataFrame]:
     """Split a ``value: string`` line relation into ``(good, quarantine)``
-    under ``schema`` — the shared parse step of ``read_jsonl`` and the
-    streaming ingest twin (streaming/jsonl_ingest.py). Works identically
-    on batch and streaming DataFrames (pure column expressions)."""
+    under ``schema`` — the parse step of ``read_jsonl``. Pure column
+    expressions, so it works on batch and streaming DataFrames alike."""
     parsed = lines.filter(F.length("value") > 0).select(
         "value",
         F.from_json(

@@ -1,11 +1,11 @@
 """Object-store-safe commit-by-manifest: an append-only log of small,
 immutable, self-checksummed JSON files.
 
-The repo's persisted artifacts (streaming accumulations, the BM25 and
-IVF index directories) need a commit primitive that works where the
-100 TB posture actually runs — object storage, where directory rename
-is neither atomic nor guaranteed to exist. The primitive here uses
-only create-file / delete operations (single-key PUT semantics):
+The repo's persisted artifacts (state store snapshots, optimized table
+layouts) need a commit primitive that works where the 100 TB posture
+actually runs — object storage, where directory rename is neither
+atomic nor guaranteed to exist. The primitive here uses only
+create-file / delete operations (single-key PUT semantics):
 
 - a writer stages bulk data into its FINAL directory first (invisible
   until referenced; a crashed attempt is simply overwritten by the
@@ -22,9 +22,7 @@ only create-file / delete operations (single-key PUT semantics):
   manifest lands and is delete-only, hence crash-repairable.
 
 Same shape as Delta's ``_last_checkpoint`` / Iceberg's metadata files.
-Every persisted artifact in the repo commits through this module now:
-the state store snapshots, the BM25/IVF index generations, streaming
-accumulations, optimized table layouts, and monitoring report snapshots.
+Every persisted artifact in the repo commits through this module.
 
 Writer contract (r11 verdict #6): the protocol is SINGLE-WRITER per
 artifact — concurrent maintenance writers are not coordinated (there is
@@ -194,11 +192,11 @@ def prune_manifests(meta_dir: str, keep_id: int | None) -> None:
                 pass
 
 
-# -- shared versioned-directory commit ---------------------------------------
+# -- versioned-directory commit ----------------------------------------------
 #
-# The one commit primitive for artifacts whose consumer addresses a single
-# logical path (an optimized table, a monitoring report snapshot): data for
-# commit N lives in the sibling dir `<base>.v<N>`, the manifest log lives in
+# The commit primitive for artifacts whose consumer addresses a single
+# logical path (an optimized table): data for commit N lives in the
+# sibling dir `<base>.v<N>`, the manifest log lives in
 # `<base>._meta/`, and readers resolve through `resolve_dir(base)` — the flat
 # `base` dir itself before the first commit (optimize_table's input table).
 # Rename-free end to end: stage into the final versioned dir, PUT one

@@ -135,10 +135,10 @@ class StateStore:
     #6): snapshot data is written DIRECTLY into its final ``v_<version>``
     dir — invisible until referenced — and the commit point is one
     immutable self-checksummed manifest PUT (state/manifest.py), the
-    same discipline the BM25/IVF indexes and the streaming accumulations
-    use. Snapshot commits are rename-free, but kept part-files and the
-    change log are hardlinked, so the store needs a POSIX filesystem
-    with hardlinks; on object storage use Delta."""
+    same discipline optimized table layouts use. Snapshot commits are
+    rename-free, but kept part-files and the change log are hardlinked,
+    so the store needs a POSIX filesystem with hardlinks; on object
+    storage use Delta."""
 
     def __init__(
         self,

@@ -56,92 +56,3 @@ def test_seed_determinism(spark, corpus, queries):
     a = similarity.ivf_topk(corpus, queries, k=3, n_cells=4, n_probe=2)
     b = similarity.ivf_topk(corpus, queries, k=3, n_cells=4, n_probe=2)
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-
-
-def test_persisted_index_matches_inline(spark, corpus, queries, tmp_path):
-    """Build/query separation: the persisted index must answer identically
-    to the inline operator, and the layout must be cell-partitioned."""
-    import os
-
-    path = str(tmp_path / "ivf")
-    similarity.write_ivf_index(corpus, path, n_cells=4)
-    from_index = similarity.ivf_topk_from_index(
-        spark, path, queries, k=5, n_probe=2
-    )
-    inline = similarity.ivf_topk(corpus, queries, k=5, n_cells=4, n_probe=2)
-    assert sorted(map(tuple, from_index.collect())) == sorted(
-        map(tuple, inline.collect())
-    )
-    live = similarity._ivf_live(path)[1][0]
-    cells = [d for d in os.listdir(live) if d.startswith("cell=")]
-    assert len(cells) == 4  # physical partition-per-cell layout
-
-
-def test_ivf_append_matches_fixed_quantizer_assignment(spark, corpus, tmp_path):
-    """r9 incremental maintenance: appending new vectors against the
-    persisted (fixed) quantizer probes bit-identically to assigning the
-    whole union against those same centroids. r10 verdict #5: the
-    increment lands in its OWN manifest-committed dir (``cells-i1``,
-    cell-partitioned) — the base dir's files are untouched, so a crashed
-    append can never corrupt committed data."""
-    import os
-
-    from ideafast_etl_spark.operators.clustering import kmeans_assign_to
-    from ideafast_etl_spark.operators.similarity import (
-        _ivf_live,
-        _ivf_probes,
-        _ivf_rerank,
-        append_ivf_index,
-        ivf_topk_from_index,
-        write_ivf_index,
-    )
-
-    old = corpus.filter(F.col("vec_id") < 90)
-    new = corpus.filter(F.col("vec_id") >= 90)
-    idx = str(tmp_path / "ivf")
-    write_ivf_index(old, idx, n_cells=4)
-    # r11: the build itself is a manifest-committed generation
-    base_files = {
-        os.path.join(r, f)
-        for r, _d, fs in os.walk(f"{idx}/cells-g1")
-        for f in fs
-    }
-    append_ivf_index(spark, idx, new)
-    assert base_files == {
-        os.path.join(r, f)
-        for r, _d, fs in os.walk(f"{idx}/cells-g1")
-        for f in fs
-    }  # base dir untouched
-    cid, live, _cent = _ivf_live(idx)
-    assert cid == 2
-    assert [os.path.basename(p) for p in live] == ["cells-g1", "cells-i2"]
-    assert any(
-        d.startswith("cell=") for d in os.listdir(f"{idx}/cells-i2")
-    )  # increment keeps the partition-per-cell layout
-
-    q = corpus.filter(F.col("vec_id") % 30 == 3)
-    got = sorted(
-        map(tuple, ivf_topk_from_index(spark, idx, q, k=5, n_probe=2).collect())
-    )
-
-    # the parity twin: the SAME fixed centroids, every vector assigned
-    # against them via the engine's own assignment arithmetic
-    cent = spark.read.parquet(_ivf_live(idx)[2])
-    assign = kmeans_assign_to(
-        corpus, cent.select(F.col("cell").alias("cid"), "pos", "icval")
-    )
-    assigned = corpus.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").cast("array<double>").alias("vec"),
-    ).join(
-        assign.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("cluster_id").cast("int").alias("cell"),
-        ),
-        "neighbor_id",
-    )
-    probes = _ivf_probes(q, cent, 2, "vec_id", "embedding")
-    want = sorted(
-        map(tuple, _ivf_rerank(probes, assigned, q, 5, "vec_id", "embedding").collect())
-    )
-    assert got == want

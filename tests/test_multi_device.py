@@ -65,7 +65,7 @@ def test_two_device_types_share_state_without_interference(spark, tmp_path):
     assert state.filter(F.col("device_type") == "DRM").count() == 20
 
     # BTF resolution only touches BTF rows; DRM's resolved values intact
-    # (BTF rows need the DRM-specific uid rung? — needing_serial is
+    # (BTF rows need the DRM-specific uid rung? — needs_serial is
     # DRM-gated, so BTF rows stay at rung 0: exactly the reference's
     # per-type parameterisation)
     drm_resolved = state.filter(

@@ -140,17 +140,6 @@ def _docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string, lang string")
 
 
-def _bm25_index(spark, tmp_path):
-    from ideafast_etl_spark.operators.retrieval import (
-        bm25_scores_from_index,
-        write_bm25_index,
-    )
-
-    path = str(tmp_path / f"bm25_{len(list(tmp_path.iterdir()))}")
-    write_bm25_index(_docs(spark), path)
-    return [bm25_scores_from_index(spark, path, ["w10", "w30", "other"])]
-
-
 def _edges(spark):
     return spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (3, 4), (5, 3), (4, 6)], "src long, dst long"
@@ -158,41 +147,40 @@ def _edges(spark):
 
 
 # every operator whose caches and checkpoints go through reuse/materialize,
-# one tiny call each: (spark, tmp_path) -> the DataFrames it returns
+# one tiny call each: spark -> the DataFrames it returns
 _CONVERTED = {
-    "pagerank": lambda spark, _: [pagerank(_edges(spark), iters=3)],
-    "kmeans_fit": lambda spark, _: list(
+    "pagerank": lambda spark: [pagerank(_edges(spark), iters=3)],
+    "kmeans_fit": lambda spark: list(
         clustering.kmeans_fit(_vectors(spark, 24, 4), k=3, iters=2)
     ),
-    "kmeans_assign_hierarchical": lambda spark, _: [
+    "kmeans_assign_hierarchical": lambda spark: [
         clustering.kmeans_assign_hierarchical(
             _vectors(spark, 70, 4), iters=1, target_cluster_size=1
         )
     ],
-    "pq_train": lambda spark, _: [
+    "pq_train": lambda spark: [
         pq_train(_vectors(spark, 24, 4), m=2, k=3, iters=2)
     ],
-    "ngram_jaccard_pairs": lambda spark, _: [dedup.ngram_jaccard_pairs(_docs(spark))],
-    "ngram_jaccard_pairs_hot": lambda spark, _: [
+    "ngram_jaccard_pairs": lambda spark: [dedup.ngram_jaccard_pairs(_docs(spark))],
+    "ngram_jaccard_pairs_hot": lambda spark: [
         dedup.ngram_jaccard_pairs(_docs(spark), hot_doc_freq=2)
     ],
-    "near_dup_clusters": lambda spark, _: [
+    "near_dup_clusters": lambda spark: [
         dedup.near_dup_clusters(_docs(spark), threshold=0.6)
     ],
-    "bm25_index": _bm25_index,
 }
 
 
 @pytest.mark.filterwarnings("ignore:ngram_jaccard_pairs. hot-shingle cap")
 @pytest.mark.parametrize("name", sorted(_CONVERTED))
-def test_converted_operators_return_production_rows_under_audit(spark, tmp_path, name):
+def test_converted_operators_return_production_rows_under_audit(spark, name):
     """A plan audit builds the operator's real lineage instead of its
     caches and checkpoints; executed, that lineage must return the rows
     production returns (the ``test_classifier`` contract)."""
 
     def rows():
         return [
-            sorted(map(tuple, df.collect())) for df in _CONVERTED[name](spark, tmp_path)
+            sorted(map(tuple, df.collect())) for df in _CONVERTED[name](spark)
         ]
 
     production = rows()

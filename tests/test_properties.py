@@ -47,25 +47,6 @@ def test_day_bucket_invariants(sp, ts, cutoff):
 WORDS = st.lists(st.text(alphabet="abcdef", min_size=1, max_size=4), min_size=0, max_size=12)
 
 
-@given(words_a=WORDS, words_b=WORDS)
-@settings(max_examples=10, deadline=None)
-def test_jaccard_bounds_and_identity(sp, words_a, words_b):
-    """0 ≤ J ≤ 1; J(x,x)=1 for shingleable docs; symmetric."""
-    text_a, text_b = " ".join(words_a), " ".join(words_b)
-    df = sp.createDataFrame([(1, text_a), (2, text_b)], "doc_id long, text string")
-    sh = dedup.with_shingles(df)
-    rows = {r["doc_id"]: r["shingles"] for r in sh.collect()}
-    from pyspark.sql import functions as F
-
-    pair = sp.createDataFrame([(rows[1], rows[2])], "a array<string>, b array<string>")
-    j = pair.select(dedup.jaccard(F.col("a"), F.col("b")).alias("j")).first()["j"]
-    j_rev = pair.select(dedup.jaccard(F.col("b"), F.col("a")).alias("j")).first()["j"]
-    assert 0.0 <= j <= 1.0
-    assert j == j_rev
-    if rows[1] and rows[1] == rows[2]:
-        assert j == 1.0
-
-
 @given(words=WORDS)
 @settings(max_examples=10, deadline=None)
 def test_shingle_rows_equals_array_shingles(sp, words):

@@ -6,9 +6,7 @@ read as empty, never migrated, never deleted. One test per removed layout:
 
 - a state store with a ``_CURRENT`` pointer file (before manifests);
 - a state store whose manifest records no schema;
-- a versioned-dir ``base`` that is a symlink (before manifests);
-- a streaming accumulation holding a rename-committed ``compact-<id>``;
-- an IVF index with flat ``cells``/``centroids`` dirs (before manifests).
+- a versioned-dir ``base`` that is a symlink (before manifests).
 """
 
 import os
@@ -16,12 +14,6 @@ import os
 import pytest
 
 from ideafast_etl_spark.operators.layout import optimize_table
-from ideafast_etl_spark.operators.similarity import (
-    append_ivf_index,
-    compact_ivf_index,
-    ivf_topk_from_index,
-    write_ivf_index,
-)
 from ideafast_etl_spark.state import StateStore
 from ideafast_etl_spark.state.manifest import (
     commit_dir,
@@ -29,13 +21,6 @@ from ideafast_etl_spark.state.manifest import (
     put_manifest,
     resolve_dir,
 )
-from ideafast_etl_spark.streaming.accum import (
-    compact_accumulation,
-    guard_fresh_checkpoint,
-    live_paths,
-    read_accumulation,
-)
-from ideafast_etl_spark.streaming.monitoring import latest_report_dir
 
 
 def _tree(root) -> dict[str, object]:
@@ -110,45 +95,9 @@ def test_symlinked_versioned_dir_base_is_refused(spark, tmp_path):
         lambda: resolve_dir(base),
         lambda: next_dir_version(base),
         lambda: commit_dir(base, 2),
-        lambda: latest_report_dir(base),
         lambda: optimize_table(spark, base, min_files_to_compact=1),
     ):
         with pytest.raises(ValueError, match="symlink"):
             op()
     assert _tree(tmp_path) == before
 
-
-def test_rename_committed_compaction_is_refused(spark, tmp_path):
-    root, ckpt = str(tmp_path / "acc"), str(tmp_path / "ck")
-    _file(f"{root}/compact-1/part-0.parquet")
-    _file(f"{root}/batch-2/part-0.parquet")
-    _file(f"{ckpt}/commits/2", b"{}")
-    before = _tree(tmp_path)
-    for op in (
-        lambda: live_paths(root),
-        lambda: read_accumulation(spark, root),
-        lambda: compact_accumulation(spark, root, ckpt),
-        lambda: guard_fresh_checkpoint(str(tmp_path / "fresh"), root),
-    ):
-        with pytest.raises(ValueError, match="compact-1"):
-            op()
-    assert _tree(tmp_path) == before
-
-
-def test_flat_ivf_index_is_refused(spark, tmp_path):
-    root = str(tmp_path / "ivf")
-    _file(f"{root}/cells/cell=0/part-0.parquet")
-    _file(f"{root}/centroids/part-0.parquet")
-    before = _tree(tmp_path)
-    vecs = spark.createDataFrame(
-        [(1, [1.0, 0.0])], "vec_id long, embedding array<double>"
-    )
-    for op in (
-        lambda: ivf_topk_from_index(spark, root, vecs),
-        lambda: append_ivf_index(spark, root, vecs),
-        lambda: compact_ivf_index(spark, root),
-        lambda: write_ivf_index(vecs, root),
-    ):
-        with pytest.raises(ValueError, match="flat 'cells'"):
-            op()
-    assert _tree(tmp_path) == before

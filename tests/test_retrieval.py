@@ -273,114 +273,6 @@ def test_mmr_loop_strategy_parity_with_planted_ties(spark):
 # --- persisted BM25 index ----------------------------------------------------
 
 
-def test_bm25_index_parity_and_pruning(spark, tmp_path):
-    from ideafast_etl_spark.operators.retrieval import (
-        bm25_scores,
-        bm25_scores_from_index,
-        write_bm25_index,
-    )
-
-    rows = [
-        (i, ("spark query " * (i % 3 + 1)) + "filler words here now x" + str(i))
-        for i in range(80)
-    ]
-    docs = _docs(spark, rows)
-    idx = str(tmp_path / "bm25")
-    write_bm25_index(docs, idx)
-
-    terms = ["spark", "query", "filler"]
-    direct = sorted(map(tuple, bm25_scores(docs, terms).collect()))
-    from_idx = sorted(
-        map(tuple, bm25_scores_from_index(spark, idx, terms).collect())
-    )
-    assert direct == from_idx  # float-identical by shared scoring tail
-
-    # the probe reads only the query terms' bucket partitions
-    probe = bm25_scores_from_index(spark, idx, ["spark"])
-    import io
-    from contextlib import redirect_stdout
-
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        probe.explain("formatted")
-    plan = buf.getvalue()
-    assert "PartitionFilters" in plan
-    assert probe.count() == 80  # every doc contains 'spark'
-
-
-def test_bm25_index_unknown_term_scores_nothing(spark, tmp_path):
-    from ideafast_etl_spark.operators.retrieval import (
-        bm25_scores_from_index,
-        write_bm25_index,
-    )
-
-    docs = _docs(spark, [(1, "alpha beta"), (2, "beta gamma")])
-    idx = str(tmp_path / "bm25b")
-    write_bm25_index(docs, idx)
-    out = bm25_scores_from_index(spark, idx, ["absent"]).collect()
-    assert out == []
-
-
-def test_bm25_incremental_append_equals_full_rebuild(spark, tmp_path):
-    """r9 incremental maintenance: building on corpus A then appending
-    corpus B must probe bit-identically to a full rebuild over A∪B (all
-    index counts are integers and the additive dfreq/stats deltas sum
-    exactly), and both must equal the inline scorer."""
-    from ideafast_etl_spark.operators.retrieval import (
-        append_bm25_index,
-        bm25_scores,
-        bm25_scores_from_index,
-        write_bm25_index,
-    )
-
-    rows_a = [
-        (i, ("spark query " * (i % 3 + 1)) + f"alpha beta w{i}")
-        for i in range(50)
-    ]
-    rows_b = [
-        (100 + i, ("query engine " * (i % 2 + 1)) + f"beta gamma w{i}")
-        for i in range(30)
-    ]
-    docs_a, docs_b = _docs(spark, rows_a), _docs(spark, rows_b)
-    inc = str(tmp_path / "inc")
-    full = str(tmp_path / "full")
-    write_bm25_index(docs_a, inc)
-    append_bm25_index(docs_b, inc)
-    write_bm25_index(docs_a.unionByName(docs_b), full)
-
-    terms = ["spark", "query", "beta", "gamma"]
-    got_inc = sorted(
-        map(tuple, bm25_scores_from_index(spark, inc, terms).collect())
-    )
-    got_full = sorted(
-        map(tuple, bm25_scores_from_index(spark, full, terms).collect())
-    )
-    inline = sorted(
-        map(
-            tuple,
-            bm25_scores(docs_a.unionByName(docs_b), terms).collect(),
-        )
-    )
-    assert got_inc == got_full == inline
-
-    # a second increment keeps the invariant (multi-delta stats sum)
-    rows_c = [(200 + i, f"gamma delta spark w{i}") for i in range(20)]
-    docs_c = _docs(spark, rows_c)
-    append_bm25_index(docs_c, inc)
-    all_docs = docs_a.unionByName(docs_b).unionByName(docs_c)
-    write_bm25_index(all_docs, full)
-    got_inc = sorted(
-        map(tuple, bm25_scores_from_index(spark, inc, terms).collect())
-    )
-    got_full = sorted(
-        map(tuple, bm25_scores_from_index(spark, full, terms).collect())
-    )
-    assert got_inc == got_full
-    assert got_inc == sorted(
-        map(tuple, bm25_scores(all_docs, terms).collect())
-    )
-
-
 def test_mmr_rejects_unknown_loop(spark):
     """An unrecognized loop value must error, not silently fall through
     to the distributed branch (r9 ADVICE)."""

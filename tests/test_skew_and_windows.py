@@ -1,7 +1,5 @@
-"""Salted skew operators (result parity with naive plans) and streaming
-windowed aggregation (batch-equivalence of the cut-off semantics)."""
-
-from datetime import datetime
+"""Salted skew operators (result parity with naive plans) and sketch
+accuracy (approx_percentile, KMV)."""
 
 from pyspark.sql import functions as F
 
@@ -38,121 +36,6 @@ def test_salted_skew_join_matches_naive(spark):
     naive = facts.join(dim, "k").groupBy("k", "label").count()
     salted = salted_skew_join(facts, dim, "k").groupBy("k", "label").count()
     assert sorted(map(tuple, naive.collect())) == sorted(map(tuple, salted.collect()))
-
-
-def test_streaming_window_matches_batch_bucketing(spark, tmp_path):
-    """The streaming tumbling window with cut-off startTime assigns records to
-    the same day-buckets as the batch G1 operator."""
-    from ideafast_etl_spark.operators.grouping import assign_group_id
-    from ideafast_etl_spark.streaming.windows import windowed_group_counts
-
-    rows = [
-        ("NR1", "A", datetime(2021, 12, 13, 11, 59, 59)),  # before noon cut-off
-        ("NR1", "A", datetime(2021, 12, 13, 12, 0, 0)),    # at cut-off
-        ("NR1", "A", datetime(2021, 12, 13, 12, 0, 1)),
-        ("NR2", "B", datetime(2021, 12, 14, 3, 0, 0)),
-    ]
-    schema = "device_id string, patient_id string, start timestamp"
-    src = tmp_path / "src"
-    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(str(src / "b1"))
-
-    stream = spark.readStream.schema(schema).parquet(str(src) + "/*/")
-    q = (
-        windowed_group_counts(stream, cut_off="12:00:00")
-        .writeStream.format("memory")
-        .queryName("win_out")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["device_id"], r["patient_id"], r["window_start"]): r["n_records"]
-        for r in spark.sql("select * from win_out").collect()
-    }
-    # batch G1 for comparison: bucket_start is the window's day (midnight);
-    # streaming window_start is that day at the cut-off (12:00)
-    batch = assign_group_id(
-        spark.createDataFrame(rows, schema), cut_off="12:00:00", ts_col="start"
-    ).collect()
-    batch_counts: dict = {}
-    for r in batch:
-        key = (r["device_id"], r["patient_id"], r["bucket_start"].replace(hour=12))
-        batch_counts[key] = batch_counts.get(key, 0) + 1
-    assert got == batch_counts
-    # the 11:59:59 record landed in the PREVIOUS day's window
-    assert got[("NR1", "A", datetime(2021, 12, 12, 12, 0, 0))] == 1
-    assert got[("NR1", "A", datetime(2021, 12, 13, 12, 0, 0))] == 2
-
-
-def test_session_window_stream_matches_batch_and_lag_formulation(spark, tmp_path):
-    """F.session_window on a stream produces the same sessions as (a) the
-    same operator run in batch and (b) the lag()+cumsum gap formulation the
-    batch `sessionization` query uses."""
-    from pyspark.sql import Window, functions as F
-    from ideafast_etl_spark.streaming.windows import session_window_stats
-
-    rows = [
-        (1, datetime(2021, 5, 1, 10, 0, 0)),
-        (1, datetime(2021, 5, 1, 10, 20, 0)),   # within 30 min → same session
-        (1, datetime(2021, 5, 1, 11, 30, 0)),   # 70 min gap → new session
-        (2, datetime(2021, 5, 1, 10, 0, 0)),
-        (2, datetime(2021, 5, 1, 10, 29, 59)),  # 29:59 gap → same session
-        (2, datetime(2021, 5, 1, 11, 0, 0)),    # 30:01 after first; 30:01? no: 31:01 → new
-    ]
-    schema = "user_id long, ts timestamp"
-    src = tmp_path / "src"
-    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(str(src / "b1"))
-
-    stream = spark.readStream.schema(schema).parquet(str(src) + "/*/")
-    q = (
-        session_window_stats(stream, gap="30 minutes")
-        .writeStream.format("memory")
-        .queryName("sess_out")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    streamed = {
-        (r["user_id"], r["session_start"], r["session_end"]): r["n_events"]
-        for r in spark.sql("select * from sess_out").collect()
-    }
-
-    batch_df = spark.createDataFrame(rows, schema)
-    batch = {
-        (r["user_id"], r["session_start"], r["session_end"]): r["n_events"]
-        for r in session_window_stats(batch_df, gap="30 minutes").collect()
-    }
-    assert streamed == batch
-
-    # lag()+cumsum formulation: new session when gap > 30 min
-    w = Window.partitionBy("user_id").orderBy("ts")
-    lagged = batch_df.withColumn("prev", F.lag("ts").over(w)).withColumn(
-        "new_sess",
-        (
-            F.col("prev").isNull()
-            | ((F.unix_timestamp("ts") - F.unix_timestamp("prev")) > 1800)
-        ).cast("int"),
-    )
-    sess = lagged.withColumn(
-        "sess_no", F.sum("new_sess").over(w)
-    ).groupBy("user_id", "sess_no").agg(
-        F.min("ts").alias("session_start"), F.count(F.lit(1)).alias("n_events")
-    )
-    lag_counts = {
-        (r["user_id"], r["session_start"]): r["n_events"] for r in sess.collect()
-    }
-    assert {
-        (u, s): n for (u, s, _e), n in streamed.items()
-    } == lag_counts
-    # structure sanity: user 1 → sessions of 2 and 1; user 2 → 2 and 1
-    per_user = sorted(
-        (u, n) for (u, _s, _e), n in streamed.items()
-    )
-    assert per_user == [(1, 1), (1, 2), (2, 1), (2, 2)]
 
 
 def test_approx_percentile_within_rank_error_bound(spark):

@@ -1,9 +1,6 @@
-"""K7 quarantined delete, S6/J6 config source, S5 CSV dim, stateful streaming
-dedup via applyInPandasWithState."""
+"""K7 quarantined delete, S6/J6 config source, S5 CSV dim."""
 
 import pytest
-
-from pyspark.sql import functions as F
 
 from ideafast_etl_spark.sources.config import apply_dmp_dataset, load_job_config, map_lookup
 from ideafast_etl_spark.sources.files import read_csv_dim
@@ -64,28 +61,3 @@ def test_read_csv_dim(spark, tmp_path):
         "uid-1": "SER-001",
         "uid-2": "SER-002",
     }
-
-
-def test_streaming_dedup_with_ttl(spark, tmp_path):
-    from ideafast_etl_spark.streaming.stateful import dedup_with_ttl
-
-    src = tmp_path / "src"
-    src.mkdir()
-    spark.createDataFrame(
-        [("h1",), ("h1",), ("h2",)], ["hash"]
-    ).coalesce(1).write.parquet(str(src / "b1"))
-
-    stream = spark.readStream.schema("hash string").parquet(str(src) + "/*/")
-    out = dedup_with_ttl(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("dedup_ttl_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = {r["hash"]: r["n_suppressed"]
-            for r in spark.sql("select * from dedup_ttl_out").collect()}
-    assert rows == {"h1": 1, "h2": 0}  # h1 emitted once, one dupe suppressed

@@ -108,58 +108,6 @@ def test_streaming_rerun_with_checkpoint_skips_consumed(spark, tmp_path, feed_di
     assert store.read().count() == n1
 
 
-def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
-    """Two file streams join on key within an event-time range; the result
-    equals the same join run in batch, and late-beyond-lag rows drop."""
-    from datetime import datetime
-    from ideafast_etl_spark.streaming.joins import stream_stream_interval_join
-
-    base = datetime(2021, 3, 1, 10, 0, 0)
-
-    def at(minutes):
-        return datetime(2021, 3, 1, 10, 0, 0).replace(minute=minutes)
-
-    imps = [(1, at(0), "imp-a"), (2, at(5), "imp-b"), (3, at(10), "imp-c")]
-    clicks = [
-        (1, at(10), "clk-a"),   # 10 min after imp → within 30-min lag
-        (2, at(50), "clk-b"),   # 45 min after imp → OUTSIDE lag, dropped
-        (3, at(9), "clk-early"),  # before the impression → dropped
-    ]
-    li_schema = "uid long, lts timestamp, imp string"
-    cl_schema = "uid long, rts timestamp, clk string"
-    (tmp_path / "imp").mkdir(); (tmp_path / "clk").mkdir()
-    spark.createDataFrame(imps, li_schema).coalesce(1).write.parquet(
-        str(tmp_path / "imp" / "b1"))
-    spark.createDataFrame(clicks, cl_schema).coalesce(1).write.parquet(
-        str(tmp_path / "clk" / "b1"))
-
-    ls = spark.readStream.schema(li_schema).parquet(str(tmp_path / "imp") + "/*/")
-    rs = spark.readStream.schema(cl_schema).parquet(str(tmp_path / "clk") + "/*/")
-    joined = stream_stream_interval_join(ls, rs, "uid")
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("ssj_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["uid"], r["imp"], r["clk"])
-        for r in spark.sql("select * from ssj_out").collect()
-    }
-    assert got == {(1, "imp-a", "clk-a")}
-
-    # batch twin over the same frames agrees
-    batch = stream_stream_interval_join(
-        spark.createDataFrame(imps, li_schema),
-        spark.createDataFrame(clicks, cl_schema),
-        "uid",
-    )
-    assert {(r["uid"], r["imp"], r["clk"]) for r in batch.collect()} == got
-
-
 def test_streaming_dedup_within_watermark_differing_event_times(spark, tmp_path):
     from datetime import datetime
 
